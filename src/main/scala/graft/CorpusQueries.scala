@@ -1451,8 +1451,8 @@ object CorpusQueries {
       val imiBookR = await(fImiBookR)
       // floors pinned at measured-minus-noise (round-15 tightening;
       // ivf_hier + ivf_pq + ivf_hier_pq added round 16, both PQ tiers
-      // switched to MEAN-REFERENCED RESIDUAL coding round 17): `runMain
-      // graft.Probe <dir> recall` measured minima across
+      // switched to MEAN-REFERENCED RESIDUAL coding round 17): recall@5
+      // against the exact brute ranking, measured minima across
       // sf0.001/0.01/0.1 — kmeans 40, seed 44, sq8 44, pq 44 (residual
       // == raw when the seeded gate binds; the residual win shows on
       // clustered data — PqSpec's anisotropic A/B — and in the
@@ -2219,7 +2219,7 @@ object CorpusQueries {
     // sim_pca_recall. nProbe = nList makes the cell gate complete, so
     // the flag pins the ADC + pool quality itself (the gated variant is
     // the board's ivf_pq row). Floor is measured-minus-noise:
-    // `runMain graft.Probe <dir> recall` (pq_adc_full row) minima
+    // recall@5 against the exact brute ranking (full-gate ADC) minima
     // 86.5/94/100 across sf0.1/0.01/0.001 at k=5, margin 2% of corpus
     // under round-17 mean-referenced residual coding (raw measured
     // 87.5/98/100 — a wash on this isotropic fixture; the residual win

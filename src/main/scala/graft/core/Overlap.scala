@@ -41,12 +41,15 @@ object Overlap {
     scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
 
   /** Run two independent actions on the pool WHILE `main` runs on the
-    * calling thread; returns (a, b) once all three are done. The
-    * refresh/upsert tier's shared shape: the two churn counters and the
-    * staged landing all consume the same persisted frames, so the three
-    * actions cost max() overlapped instead of sum() sequential (guide
-    * §2.6). Only for actions deterministic in isolation — counts of
-    * persisted frames and staged writes to disjoint paths qualify.
+    * calling thread; returns (a, b) once all three are done, so the
+    * three actions cost max() overlapped instead of sum() sequential
+    * (guide §2.6). Only for actions deterministic in isolation — counts
+    * of persisted frames and staged writes to disjoint paths qualify.
+    *
+    * Callers: [[graft.ops.FuzzyJoinIndex]] and
+    * [[graft.ops.IncrementalLabels]], whose counted frames are not the
+    * rows they land. Tiers that count the rows they land read the
+    * counts off the write instead ([[graft.lake.ChurnSplit.land]]).
     */
   def besides[A, B](a: => A, b: => B)(main: => Unit): (A, B) = {
     val fa = par(a); val fb = par(b)

@@ -1,6 +1,9 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The churn-split seam shared by the fingerprinted index tiers
@@ -29,13 +32,37 @@ import org.apache.spark.sql.functions._
   * (file, len) physical identity joined against a manifest, not a
   * record fingerprint.
   *
-  * The caller lands the recombined result through
-  * [[Staged.land]]/[[Staged.landMany]] — split decides WHAT to rewrite,
-  * the staged swap guarantees the rewrite is never torn.
+  * [[land]] recombines the split and lands it through [[Staged.land]]
+  * ([[graft.ops.PostingsIndex]], whose two tables swap together through
+  * [[Staged.landMany]], recombines with [[observedUnion]]) — split
+  * decides WHAT to rewrite, the staged swap guarantees the rewrite is
+  * never torn.
+  *
+  * COUNTING CONTRACT: the (kept, signed) churn counters are metrics of
+  * the landing write itself — an `Observation` on the kept and fresh
+  * branches, the way a Delta MERGE reports its row counts. No frame is
+  * persisted and no extra count job runs for them. Observed metrics
+  * reach the driver asynchronously (through the listener bus), so they
+  * are read after the write returns with a bounded wait of
+  * [[MetricsWait]]; a missed deadline fails naming the path, and a
+  * failed write raises its own error without ever waiting on them.
   */
 object ChurnSplit {
 
   final case class Split(kept: DataFrame, fresh: DataFrame, others: DataFrame)
+
+  /** What the landing keeps besides the kept and fresh rows: a
+    * full-corpus `Refresh` drops `others` (deletion semantics), a delta
+    * `Upsert` carries them.
+    */
+  sealed trait Mode
+  case object Refresh extends Mode
+  case object Upsert extends Mode
+
+  /** Bound on the wait for a landing's observed counters after the
+    * write has returned.
+    */
+  val MetricsWait: FiniteDuration = 60.seconds
 
   /** `old`: the persisted index rows, carrying `keyCol` and `fpCol`.
     * `incoming`: the source records, with `idCol` and a fingerprint
@@ -54,5 +81,37 @@ object ChurnSplit {
       incoming(idCol) === col("__cs_id") && fp === col("__cs_fp"), "left_anti")
     val others = old.join(curFp.select(col(keyCol)), Seq(keyCol), "left_anti")
     Split(kept, fresh, others)
+  }
+
+  /** Land `split` at `path` with `freshRows` (the tier's recompute of
+    * `split.fresh`) in one staged write: kept ∪ fresh, after `others`
+    * in [[Upsert]] mode. Returns (kept, signed): `n` aggregated over the
+    * kept and fresh branches of that write — row counts by default.
+    */
+  def land(spark: SparkSession, path: String, split: Split, freshRows: DataFrame,
+           mode: Mode, n: Column = count(lit(1))): (Long, Long) = {
+    val (rows, counts) = observedUnion(path, split.others, split.kept, freshRows, mode, n)
+    Staged.land(spark, path, rows)
+    counts()
+  }
+
+  /** The landing frame of [[land]] with its kept and fresh branches
+    * observed, and the reader of the two counters — to be called only
+    * after the write of the frame to `path` has returned.
+    */
+  private[graft] def observedUnion(path: String, others: DataFrame, kept: DataFrame,
+                                   fresh: DataFrame, mode: Mode,
+                                   n: Column): (DataFrame, () => (Long, Long)) = {
+    val keptObs = Observation(); val freshObs = Observation()
+    val rows = kept.observe(keptObs, n.as("n")).unionByName(fresh.observe(freshObs, n.as("n")))
+    def read(o: Observation): Long =
+      try Await.result(o.future, MetricsWait).getLong(0)
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+          throw new IllegalStateException(s"churn counters of the landing at $path " +
+            s"did not arrive within $MetricsWait of the write returning")
+      }
+    (mode match { case Upsert => others.unionByName(rows); case Refresh => rows },
+      () => (read(keptObs), read(freshObs)))
   }
 }

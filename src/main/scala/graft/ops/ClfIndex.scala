@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.lake.ChurnSplit
+
 /** Persisted trained-quality-classifier scores — the
   * [[QualityClassifier]] as a churn-maintained lake artifact (the
   * [[PqIndex]]/[[TextIndex]] posture applied to the CCNet-style gate):
@@ -197,21 +199,7 @@ object ClfIndex {
     if ((n1, x1, s1) != ((n0, x0, s0)))
       return (0L, buildWith(labeled, corpus, idCol, textCol, labelPred, path,
         nBuckets, (n1, x1, s1)))
-    val model = loadModel(spark, path)
-    val old = spark.read.parquet(scoresPath(path))
-    val s = graft.lake.ChurnSplit.split(old, "doc", "fp",
-      corpus, idCol, md5(corpus(textCol)))
-    val kept = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshRows = scoreRows(s.fresh, idCol, textCol, model, nBuckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptN, signedN) = graft.core.Overlap.besides(
-      kept.count(), freshRows.count()) {
-      graft.lake.Staged.land(spark, scoresPath(path), kept.unionByName(freshRows))
-    }
-    kept.unpersist(); freshRows.unpersist()
-    (keptN, signedN)
+    churn(corpus, idCol, textCol, path, nBuckets, ChurnSplit.Refresh)
   }
 
   /** Delta upsert under the PINNED model — the drop/streaming form:
@@ -225,22 +213,21 @@ object ClfIndex {
     val spark = batch.sparkSession
     requireBuilt(spark, path, "upsert")
     val (nBuckets, _, _, _) = loadMeta(spark, path)
+    churn(batch, idCol, textCol, path, nBuckets, ChurnSplit.Upsert)
+  }
+
+  /** The pinned-model churn seam of [[refresh]] and [[upsert]]:
+    * unchanged docs' score rows carry verbatim, only new/changed docs
+    * re-score.
+    */
+  private def churn(docs: DataFrame, idCol: String, textCol: String, path: String,
+                    nBuckets: Int, mode: ChurnSplit.Mode): (Long, Long) = {
+    val spark = docs.sparkSession
     val model = loadModel(spark, path)
-    val old = spark.read.parquet(scoresPath(path))
-    val s = graft.lake.ChurnSplit.split(old, "doc", "fp",
-      batch, idCol, md5(batch(textCol)))
-    val keptBatch = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshRows = scoreRows(s.fresh, idCol, textCol, model, nBuckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptN, signedN) = graft.core.Overlap.besides(
-      keptBatch.count(), freshRows.count()) {
-      graft.lake.Staged.land(spark, scoresPath(path),
-        s.others.unionByName(keptBatch).unionByName(freshRows))
-    }
-    keptBatch.unpersist(); freshRows.unpersist()
-    (keptN, signedN)
+    val s = ChurnSplit.split(spark.read.parquet(scoresPath(path)), "doc", "fp",
+      docs, idCol, md5(docs(textCol)))
+    ChurnSplit.land(spark, scoresPath(path), s,
+      scoreRows(s.fresh, idCol, textCol, model, nBuckets), mode)
   }
 
   /** The landed per-doc score table. */

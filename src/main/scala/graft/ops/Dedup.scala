@@ -133,18 +133,10 @@ object Dedup {
     *  - bigger graphs fall back to distributed min-label propagation
     *    (`propagateComponents`), whose per-round cost is what a
     *    billion-edge graph actually needs.
-    *
-    * `phase` is an instrumentation hook (label, seconds) — no-op by
-    * default; Probe uses it so its timings come from this implementation
-    * rather than a drifting clone.
     */
   def connectedComponents(edges: DataFrame, srcCol: String = "a", dstCol: String = "b",
                           maxIter: Int = 32, driverMaxEdges: Long = 1L << 20,
-                          phase: (String, Double) => Unit = (_, _) => (),
                           driverMaxBytes: Long = 64L << 20): DataFrame = {
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f; phase(label, (System.nanoTime() - t0) / 1e9); r
-    }
     Seq(srcCol, dstCol).foreach { c =>
       require(Set[org.apache.spark.sql.types.DataType](
           org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.IntegerType,
@@ -157,15 +149,15 @@ object Dedup {
     }
     val e = edges.select(col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nEdges = timed("edges materialize")(e.count())
+    val nEdges = e.count()
     // byte gate from the populated cache's measured stats, mirroring
     // Versions.resolveChains: the collect must fit driver heap by BYTES,
     // a row count alone can't promise that
     val nBytes = e.queryExecution.optimizedPlan.stats.sizeInBytes
     val out =
       if (nEdges <= driverMaxEdges && nBytes <= driverMaxBytes)
-        timed("driver union-find")(driverComponents(e))
-      else propagateComponents(e, maxIter, phase)
+        driverComponents(e)
+      else propagateComponents(e, maxIter)
     e.unpersist(blocking = false)
     out
   }
@@ -204,11 +196,7 @@ object Dedup {
     * Convergence is detected by the (strictly monotone) sum of labels —
     * one cheap aggregate, no row-wise compare.
     */
-  private def propagateComponents(e: DataFrame, maxIter: Int,
-                                  phase: (String, Double) => Unit): DataFrame = {
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f; phase(label, (System.nanoTime() - t0) / 1e9); r
-    }
+  private def propagateComponents(e: DataFrame, maxIter: Int): DataFrame = {
     val spark = e.sparkSession
     val sc = spark.sparkContext
     val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
@@ -237,13 +225,11 @@ object Dedup {
       // two hops per round: same join work overall, but HALF the
       // checkpoint + convergence-collect rounds (the driver-side cost
       // that dominates on small candidate graphs)
-      timed(s"propagate round $i") {
-        val (next, nextIds) = tracked(hop(hop(labels)))
-        val nextSum = next.agg(org.apache.spark.sql.functions.sum("label")).collect().head.getLong(0)
-        moved = nextSum != sum
-        sum = nextSum
-        free(ids); labels = next; ids = nextIds
-      }
+      val (next, nextIds) = tracked(hop(hop(labels)))
+      val nextSum = next.agg(org.apache.spark.sql.functions.sum("label")).collect().head.getLong(0)
+      moved = nextSum != sum
+      sum = nextSum
+      free(ids); labels = next; ids = nextIds
       i += 1
     }
     sym.unpersist(blocking = false)

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.lake.ChurnSplit
+
 /** Persisted MinHash/LSH band index — incremental near-dup dedup.
   *
   * The recompute-per-run dedup queries ([[Dedup.minhashCandidates]])
@@ -70,7 +72,7 @@ object DedupIndex {
     val rows = bandRows(docs, idCol, textCol, bands, rowsPerBand)
       .localCheckpoint(true)
     val fN = graft.core.Overlap.par(rows.select("doc").distinct().count())
-    land(spark, path, rows)
+    graft.lake.Staged.land(spark, path, rows)
     graft.core.Overlap.await(fN)
   }
 
@@ -80,31 +82,8 @@ object DedupIndex {
     * follows churn.
     */
   def refresh(docs: DataFrame, idCol: String, textCol: String, path: String,
-              bands: Int = 4, rowsPerBand: Int = 2): (Long, Long) = {
-    val spark = docs.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (0L, build(docs, idCol, textCol, path, bands, rowsPerBand))
-    val old = spark.read.parquet(path)
-    // the shared churn seam: unchanged docs' band rows carried verbatim,
-    // only fingerprint-drifted/new docs re-signed (ChurnSplit contract)
-    val s = graft.lake.ChurnSplit.split(old, "doc", "fp",
-      docs, idCol, md5(docs(textCol)))
-    val kept = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshRows = bandRows(s.fresh, idCol, textCol, bands, rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing — all three consume the two
-    // persisted frames (guide §2.6 via Overlap.besides)
-    val (keptDocs, signedDocs) = graft.core.Overlap.besides(
-      kept.select("doc").distinct().count(),
-      freshRows.select("doc").distinct().count()) {
-      land(spark, path, kept.unionByName(freshRows))
-    }
-    kept.unpersist()
-    freshRows.unpersist()
-    (keptDocs, signedDocs)
-  }
+              bands: Int = 4, rowsPerBand: Int = 2): (Long, Long) =
+    churn(docs, idCol, textCol, path, bands, rowsPerBand, ChurnSplit.Refresh)
 
   /** Delta UPSERT — the streaming / foreachBatch form of [[refresh]]:
     * add or replace exactly the batch's documents, leaving every other
@@ -115,30 +94,27 @@ object DedupIndex {
     * Returns (carriedBatchDocs, signedBatchDocs).
     */
   def upsert(batch: DataFrame, idCol: String, textCol: String, path: String,
-             bands: Int = 4, rowsPerBand: Int = 2): (Long, Long) = {
-    val spark = batch.sparkSession
+             bands: Int = 4, rowsPerBand: Int = 2): (Long, Long) =
+    churn(batch, idCol, textCol, path, bands, rowsPerBand, ChurnSplit.Upsert)
+
+  /** The shared body of [[refresh]] and [[upsert]]: unchanged docs'
+    * band rows carried verbatim, only fingerprint-drifted/new docs
+    * re-signed (the ChurnSplit contract); `mode` decides whether rows
+    * of documents outside `docs` drop or carry.
+    */
+  private def churn(docs: DataFrame, idCol: String, textCol: String, path: String,
+                    bands: Int, rowsPerBand: Int, mode: ChurnSplit.Mode): (Long, Long) = {
+    val spark = docs.sparkSession
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (0L, build(batch, idCol, textCol, path, bands, rowsPerBand))
-    val old = spark.read.parquet(path)
-    // delta semantics over the shared seam: rows of documents OUTSIDE
-    // the batch carry untouched (`others`); re-delivered unchanged
-    // batch docs carry verbatim (`kept`); only drifted/new batch docs
-    // re-sign
-    val s = graft.lake.ChurnSplit.split(old, "doc", "fp",
-      batch, idCol, md5(batch(textCol)))
-    val keptBatch = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshRows = bandRows(s.fresh, idCol, textCol, bands, rowsPerBand)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptDocs, signedDocs) = graft.core.Overlap.besides(
-      keptBatch.select("doc").distinct().count(),
-      freshRows.select("doc").distinct().count()) {
-      land(spark, path, s.others.unionByName(keptBatch).unionByName(freshRows))
-    }
-    keptBatch.unpersist(); freshRows.unpersist()
-    (keptDocs, signedDocs)
+    if (!fs.exists(p)) return (0L, build(docs, idCol, textCol, path, bands, rowsPerBand))
+    val s = ChurnSplit.split(spark.read.parquet(path), "doc", "fp",
+      docs, idCol, md5(docs(textCol)))
+    // documents, not band rows: each doc has exactly one `band <= 0`
+    // row (the [[docFps]] invariant); `count`, not `sum`, so an empty
+    // branch reads 0 rather than null
+    ChurnSplit.land(spark, path, s, bandRows(s.fresh, idCol, textCol, bands, rowsPerBand),
+      mode, count(when(col("band") <= 0, 1)))
   }
 
   /** One (doc, fp) row per indexed document, from band rows: every
@@ -194,8 +170,4 @@ object DedupIndex {
         greatest(col("x.doc"), col("y.doc")).as("b"))
       .distinct()
   }
-
-  /** Staged-swap landing (the bloom-sidecar posture): never a torn index. */
-  private def land(spark: SparkSession, path: String, idx: DataFrame): Unit =
-    graft.lake.Staged.land(spark, path, idx)
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.lake.ChurnSplit
+
 /** Persisted IMI-PQ index — the fully factorized 10^10+-vector serving
   * tier as a lake artifact: product cells from two √nCells
   * sub-codebooks ([[IvfImi]] — O(√nCells·dim) task/driver state),
@@ -117,7 +119,18 @@ object ImiPqIndex {
     * (keptRows, signedRows).
     */
   def refresh(corpus: DataFrame, idCol: String, vecCol: String, path: String)
-      : (Long, Long) = {
+      : (Long, Long) =
+    churn(corpus, idCol, vecCol, path, ChurnSplit.Refresh)
+
+  /** Delta upsert — the batch's vectors re-encode (or carry if
+    * unchanged); out-of-batch rows untouched. Returns (carried, signed).
+    */
+  def upsert(batch: DataFrame, idCol: String, vecCol: String, path: String)
+      : (Long, Long) =
+    churn(batch, idCol, vecCol, path, ChurnSplit.Upsert)
+
+  private def churn(corpus: DataFrame, idCol: String, vecCol: String, path: String,
+                    mode: ChurnSplit.Mode): (Long, Long) = {
     val spark = corpus.sparkSession
     // independent sidecar loads overlap (guide §2.6, graft.core.Overlap)
     val fImi = graft.core.Overlap.par(loadImi(spark, path))
@@ -129,50 +142,10 @@ object ImiPqIndex {
     val rc = PqIndex.rotatedMat(corpus, vecCol, graft.core.Overlap.await(fBasis))
     val imi = graft.core.Overlap.await(fImi)
     val model = graft.core.Overlap.await(fModel)
-    val old = spark.read.parquet(listsPath(path))
-    val s = graft.lake.ChurnSplit.split(old, "cid", "vfp",
+    val s = ChurnSplit.split(spark.read.parquet(listsPath(path)), "cid", "vfp",
       rc, idCol, vecFp(rc(vecCol)))
-    val kept = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshRows = listRows(s.fresh, idCol, vecCol, imi, model)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptN, signedN) = graft.core.Overlap.besides(
-      kept.count(), freshRows.count()) {
-      graft.lake.Staged.land(spark, listsPath(path), kept.unionByName(freshRows))
-    }
-    kept.unpersist(); freshRows.unpersist()
-    (keptN, signedN)
-  }
-
-  /** Delta upsert — the batch's vectors re-encode (or carry if
-    * unchanged); out-of-batch rows untouched. Returns (carried, signed).
-    */
-  def upsert(batch: DataFrame, idCol: String, vecCol: String, path: String)
-      : (Long, Long) = {
-    val spark = batch.sparkSession
-    // overlapped loads — see refresh
-    val fImi = graft.core.Overlap.par(loadImi(spark, path))
-    val fModel = graft.core.Overlap.par(loadModel(spark, path))
-    val fBasis = graft.core.Overlap.par(PqIndex.loadBasis(spark, path))
-    val rb = PqIndex.rotatedMat(batch, vecCol, graft.core.Overlap.await(fBasis))
-    val imi = graft.core.Overlap.await(fImi)
-    val model = graft.core.Overlap.await(fModel)
-    val old = spark.read.parquet(listsPath(path))
-    val s = graft.lake.ChurnSplit.split(old, "cid", "vfp",
-      rb, idCol, vecFp(rb(vecCol)))
-    val keptBatch = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshRows = listRows(s.fresh, idCol, vecCol, imi, model)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptN, signedN) = graft.core.Overlap.besides(
-      keptBatch.count(), freshRows.count()) {
-      graft.lake.Staged.land(spark, listsPath(path),
-        s.others.unionByName(keptBatch).unionByName(freshRows))
-    }
-    keptBatch.unpersist(); freshRows.unpersist()
-    (keptN, signedN)
+    ChurnSplit.land(spark, listsPath(path), s,
+      listRows(s.fresh, idCol, vecCol, imi, model), mode)
   }
 
   /** IMI-PQ top-k served FROM the persisted index — identical result
@@ -184,7 +157,7 @@ object ImiPqIndex {
     // an OPQ index probes in its pinned rotated space — corpus AND
     // queries rotate, so side LUTs, ADC tables and the exact re-rank
     // all score the same (orthonormally preserved) inner products
-    // overlapped loads — see refresh
+    // overlapped loads — see churn
     val fImi = graft.core.Overlap.par(loadImi(spark, path))
     val fModel = graft.core.Overlap.par(loadModel(spark, path))
     val basis = PqIndex.loadBasis(spark, path)

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.lake.Staged
+import graft.lake.{ChurnSplit, Staged}
 
 /** Persisted inverted (posting-list) index — incremental BM25 serving,
   * the relevance tier's member of the churn-proportional index family
@@ -73,71 +73,48 @@ object PostingsIndex {
     * vanished ones. Returns (keptDocs, signedDocs) — spec-observable
     * proof that cost follows churn.
     */
-  def refresh(docs: DataFrame, idCol: String, textCol: String, path: String): (Long, Long) = {
-    val spark = docs.sparkSession
-    val root = new org.apache.hadoop.fs.Path(s"$path/doclen")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return (0L, build(docs, idCol, textCol, path))
-    val oldLen = spark.read.parquet(s"$path/doclen")
-    val oldPost = spark.read.parquet(s"$path/postings")
-    // shared churn seam on the doclen table (the fingerprint carrier);
-    // postings follow their doc's length row with one semi-join. md5 is
-    // evaluated once per seam join — two scans of `docs`, and the scan
-    // dominates the hash; collapsing them needs a corpus-sized persist
-    // that costs more than it saves
-    val s = graft.lake.ChurnSplit.split(oldLen, "doc", "fp",
-      docs, idCol, md5(docs(textCol)))
-    val keptLen = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keptPost = oldPost.join(keptLen.select(col("doc")), Seq("doc"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (freshPost, freshLen, freshBase) = indexRows(s.fresh, idCol, textCol)
-    val freshLenP = freshLen.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptN, signedN) = graft.core.Overlap.besides(
-      keptLen.count(), freshLenP.count()) {
-      Staged.landMany(spark, path, Seq(
-        "postings" -> keptPost.unionByName(freshPost),
-        "doclen" -> keptLen.unionByName(freshLenP)))
-    }
-    keptLen.unpersist(); keptPost.unpersist(); freshBase.unpersist(); freshLenP.unpersist()
-    (keptN, signedN)
-  }
+  def refresh(docs: DataFrame, idCol: String, textCol: String, path: String): (Long, Long) =
+    churn(docs, idCol, textCol, path, ChurnSplit.Refresh)
 
   /** Delta UPSERT — the drop/streaming form of [[refresh]]: add or
     * replace exactly the batch's documents (re-delivered unchanged docs
     * carry verbatim), out-of-batch rows untouched, no drop semantics.
     * Cost follows the BATCH. Returns (carriedBatchDocs, signedBatchDocs).
     */
-  def upsert(batch: DataFrame, idCol: String, textCol: String, path: String): (Long, Long) = {
-    val spark = batch.sparkSession
+  def upsert(batch: DataFrame, idCol: String, textCol: String, path: String): (Long, Long) =
+    churn(batch, idCol, textCol, path, ChurnSplit.Upsert)
+
+  /** Shared churn seam on the doclen table (the fingerprint carrier);
+    * postings keep every doc whose length row survives (carried, plus
+    * out-of-batch in upsert mode) with one semi-join. md5 is evaluated
+    * once per seam join — two scans of `docs`, and the scan dominates
+    * the hash; collapsing them needs a corpus-sized persist that costs
+    * more than it saves. Both tables swap together, so the doclen
+    * branches are observed here rather than through [[ChurnSplit.land]].
+    */
+  private def churn(docs: DataFrame, idCol: String, textCol: String, path: String,
+                    mode: ChurnSplit.Mode): (Long, Long) = {
+    val spark = docs.sparkSession
     val root = new org.apache.hadoop.fs.Path(s"$path/doclen")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return (0L, build(batch, idCol, textCol, path))
-    val oldLen = spark.read.parquet(s"$path/doclen")
-    val oldPost = spark.read.parquet(s"$path/postings")
-    // delta semantics over the shared seam on doclen; postings keep
-    // every doc whose length row survives (out-of-batch or carried):
-    // one semi-join against the union of the two kept sets
-    val s = graft.lake.ChurnSplit.split(oldLen, "doc", "fp",
-      batch, idCol, md5(batch(textCol)))
+    if (!fs.exists(root)) return (0L, build(docs, idCol, textCol, path))
+    val s = ChurnSplit.split(spark.read.parquet(s"$path/doclen"), "doc", "fp",
+      docs, idCol, md5(docs(textCol)))
+    // two consumers: the postings semi-join and the doclen landing
     val keptLen = s.kept
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keepDocs = s.others.select(col("doc")).unionByName(keptLen.select(col("doc")))
-    val keptPost = oldPost.join(keepDocs, Seq("doc"), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (freshPost, freshLen, freshBase) = indexRows(s.fresh, idCol, textCol)
-    val freshLenP = freshLen.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptN, signedN) = graft.core.Overlap.besides(
-      keptLen.count(), freshLenP.count()) {
-      Staged.landMany(spark, path, Seq(
-        "postings" -> keptPost.unionByName(freshPost),
-        "doclen" -> s.others.unionByName(keptLen).unionByName(freshLenP)))
+    val keepDocs = mode match {
+      case ChurnSplit.Upsert => s.others.select(col("doc")).unionByName(keptLen.select(col("doc")))
+      case ChurnSplit.Refresh => keptLen.select(col("doc"))
     }
-    keptLen.unpersist(); keptPost.unpersist()
-    freshBase.unpersist(); freshLenP.unpersist()
-    (keptN, signedN)
+    val keptPost = spark.read.parquet(s"$path/postings").join(keepDocs, Seq("doc"), "left_semi")
+    val (freshPost, freshLen, freshBase) = indexRows(s.fresh, idCol, textCol)
+    val (doclen, counts) =
+      ChurnSplit.observedUnion(path, s.others, keptLen, freshLen, mode, count(lit(1)))
+    Staged.landMany(spark, path, Seq(
+      "postings" -> keptPost.unionByName(freshPost), "doclen" -> doclen))
+    keptLen.unpersist(); freshBase.unpersist()
+    counts()
   }
 
   def servePostings(spark: SparkSession, path: String): DataFrame =

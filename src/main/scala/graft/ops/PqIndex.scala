@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.lake.ChurnSplit
+
 /** Persisted IVF-PQ index — the 8-bytes-per-vector serving tier as a
   * lake artifact (the [[SimilarityIndex]] posture applied to
   * [[Pq]]): built once, churn-refreshed, probed many times. At 100 TB
@@ -202,7 +204,19 @@ object PqIndex {
     * ids, drop vanished ones. Returns (keptRows, signedRows).
     */
   def refresh(corpus: DataFrame, idCol: String, vecCol: String, path: String)
-      : (Long, Long) = {
+      : (Long, Long) =
+    churn(corpus, idCol, vecCol, path, ChurnSplit.Refresh)
+
+  /** Delta upsert — add or replace exactly the batch's vectors under
+    * the pinned codebooks; out-of-batch rows untouched, re-delivered
+    * unchanged vectors carry verbatim. Returns (carried, signed).
+    */
+  def upsert(batch: DataFrame, idCol: String, vecCol: String, path: String)
+      : (Long, Long) =
+    churn(batch, idCol, vecCol, path, ChurnSplit.Upsert)
+
+  private def churn(corpus: DataFrame, idCol: String, vecCol: String, path: String,
+                    mode: ChurnSplit.Mode): (Long, Long) = {
     val spark = corpus.sparkSession
     // the three sidecar loads are independent tiny read jobs — overlap
     // them (guide §2.6 via graft.core.Overlap)
@@ -216,51 +230,10 @@ object PqIndex {
     val rc = rotatedMat(corpus, vecCol, graft.core.Overlap.await(fBasis))
     val cents = graft.core.Overlap.await(fCents)
     val model = graft.core.Overlap.await(fModel)
-    val old = spark.read.parquet(listsPath(path))
-    val s = graft.lake.ChurnSplit.split(old, "cid", "vfp",
+    val s = ChurnSplit.split(spark.read.parquet(listsPath(path)), "cid", "vfp",
       rc, idCol, vecFp(rc(vecCol)))
-    val kept = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshRows = listRows(s.fresh, idCol, vecCol, cents, model)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptN, signedN) = graft.core.Overlap.besides(
-      kept.count(), freshRows.count()) {
-      graft.lake.Staged.land(spark, listsPath(path), kept.unionByName(freshRows))
-    }
-    kept.unpersist(); freshRows.unpersist()
-    (keptN, signedN)
-  }
-
-  /** Delta upsert — add or replace exactly the batch's vectors under
-    * the pinned codebooks; out-of-batch rows untouched, re-delivered
-    * unchanged vectors carry verbatim. Returns (carried, signed).
-    */
-  def upsert(batch: DataFrame, idCol: String, vecCol: String, path: String)
-      : (Long, Long) = {
-    val spark = batch.sparkSession
-    // overlapped loads — see refresh
-    val fCents = graft.core.Overlap.par(loadCentroids(spark, path))
-    val fModel = graft.core.Overlap.par(loadModel(spark, path))
-    val fBasis = graft.core.Overlap.par(loadBasis(spark, path))
-    val rb = rotatedMat(batch, vecCol, graft.core.Overlap.await(fBasis))
-    val cents = graft.core.Overlap.await(fCents)
-    val model = graft.core.Overlap.await(fModel)
-    val old = spark.read.parquet(listsPath(path))
-    val s = graft.lake.ChurnSplit.split(old, "cid", "vfp",
-      rb, idCol, vecFp(rb(vecCol)))
-    val keptBatch = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshRows = listRows(s.fresh, idCol, vecCol, cents, model)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptN, signedN) = graft.core.Overlap.besides(
-      keptBatch.count(), freshRows.count()) {
-      graft.lake.Staged.land(spark, listsPath(path),
-        s.others.unionByName(keptBatch).unionByName(freshRows))
-    }
-    keptBatch.unpersist(); freshRows.unpersist()
-    (keptN, signedN)
+    ChurnSplit.land(spark, listsPath(path), s,
+      listRows(s.fresh, idCol, vecCol, cents, model), mode)
   }
 
   /** IVF-PQ top-k served FROM the persisted index: identical result to
@@ -273,7 +246,7 @@ object PqIndex {
     // an OPQ index probes in its pinned rotated space — corpus AND
     // queries rotate, so ADC tables, codes and the exact re-rank all
     // score the same (orthonormally preserved) inner products
-    // overlapped loads — see refresh
+    // overlapped loads — see churn
     val fCents = graft.core.Overlap.par(loadCentroids(spark, path))
     val fModel = graft.core.Overlap.par(loadModel(spark, path))
     val basis = loadBasis(spark, path)

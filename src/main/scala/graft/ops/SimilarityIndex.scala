@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.lake.ChurnSplit
+
 /** Persisted IVF-SQ8 index — ANN as a lake artifact instead of a
   * per-query rebuild.
   *
@@ -82,28 +84,8 @@ object SimilarityIndex {
     * new/changed ids, drop vanished ones. Returns (keptRows, signedRows).
     */
   def refresh(corpus: DataFrame, idCol: String, vecCol: String, path: String)
-      : (Long, Long) = {
-    val spark = corpus.sparkSession
-    val cents = loadCentroids(spark, path)
-    val old = spark.read.parquet(listsPath(path))
-    // shared churn seam: unchanged vectors' list rows carry verbatim,
-    // only drifted/new ids quantize under the pinned codebook
-    val s = graft.lake.ChurnSplit.split(old, "cid", "vfp",
-      corpus, idCol, vecFp(corpus(vecCol)))
-    val kept = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshRows = Similarity.int8Lists(s.fresh, idCol, vecCol, cents,
-        extraCols = Seq(vecFp(col(vecCol)).as("vfp")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptN, signedN) = graft.core.Overlap.besides(
-      kept.count(), freshRows.count()) {
-      land(spark, listsPath(path), kept.unionByName(freshRows))
-    }
-    kept.unpersist()
-    freshRows.unpersist()
-    (keptN, signedN)
-  }
+      : (Long, Long) =
+    churn(corpus, idCol, vecCol, path, ChurnSplit.Refresh)
 
   /** Delta UPSERT — the streaming / foreachBatch form of [[refresh]]:
     * add or replace exactly the batch's vectors under the PINNED
@@ -113,26 +95,21 @@ object SimilarityIndex {
     * corpus to train on). Returns (carriedBatchRows, signedBatchRows).
     */
   def upsert(batch: DataFrame, idCol: String, vecCol: String, path: String)
-      : (Long, Long) = {
-    val spark = batch.sparkSession
+      : (Long, Long) =
+    churn(batch, idCol, vecCol, path, ChurnSplit.Upsert)
+
+  /** Shared churn seam: unchanged vectors' list rows carry verbatim,
+    * only drifted/new ids quantize under the pinned codebook.
+    */
+  private def churn(corpus: DataFrame, idCol: String, vecCol: String, path: String,
+                    mode: ChurnSplit.Mode): (Long, Long) = {
+    val spark = corpus.sparkSession
     val cents = loadCentroids(spark, path)
-    val old = spark.read.parquet(listsPath(path))
-    // delta semantics over the shared seam: out-of-batch rows untouched,
-    // re-delivered unchanged vectors verbatim, drifted/new re-quantized
-    val s = graft.lake.ChurnSplit.split(old, "cid", "vfp",
-      batch, idCol, vecFp(batch(vecCol)))
-    val keptBatch = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshRows = Similarity.int8Lists(s.fresh, idCol, vecCol, cents,
-        extraCols = Seq(vecFp(col(vecCol)).as("vfp")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptN, signedN) = graft.core.Overlap.besides(
-      keptBatch.count(), freshRows.count()) {
-      land(spark, listsPath(path), s.others.unionByName(keptBatch).unionByName(freshRows))
-    }
-    keptBatch.unpersist(); freshRows.unpersist()
-    (keptN, signedN)
+    val s = ChurnSplit.split(spark.read.parquet(listsPath(path)), "cid", "vfp",
+      corpus, idCol, vecFp(corpus(vecCol)))
+    ChurnSplit.land(spark, listsPath(path), s,
+      Similarity.int8Lists(s.fresh, idCol, vecCol, cents,
+        extraCols = Seq(vecFp(col(vecCol)).as("vfp"))), mode)
   }
 
   /** IVF-SQ8 top-k served FROM the persisted index: same result as the

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.lake.Staged
+import graft.lake.{ChurnSplit, Staged}
 
 /** Persisted per-document text-stats sidecar — the text tier's member
   * of the churn-proportional index family ([[DedupIndex]] for near-dup,
@@ -46,29 +46,8 @@ object TextIndex {
     * verbatim, tokenize only new/changed documents, drop vanished ones.
     * Returns (keptDocs, signedDocs).
     */
-  def refresh(docs: DataFrame, idCol: String, textCol: String, path: String): (Long, Long) = {
-    val spark = docs.sparkSession
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (0L, build(docs, idCol, textCol, path))
-    val old = spark.read.parquet(path)
-    // shared churn seam: unchanged stats rows carry verbatim, only
-    // fingerprint-drifted/new docs re-tokenize
-    val s = graft.lake.ChurnSplit.split(old, "doc", "fp",
-      docs, idCol, md5(docs(textCol)))
-    val kept = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshRows = statsRows(s.fresh, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptN, signedN) = graft.core.Overlap.besides(
-      kept.count(), freshRows.count()) {
-      Staged.land(spark, path, kept.unionByName(freshRows))
-    }
-    kept.unpersist()
-    freshRows.unpersist()
-    (keptN, signedN)
-  }
+  def refresh(docs: DataFrame, idCol: String, textCol: String, path: String): (Long, Long) =
+    churn(docs, idCol, textCol, path, ChurnSplit.Refresh)
 
   /** Delta UPSERT — the batch/streaming form of [[refresh]]: add or
     * replace exactly the batch's documents (re-delivered unchanged docs
@@ -76,27 +55,21 @@ object TextIndex {
     * Cost follows the BATCH — no corpus-wide fingerprint pass. Returns
     * (carriedBatchDocs, signedBatchDocs).
     */
-  def upsert(batch: DataFrame, idCol: String, textCol: String, path: String): (Long, Long) = {
-    val spark = batch.sparkSession
+  def upsert(batch: DataFrame, idCol: String, textCol: String, path: String): (Long, Long) =
+    churn(batch, idCol, textCol, path, ChurnSplit.Upsert)
+
+  /** Shared churn seam: unchanged stats rows carry verbatim, only
+    * fingerprint-drifted/new docs re-tokenize.
+    */
+  private def churn(docs: DataFrame, idCol: String, textCol: String, path: String,
+                    mode: ChurnSplit.Mode): (Long, Long) = {
+    val spark = docs.sparkSession
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return (0L, build(batch, idCol, textCol, path))
-    val old = spark.read.parquet(path)
-    // delta semantics over the shared seam (out-of-batch untouched,
-    // re-delivered unchanged verbatim, drifted/new re-tokenized)
-    val s = graft.lake.ChurnSplit.split(old, "doc", "fp",
-      batch, idCol, md5(batch(textCol)))
-    val keptBatch = s.kept
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshRows = statsRows(s.fresh, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
-    val (keptN, signedN) = graft.core.Overlap.besides(
-      keptBatch.count(), freshRows.count()) {
-      Staged.land(spark, path, s.others.unionByName(keptBatch).unionByName(freshRows))
-    }
-    keptBatch.unpersist(); freshRows.unpersist()
-    (keptN, signedN)
+    if (!fs.exists(p)) return (0L, build(docs, idCol, textCol, path))
+    val s = ChurnSplit.split(spark.read.parquet(path), "doc", "fp",
+      docs, idCol, md5(docs(textCol)))
+    ChurnSplit.land(spark, path, s, statsRows(s.fresh, idCol, textCol), mode)
   }
 
   /** The landed stats table. */
