@@ -637,14 +637,15 @@ object Main {
         sys.error("drop needs BOTH --pca-path and --pca-drop-id (or neither)")
       if (arg(args, "--pca-path").isDefined && embIn.isEmpty)
         sys.error("--pca-path requires an embeddings drop (--emb-in)")
+      val pca = arg(args, "--pca-path").zip(arg(args, "--pca-drop-id")).map {
+        case (p, d) => (p, arg(args, "--pca-dim").map(_.toInt).getOrElse(64), d)
+      }
+      embIdx.foreach(graft.pipeline.DropCycle.requireEmbeddingPaths(spark, _, pca))
       val report = graft.pipeline.DropCycle.run(lake, dropDf, conf)
       val embReport = embIn.zip(embIdx).map {
         case (in, idx) => graft.pipeline.DropCycle.runEmbeddings(
           spark.read.parquet(in), arg(args, "--emb-id").getOrElse("vec_id"),
-          arg(args, "--emb-vec").getOrElse("embedding"), idx,
-          pca = arg(args, "--pca-path").zip(arg(args, "--pca-drop-id")).map {
-            case (p, d) => (p, arg(args, "--pca-dim").map(_.toInt).getOrElse(64), d)
-          },
+          arg(args, "--emb-vec").getOrElse("embedding"), idx, pca = pca,
           pcaRetract = arg(args, "--pca-retract-in").map(spark.read.parquet(_)))
       }.getOrElse(Map.empty)
       (report ++ embReport).toSeq.sortBy(_._1).foreach { case (tier, (a, b)) =>

@@ -20,6 +20,14 @@ package graft.core
   * parallelism — the guide's §2.6 sizing note), the pool shrinks back
   * when idle, and every thread is a daemon so the pool never blocks
   * JVM exit.
+  *
+  * LOCAL PROPERTIES: a pooled thread inherits Spark's local properties
+  * (job group, job tags, scheduler pool, description) only when it is
+  * created, and the cached pool reuses it for later callers. [[par]]
+  * therefore captures the CALLER's properties and sets them for the
+  * body, then restores the thread's own: jobs of a pooled body carry
+  * the caller's group and tags (so `cancelJobGroup` reaches them), and
+  * nothing stale leaks into the next body the thread runs.
   */
 object Overlap {
 
@@ -34,26 +42,32 @@ object Overlap {
           }
         }))
 
-  def par[T](body: => T): scala.concurrent.Future[T] =
-    scala.concurrent.Future(body)(pool)
+  def par[T](body: => T): scala.concurrent.Future[T] = {
+    val props = org.apache.spark.GraftLocalProperties.capture()
+    scala.concurrent.Future(org.apache.spark.GraftLocalProperties.within(props)(body))(pool)
+  }
 
   def await[T](f: scala.concurrent.Future[T]): T =
     scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
 
-  /** Run two independent actions on the pool WHILE `main` runs on the
-    * calling thread; returns (a, b) once all three are done, so the
-    * three actions cost max() overlapped instead of sum() sequential
-    * (guide §2.6). Only for actions deterministic in isolation — counts
-    * of persisted frames and staged writes to disjoint paths qualify.
-    *
-    * Callers: [[graft.ops.FuzzyJoinIndex]] and
-    * [[graft.ops.IncrementalLabels]], whose counted frames are not the
-    * rows they land. Tiers that count the rows they land read the
-    * counts off the write instead ([[graft.lake.ChurnSplit.land]]).
+  /** Start every step on the pool, wait for ALL of them, and return
+    * their results in step order. When steps fail, the first failing
+    * step's (in step order) error is raised with the other errors
+    * attached as suppressed, and only after every step has ended: a
+    * step never outlives the call, so a caller that retries (and
+    * deletes what a failed attempt left) cannot race a late sibling.
     */
-  def besides[A, B](a: => A, b: => B)(main: => Unit): (A, B) = {
-    val fa = par(a); val fb = par(b)
-    main
-    (await(fa), await(fb))
+  def all[T](steps: Seq[() => T]): Seq[T] = {
+    // every error is caught inside the step (fatal ones too), so no
+    // future is left incomplete and no error arrives boxed
+    val outcomes = steps
+      .map(s => par(try Right(s()) catch { case e: Throwable => Left(e) }))
+      .map(await(_))
+    outcomes.collect { case Left(e) => e } match {
+      case first +: rest =>
+        rest.filterNot(_ eq first).foreach(first.addSuppressed)
+        throw first
+      case _ => outcomes.collect { case Right(v) => v }
+    }
   }
 }

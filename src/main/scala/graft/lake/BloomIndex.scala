@@ -66,20 +66,6 @@ object BloomIndex {
       .toDF("file", "bloom", "nkeys")
   }
 
-  /** Land an index frame at the sidecar path `idxPath`: write to a
-    * staging dir, then delete-and-rename into place. A crash leaves the
-    * old index, the new one, or none — and "none" just means lookups
-    * fall back to a full scan, never a wrong answer.
-    */
-  private def landIndex(spark: SparkSession, idxPath: String,
-                        idx: org.apache.spark.sql.DataFrame): Long = {
-    // Staged.land, not a local re-implementation: its dot-prefixed
-    // staging dir stays invisible to Spark listing/partition discovery,
-    // which a bare ".staging" sibling would not
-    Staged.land(spark, idxPath, idx)
-    spark.read.parquet(idxPath).count()
-  }
-
   /** URI strings (Path.toUri.toString, the index's join key form) fed
     * back into spark.read would be re-parsed as PATH strings, double
     * percent-encoding any escaped character — a lake under '/my lake'
@@ -102,7 +88,7 @@ object BloomIndex {
     // join the current listing for each file's length (freshness token);
     // the listing is driver-side but only touches paths, never data
     val lens = fileLengths(spark, path).toSeq.toDF("file", "len")
-    landIndex(spark, sidecar(path), perFile.join(lens, "file"))
+    Staged.land(spark, sidecar(path), perFile.join(lens, "file"))
   }
 
   /** Incremental rebuild: bloom ONLY the files the index doesn't cover
@@ -145,17 +131,13 @@ object BloomIndex {
         keyCol, expectedItemsPerFile, fpp)
         .join(live.toSeq.toDF("file", "len"), "file")
         .select(col("file"), col("bloom"), col("nkeys"), col("len"))
-    // pin the rebuilt frame: it is counted AND landed, and the bloom
-    // build over the churn files is the refresh's dominant cost — unpinned
-    // it would run twice
-    val rebuiltP = rebuilt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keptN = kept.count()
-    // count the REBUILT frame, not freshFiles: if the lens join ever
-    // dropped a file on a URI-form mismatch, the metric must say so
-    val rebuiltN = rebuiltP.count()
-    landIndex(spark, sidecar(path), kept.unionByName(rebuiltP))
-    rebuiltP.unpersist()
-    (keptN, rebuiltN)
+    // one staged landing: a crash leaves the old index, the new one, or
+    // none — and "none" just means lookups fall back to a full scan,
+    // never a wrong answer. (kept, rebuilt) are observed on that write,
+    // so the churn bloom build runs once, unpersisted. Count the REBUILT
+    // rows, not freshFiles: if the length join ever dropped a file on a
+    // URI-form mismatch, the metric must say so
+    ChurnSplit.landRows(spark, sidecar(path), kept, rebuilt)
   }
 
   /** Current data files (qualified URI -> length), resolved through
@@ -245,7 +227,7 @@ object BloomIndex {
   // read planning, index refresh and lookup are all manifest-resolved.
   // ------------------------------------------------------------------
 
-  private def snapSidecar(path: String) = path + "/_bloomidx"
+  private[graft] def snapSidecar(path: String) = path + "/_bloomidx"
 
   /** Manifest file list as (qualified URI -> length) — the same URI form
     * `input_file_name()` reports, so index rows join exactly. No fs
@@ -306,16 +288,8 @@ object BloomIndex {
         keyCol, expectedItemsPerFile, fpp)
         .join(lens.withColumnRenamed("len2", "len"), "file")
         .select(col("file"), col("bloom"), col("nkeys"), col("len"))
-    // pin the rebuilt frame: counted AND landed — the churn bloom build
-    // must run once, not twice
-    val rebuiltP = rebuilt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keptN = kept.count()
-    // count the REBUILT frame, not freshFiles: if the lens join ever
-    // dropped a file on a URI-form mismatch, the metric must say so
-    val rebuiltN = rebuiltP.count()
-    landIndex(spark, snapSidecar(lake.path), kept.unionByName(rebuiltP))
-    rebuiltP.unpersist()
-    (keptN, rebuiltN)
+    // (kept, rebuilt) observed on the one staged landing, as in [[refresh]]
+    ChurnSplit.landRows(spark, idxPath, kept, rebuilt)
   }
 
 

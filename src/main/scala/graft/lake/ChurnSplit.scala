@@ -34,7 +34,8 @@ import org.apache.spark.sql.functions._
   *
   * [[land]] recombines the split and lands it through [[Staged.land]]
   * ([[graft.ops.PostingsIndex]], whose two tables swap together through
-  * [[Staged.landMany]], recombines with [[observedUnion]]) — split
+  * [[Staged.landMany]], recombines with [[observedUnion]]; [[BloomIndex]]
+  * lands its kept and re-bloomed rows through [[landRows]]) — split
   * decides WHAT to rewrite, the staged swap guarantees the rewrite is
   * never torn.
   *
@@ -89,29 +90,45 @@ object ChurnSplit {
     * kept and fresh branches of that write — row counts by default.
     */
   def land(spark: SparkSession, path: String, split: Split, freshRows: DataFrame,
-           mode: Mode, n: Column = count(lit(1))): (Long, Long) = {
-    val (rows, counts) = observedUnion(path, split.others, split.kept, freshRows, mode, n)
-    Staged.land(spark, path, rows)
+           mode: Mode, n: Column = count(lit(1))): (Long, Long) =
+    landRows(spark, path, split.kept, freshRows, n, mode match {
+      case Upsert => Some(split.others)
+      case Refresh => None
+    })
+
+  /** Land kept ∪ fresh at `path` in one staged write, after the
+    * uncounted `carried` rows if any, and return `n` over the kept and
+    * the fresh branch of that write. [[land]]'s body, and the landing of
+    * index rows not split here ([[BloomIndex]]'s (file, len) rows).
+    */
+  def landRows(spark: SparkSession, path: String, kept: DataFrame, fresh: DataFrame,
+               n: Column = count(lit(1)),
+               carried: Option[DataFrame] = None): (Long, Long) = {
+    val (rows, counts) = observedUnion(path, kept, fresh, n)
+    Staged.land(spark, path, carried.fold(rows)(_.unionByName(rows)))
     counts()
   }
 
-  /** The landing frame of [[land]] with its kept and fresh branches
-    * observed, and the reader of the two counters — to be called only
-    * after the write of the frame to `path` has returned.
+  /** kept ∪ fresh with both branches observed, and the reader of the two
+    * counters (`n` over each branch) — to be called only after the
+    * write of the frame to `path` has returned.
     */
-  private[graft] def observedUnion(path: String, others: DataFrame, kept: DataFrame,
-                                   fresh: DataFrame, mode: Mode,
-                                   n: Column): (DataFrame, () => (Long, Long)) = {
+  private[graft] def observedUnion(path: String, kept: DataFrame, fresh: DataFrame,
+                                   n: Column = count(lit(1)))
+      : (DataFrame, () => (Long, Long)) = {
     val keptObs = Observation(); val freshObs = Observation()
-    val rows = kept.observe(keptObs, n.as("n")).unionByName(fresh.observe(freshObs, n.as("n")))
-    def read(o: Observation): Long =
-      try Await.result(o.future, MetricsWait).getLong(0)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          throw new IllegalStateException(s"churn counters of the landing at $path " +
-            s"did not arrive within $MetricsWait of the write returning")
-      }
-    (mode match { case Upsert => others.unionByName(rows); case Refresh => rows },
-      () => (read(keptObs), read(freshObs)))
+    (kept.observe(keptObs, n.as("n")).unionByName(fresh.observe(freshObs, n.as("n"))),
+      () => (observed(keptObs, path), observed(freshObs, path)))
   }
+
+  /** The single long counter of `o`, observed on the landing at `path`,
+    * waiting at most [[MetricsWait]] — only after that write returned.
+    */
+  private[lake] def observed(o: Observation, path: String): Long =
+    try Await.result(o.future, MetricsWait).getLong(0)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(s"observed counters of the landing at $path " +
+          s"did not arrive within $MetricsWait of the write returning")
+    }
 }

@@ -84,7 +84,6 @@ object MaterializedAgg {
   def landDrop(drop: DataFrame, spec: Spec, path: String, dropId: String): Long = {
     val spark = drop.sparkSession
     Staged.land(spark, segDir(path, dropId), partial(drop, spec))
-    spark.read.parquet(segDir(path, dropId)).count()
   }
 
   /** CDC form of [[landDrop]]: maintain the summary from a snapshot
@@ -115,7 +114,6 @@ object MaterializedAgg {
     val partial = changes.groupBy(spec.dims.map(col): _*)
       .agg(sum(sign).as("n"), aggs: _*)
     Staged.land(spark, segDir(path, dropId), partial)
-    spark.read.parquet(segDir(path, dropId)).count()
   }
 
   /** The merged aggregate over every landed segment — reads only

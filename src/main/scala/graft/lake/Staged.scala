@@ -1,6 +1,7 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Staged-swap parquet landing, shared by every sidecar/index tier
   * ([[BloomIndex]], [[graft.ops.DedupIndex]],
@@ -21,7 +22,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Staged {
 
-  def land(spark: SparkSession, path: String, df: DataFrame): Unit = {
+  /** Land `df` at `path` by staged swap; returns the number of rows
+    * landed — an observed metric of the write itself, read with the
+    * bounded wait of [[ChurnSplit.MetricsWait]], so no caller re-reads
+    * the landing to count it.
+    */
+  def land(spark: SparkSession, path: String, df: DataFrame): Long = {
     val dest = new org.apache.hadoop.fs.Path(path)
     require(dest.getParent != null, s"cannot stage-land at a filesystem root: $path")
     // dot-prefixed staging: invisible to Spark's file listing AND to
@@ -31,9 +37,11 @@ object Staged {
       dest.getParent, "." + dest.getName + ".staging")
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(staging, true)
-    df.write.mode("overwrite").parquet(staging.toString)
+    val landed = Observation()
+    df.observe(landed, count(lit(1)).as("n")).write.mode("overwrite").parquet(staging.toString)
     fs.delete(dest, true)
     renameOrThrow(fs, staging, dest)
+    ChurnSplit.observed(landed, path)
   }
 
   /** `FileSystem.rename` signals most failures (cross-filesystem move,
@@ -73,12 +81,12 @@ object Staged {
     // `lists` write backfills the scheduling gaps of the codebook-sized
     // sidecar writes instead of queueing five near-empty jobs serially.
     // The commit protocol is unchanged — everything still lands under
-    // ONE staging root swapped by ONE rename.
-    tables.map { case (name, df) =>
-      graft.core.Overlap.par {
-        df.write.mode("overwrite").parquet(s"$staging/$name")
-      }
-    }.foreach(graft.core.Overlap.await(_))
+    // ONE staging root swapped by ONE rename. `all` raises a failed
+    // table only once every sibling write has ended, so a retry's
+    // delete of the staging root is never raced by a late sibling.
+    graft.core.Overlap.all(tables.map { case (name, df) =>
+      () => df.write.mode("overwrite").parquet(s"$staging/$name")
+    })
     fs.delete(dest, true)
     renameOrThrow(fs, staging, dest)
   }

@@ -36,7 +36,7 @@ object ZoneMapIndex {
     * column's native type, which only stays consistent within a single
     * column's sidecar.
     */
-  private def snapSidecar(lakePath: String, valCol: String) =
+  private[graft] def snapSidecar(lakePath: String, valCol: String) =
     s"$lakePath/_zonemap_$valCol"
 
   /** The sidecar's own schema claims these names, and `valCol` becomes a
@@ -106,11 +106,8 @@ object ZoneMapIndex {
         .join(lens, col("old.file") === lens("file") && col("old.len") === lens("len2"))
         .select(col("old.file"), col("old.minv"), col("old.maxv"),
           col("old.nrows"), col("old.nvals"), col("old.len"))
-    if (freshFiles.isEmpty) {
-      val keptN = kept.count()
-      Staged.land(spark, idxPath, kept) // drop rows of vanished files
-      return (keptN, 0L)
-    }
+    if (freshFiles.isEmpty)
+      return (Staged.land(spark, idxPath, kept), 0L) // drop rows of vanished files
     val rebuilt =
       zoneRows(
           spark.read.schema(schema).parquet(BloomIndex.readablePaths(freshFiles): _*), valCol)
@@ -197,8 +194,7 @@ object ZoneMapIndex {
             col("old.nrows"), col("old.nvals"), col("old.len"))
       (kept, rebuilt) match {
         case (null, null) => c -> (0L, 0L) // empty lake
-        case (k, null) =>
-          val keptN = k.count(); Staged.land(spark, idxPath, k); c -> (keptN, 0L)
+        case (k, null) => c -> (Staged.land(spark, idxPath, k), 0L)
         case (k, r) =>
           val keptN = if (k == null) 0L else k.count()
           val rebuiltN = r.count()

@@ -57,21 +57,22 @@ object ClusterIndex {
     // paths, identical landed bytes (guide §2.4/§2.6)
     val rows = DedupIndex.bandRows(docs, idCol, textCol, bands, rowsPerBand)
       .localCheckpoint(true)
-    val fBands = graft.core.Overlap.par(
-      graft.lake.Staged.land(spark, bandsPath(path), rows))
-    val pairs = DedupIndex.candidatePairsFrom(rows)
-    val comp = Dedup.connectedComponents(pairs)
-    // (doc, fp) from the checkpointed band rows instead of a SECOND
-    // md5 pass over the corpus text (guide §2.3): every signed doc has
-    // band 0 and every shingle-less doc the single band=-1 marker, so
-    // `band <= 0` is exactly one row per doc with its fingerprint —
-    // identical to docs.select(id, md5(text)) by bandRows' construction
-    val labels = DedupIndex.docFps(rows)
-      .join(comp, col("doc") === col("node"), "left_outer")
-      .select(col("doc"), col("fp"), coalesce(col("component"), col("doc")).as("label"))
-    graft.lake.Staged.land(spark, labelsPath(path), labels)
-    graft.core.Overlap.await(fBands)
-    spark.read.parquet(labelsPath(path)).count()
+    // the labeled row count comes first
+    graft.core.Overlap.all(Seq(
+      () => {
+        val pairs = DedupIndex.candidatePairsFrom(rows)
+        val comp = Dedup.connectedComponents(pairs)
+        // (doc, fp) from the checkpointed band rows instead of a SECOND
+        // md5 pass over the corpus text (guide §2.3): every signed doc has
+        // band 0 and every shingle-less doc the single band=-1 marker, so
+        // `band <= 0` is exactly one row per doc with its fingerprint —
+        // identical to docs.select(id, md5(text)) by bandRows' construction
+        val labels = DedupIndex.docFps(rows)
+          .join(comp, col("doc") === col("node"), "left_outer")
+          .select(col("doc"), col("fp"), coalesce(col("component"), col("doc")).as("label"))
+        graft.lake.Staged.land(spark, labelsPath(path), labels)
+      },
+      () => graft.lake.Staged.land(spark, bandsPath(path), rows))).head
   }
 
   /** Churn-proportional refresh to the current corpus state. Returns

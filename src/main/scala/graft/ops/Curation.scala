@@ -405,7 +405,6 @@ object Curation {
     val spark = docs.sparkSession
     graft.lake.Staged.land(spark, s"$path/seg=$dropId",
       dsirCountSegment(docs, idCol, textCol, targetPred, nBuckets))
-    spark.read.parquet(s"$path/seg=$dropId").count()
   }
 
   /** RETRACTABLE form for upsert/delete feeds (the
@@ -431,7 +430,6 @@ object Curation {
     graft.lake.Staged.land(spark, s"$path/seg=$dropId",
       pos.unionByName(neg).groupBy(col("__b"))
         .agg(sum(col("__cr")).as("__cr"), sum(col("__ct")).as("__ct")))
-    spark.read.parquet(s"$path/seg=$dropId").count()
   }
 
   /** Merged model counts over every landed segment; fully-retracted
@@ -493,7 +491,6 @@ object Curation {
     val spark = docs.sparkSession
     graft.lake.Staged.land(spark, s"$path/seg=$dropId",
       domainTokenSegment(docs, textCol, urlCol))
-    spark.read.parquet(s"$path/seg=$dropId").count()
   }
 
   /** Retractable form for upsert/delete change feeds: insert/
@@ -515,7 +512,6 @@ object Curation {
     graft.lake.Staged.land(spark, s"$path/seg=$dropId",
       pos.unionByName(neg).groupBy(col("domain"))
         .agg(sum(col("n_tokens")).as("n_tokens")))
-    spark.read.parquet(s"$path/seg=$dropId").count()
   }
 
   /** Merged per-domain token totals over every landed segment; fully

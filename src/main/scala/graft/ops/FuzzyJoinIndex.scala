@@ -207,23 +207,25 @@ object FuzzyJoinIndex {
     import spark.implicits._
     val (_, oldKeys, cur, carriedIds, fresh, freshKeys, meta) =
       churnSplit(reference, refId, refStr, path)
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
+    // churn counters overlap the landing (guide §2.6 via Overlap.all)
     // full-reference semantics: strings' = the passed reference; keys of
     // ids outside it (deletions) drop out via the carried semi-join.
     // The lens sidecar recomputes EXACTLY from cur (a distinct over a
     // checkpointed int column — map-side partial aggregation collapses
     // it to ~|distinct lengths| rows regardless of corpus size)
-    val (carriedN, freshN) = graft.core.Overlap.besides(
-      carriedIds.count(), fresh.count()) {
-      graft.lake.Staged.landMany(spark, path, Seq(
-        "strings" -> stringsOut(cur),
-        "keys" -> keysOut(
-          oldKeys.join(carriedIds.select(col("__id").as("__aid")), Seq("__aid"), "left_semi")
-            .unionByName(freshKeys)),
-        "hot" -> spark.read.parquet(path + "/hot"),
-        "lens" -> FuzzyJoin.chunkLens(cur, meta.maxDist).toDF("l").coalesce(1),
-        "meta" -> spark.read.parquet(path + "/meta")))
-    }
+    val Seq(_, carriedN, freshN) = graft.core.Overlap.all(Seq(
+      () => {
+        graft.lake.Staged.landMany(spark, path, Seq(
+          "strings" -> stringsOut(cur),
+          "keys" -> keysOut(
+            oldKeys.join(carriedIds.select(col("__id").as("__aid")), Seq("__aid"), "left_semi")
+              .unionByName(freshKeys)),
+          "hot" -> spark.read.parquet(path + "/hot"),
+          "lens" -> FuzzyJoin.chunkLens(cur, meta.maxDist).toDF("l").coalesce(1),
+          "meta" -> spark.read.parquet(path + "/meta")))
+        0L
+      },
+      () => carriedIds.count(), () => fresh.count()))
     carriedIds.unpersist()
     (carriedN, freshN)
   }
@@ -257,20 +259,22 @@ object FuzzyJoinIndex {
       else Seq("lens" -> spark.read.parquet(path + "/lens")
         .unionByName(FuzzyJoin.chunkLens(cur, meta.maxDist).toDF("l"))
         .distinct().coalesce(1))
-    // churn counters overlap the landing (guide §2.6 via Overlap.besides)
+    // churn counters overlap the landing (guide §2.6 via Overlap.all)
     // delta semantics: strings/keys OUTSIDE this batch stay untouched;
     // changed batch ids' old keys drop via the fresh anti-join
-    val (carriedN, freshN) = graft.core.Overlap.besides(
-      carriedIds.count(), fresh.count()) {
-      graft.lake.Staged.landMany(spark, path, Seq(
-        "strings" -> oldStrings.join(cur.select(col("__id")), Seq("__id"), "left_anti")
-          .unionByName(cur).transform(stringsOut),
-        "keys" -> keysOut(
-          oldKeys.join(fresh.select(col("__id").as("__aid")), Seq("__aid"), "left_anti")
-            .unionByName(freshKeys)),
-        "hot" -> spark.read.parquet(path + "/hot"),
-        "meta" -> spark.read.parquet(path + "/meta")) ++ lensTable)
-    }
+    val Seq(_, carriedN, freshN) = graft.core.Overlap.all(Seq(
+      () => {
+        graft.lake.Staged.landMany(spark, path, Seq(
+          "strings" -> oldStrings.join(cur.select(col("__id")), Seq("__id"), "left_anti")
+            .unionByName(cur).transform(stringsOut),
+          "keys" -> keysOut(
+            oldKeys.join(fresh.select(col("__id").as("__aid")), Seq("__aid"), "left_anti")
+              .unionByName(freshKeys)),
+          "hot" -> spark.read.parquet(path + "/hot"),
+          "meta" -> spark.read.parquet(path + "/meta")) ++ lensTable)
+        0L
+      },
+      () => carriedIds.count(), () => fresh.count()))
     carriedIds.unpersist()
     (carriedN, freshN)
   }

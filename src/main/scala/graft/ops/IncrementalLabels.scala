@@ -82,14 +82,12 @@ private[ops] object IncrementalLabels {
       .select(col("doc"), col(fpCol), coalesce(col("component"), col("label")).as("label"))
     // the two churn counters and the landing are three independent
     // actions over the persisted frames — overlap them (guide §2.6 via
-    // Overlap.besides): the land materializes every partition through
+    // Overlap.all): the land materializes every partition through
     // the same persisted comp/granLabels/intactRows blocks the counts
     // read, so all file access to the old labels happens before the swap
-    val (carried, relabeled) = graft.core.Overlap.besides(
-      intactRows.count(), granLabels.count()) {
-      graft.lake.Staged.land(spark, labelsPath,
-        granLabels.unionByName(intactLabels))
-    }
+    val Seq(_, carried, relabeled) = graft.core.Overlap.all(Seq(
+      () => graft.lake.Staged.land(spark, labelsPath, granLabels.unionByName(intactLabels)),
+      () => intactRows.count(), () => granLabels.count()))
     Seq(old, curP, docGran, comp, granLabels, intactRows)
       .foreach(_.unpersist(blocking = false))
     (carried, relabeled)

@@ -46,7 +46,6 @@ object PcaIndex {
       // (guide §6 small files) — one file per segment
       .coalesce(1)
     Staged.land(spark, segDir(path, dropId), seg)
-    spark.read.parquet(segDir(path, dropId)).count()
   }
 
   /** Merged moments across every landed segment — the [[Pca.moments]]

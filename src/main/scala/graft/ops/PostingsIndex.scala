@@ -103,14 +103,14 @@ object PostingsIndex {
     // two consumers: the postings semi-join and the doclen landing
     val keptLen = s.kept
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keepDocs = mode match {
-      case ChurnSplit.Upsert => s.others.select(col("doc")).unionByName(keptLen.select(col("doc")))
-      case ChurnSplit.Refresh => keptLen.select(col("doc"))
+    val (freshPost, freshLen, freshBase) = indexRows(s.fresh, idCol, textCol)
+    val (lens, counts) = ChurnSplit.observedUnion(path, keptLen, freshLen)
+    val (keepDocs, doclen) = mode match {
+      case ChurnSplit.Upsert => (s.others.select(col("doc")).unionByName(keptLen.select(col("doc"))),
+        s.others.unionByName(lens))
+      case ChurnSplit.Refresh => (keptLen.select(col("doc")), lens)
     }
     val keptPost = spark.read.parquet(s"$path/postings").join(keepDocs, Seq("doc"), "left_semi")
-    val (freshPost, freshLen, freshBase) = indexRows(s.fresh, idCol, textCol)
-    val (doclen, counts) =
-      ChurnSplit.observedUnion(path, s.others, keptLen, freshLen, mode, count(lit(1)))
     Staged.landMany(spark, path, Seq(
       "postings" -> keptPost.unionByName(freshPost), "doclen" -> doclen))
     keptLen.unpersist(); freshBase.unpersist()

@@ -160,7 +160,6 @@ object Relevance {
     val spark = docs.sparkSession
     graft.lake.Staged.land(spark, s"$path/seg=$dropId",
       bigramCountSegment(docs, idCol, textCol))
-    spark.read.parquet(s"$path/seg=$dropId").count()
   }
 
   /** RETRACTABLE form for upsert/delete feeds: one SIGNED count segment
@@ -183,7 +182,6 @@ object Relevance {
       .withColumn("c2", -col("c2"))
     graft.lake.Staged.land(spark, s"$path/seg=$dropId",
       pos.unionByName(neg).groupBy(col("prev"), col("cur")).agg(sum(col("c2")).as("c2")))
-    spark.read.parquet(s"$path/seg=$dropId").count()
   }
 
   /** Merged model over every landed segment: counts sum exactly;

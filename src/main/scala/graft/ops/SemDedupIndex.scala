@@ -78,7 +78,6 @@ object SemDedupIndex {
       .join(comp, col("doc") === col("node"), "left_outer")
       .select(col("doc"), col("vfp"), coalesce(col("component"), col("doc")).as("label"))
     graft.lake.Staged.land(spark, labelsPath(path), labels)
-    spark.read.parquet(labelsPath(path)).count()
   }
 
   /** Build from scratch: pin the codebook + threshold, land the labels.
@@ -94,15 +93,15 @@ object SemDedupIndex {
       if (trained) Similarity.ivfCentroidsKMeans(corpus, idCol, vecCol, nList)
       else Similarity.ivfCentroids(corpus, idCol, vecCol, nList)
     // the two codebook-sized sidecar lands are independent of the label
-    // chain — overlap all three (guide §2.6 via Overlap)
-    val fCents = graft.core.Overlap.par(graft.lake.Staged.land(spark, centsPath(path),
-      cents.map { case (id, v) => (id, v) }.toDF("cell_id", "cv").coalesce(1)))
-    val fMeta = graft.core.Overlap.par(graft.lake.Staged.land(spark, metaPath(path),
-      Seq(threshold.toString).toDF("threshold").coalesce(1)))
-    val n = buildFrom(corpus, idCol, vecCol, path,
-      Similarity.ivfCell(col(vecCol), cents), threshold)
-    graft.core.Overlap.await(fCents); graft.core.Overlap.await(fMeta)
-    n
+    // chain — overlap all three (guide §2.6 via Overlap); the labeled
+    // row count comes first
+    graft.core.Overlap.all(Seq(
+      () => buildFrom(corpus, idCol, vecCol, path,
+        Similarity.ivfCell(col(vecCol), cents), threshold),
+      () => graft.lake.Staged.land(spark, centsPath(path),
+        cents.map { case (id, v) => (id, v) }.toDF("cell_id", "cv").coalesce(1)),
+      () => graft.lake.Staged.land(spark, metaPath(path),
+        Seq(threshold.toString).toDF("threshold").coalesce(1)))).head
   }
 
   /** Build under a corpus-scaled HIERARCHICAL codebook (round-15
@@ -119,21 +118,20 @@ object SemDedupIndex {
     import spark.implicits._
     val hier = IvfHier.train(corpus, idCol, vecCol, nList, m)
     // the three codebook-sized sidecar lands are independent of the
-    // label chain — overlap all four (guide §2.6 via Overlap)
-    val fSides = Seq(
-      graft.core.Overlap.par(graft.lake.Staged.land(spark, centsPath(path),
+    // label chain — overlap all four (guide §2.6 via Overlap); the
+    // labeled row count comes first
+    graft.core.Overlap.all(Seq(
+      () => buildFrom(corpus, idCol, vecCol, path,
+        Similarity.hierCell(col(vecCol), hier), threshold),
+      () => graft.lake.Staged.land(spark, centsPath(path),
         hier.fine.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
-          .toDF("cell_id", "cv").coalesce(1))),
-      graft.core.Overlap.par(graft.lake.Staged.land(spark, coarsePath(path),
+          .toDF("cell_id", "cv").coalesce(1)),
+      () => graft.lake.Staged.land(spark, coarsePath(path),
         hier.coarse.zipWithIndex.map { case (v, c) =>
           (c.toLong, v.toSeq, hier.fineOfCoarse(c).toSeq)
-        }.toDF("coarse_id", "cv", "fine_idx").coalesce(1))),
-      graft.core.Overlap.par(graft.lake.Staged.land(spark, metaPath(path),
-        Seq((threshold.toString, hier.m)).toDF("threshold", "m").coalesce(1))))
-    val n = buildFrom(corpus, idCol, vecCol, path,
-      Similarity.hierCell(col(vecCol), hier), threshold)
-    fSides.foreach(graft.core.Overlap.await(_))
-    n
+        }.toDF("coarse_id", "cv", "fine_idx").coalesce(1)),
+      () => graft.lake.Staged.land(spark, metaPath(path),
+        Seq((threshold.toString, hier.m)).toDF("threshold", "m").coalesce(1)))).head
   }
 
   private def loadCentroids(spark: SparkSession, path: String): Seq[(Long, Seq[Float])] =

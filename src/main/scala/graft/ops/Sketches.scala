@@ -72,7 +72,6 @@ object Sketches {
                        path: String, dropId: String): Long = {
     val spark = drop.sparkSession
     Staged.land(spark, segDir(path, dropId), distinctSegment(drop, dims, keyCol))
-    spark.read.parquet(segDir(path, dropId)).count()
   }
 
   /** Exact per-dims cardinality over every landed segment. Only
@@ -98,7 +97,6 @@ object Sketches {
                   path: String, dropId: String, lgK: Int = 14): Long = {
     val spark = drop.sparkSession
     Staged.land(spark, segDir(path, dropId), hllSegment(drop, dims, keyCol, lgK))
-    spark.read.parquet(segDir(path, dropId)).count()
   }
 
   /** Merged estimate per dims: union the segment sketches, estimate
@@ -211,7 +209,6 @@ object Sketches {
     val spark = drop.sparkSession
     Staged.land(spark, segDir(path, dropId),
       histSegment(drop, dims, value, lo, width, nBuckets))
-    spark.read.parquet(segDir(path, dropId)).count()
   }
 
   /** Merged histogram per dims: (dims..., bucket, n). */
@@ -313,7 +310,6 @@ object Sketches {
                        k: Int, path: String, dropId: String): Long = {
     val spark = drop.sparkSession
     Staged.land(spark, segDir(path, dropId), quantileSegment(drop, dims, value, k))
-    spark.read.parquet(segDir(path, dropId)).count()
   }
 
   /** num/den-quantile estimate per dims from the merged summaries (e.g.
@@ -406,7 +402,6 @@ object Sketches {
                    path: String, dropId: String): Long = {
     val spark = drop.sparkSession
     Staged.land(spark, segDir(path, dropId), topkSegment(drop, dims, keyCol, k))
-    spark.read.parquet(segDir(path, dropId)).count()
   }
 
   /** Merged per-key frequency bounds over every landed segment:

@@ -39,7 +39,6 @@ object TextIndex {
   def build(docs: DataFrame, idCol: String, textCol: String, path: String): Long = {
     val spark = docs.sparkSession
     Staged.land(spark, path, statsRows(docs, idCol, textCol))
-    spark.read.parquet(path).count()
   }
 
   /** Churn-proportional refresh: carry unchanged documents' stats rows

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
+import graft.core.Overlap
 import graft.lake.{BloomIndex, MaterializedAgg, SnapshotLake}
 import graft.ops.{DedupIndex, Sketches}
 
@@ -33,6 +35,14 @@ import graft.ops.{DedupIndex, Sketches}
   *  7. bigram-LM counts — [[graft.ops.Relevance.landLmChangesDrop]]
   *     with pre-image retraction, so the merged model always equals a
   *     from-scratch retrain over the current corpus.
+  *
+  * Steps 2–7 run CONCURRENTLY once the commit of step 1 is done (the
+  * dq split and the commit stay serial in front): each reads only the
+  * committed version interval or the drop and writes its own path —
+  * `run` requires the enabled tiers' paths to be pairwise disjoint — so
+  * the overlap moves the wall clock and never a result bit. A failing
+  * step is raised only after every other step has finished, with the
+  * other failures attached as suppressed.
   *
   * Every step's cost follows the DROP, never the corpus; each step is
   * idempotent per drop id (segment replace / fingerprint carry), so a
@@ -101,6 +111,8 @@ object DropCycle {
   /** Run one cycle; returns tier -> (carried, refreshed). */
   def run(lake: SnapshotLake, dropIn: DataFrame, conf: Config): Map[String, (Long, Long)] = {
     val spark = dropIn.sparkSession
+    val tiers = steps(lake, conf)
+    requireDisjoint(spark, tiers)
     val (drop, dqReport) = conf.expect match {
       case Some((rules, qpath, dropId)) =>
         require(dropId.nonEmpty && dropId.forall(c => c.isLetterOrDigit || c == '-' || c == '_'),
@@ -111,7 +123,7 @@ object DropCycle {
         // land it — or neither — between independent actions
         val ann = graft.ops.Expectations.annotate(dropIn, rules)
           .localCheckpoint(true)
-        import org.apache.spark.sql.functions.{col, size}
+        import org.apache.spark.sql.functions.size
         val dirty = ann.filter(size(col("violated")) > 0)
         val clean = ann.filter(size(col("violated")) === 0).drop("violated")
         val nDirty = dirty.count()
@@ -130,135 +142,139 @@ object DropCycle {
     }
     val before = lake.latestVersion
     lake.upsert(drop)
-    val after = lake.latestVersion.get
-    val report = scala.collection.mutable.Map[String, (Long, Long)]()
-    dqReport.foreach(report("dq") = _)
-    report("lake") = (before.getOrElse(0L), after)
-    if (conf.bloom)
-      report("bloom") = BloomIndex.refreshSnapshot(lake, lake.keyCol)
-    conf.zonemap.foreach { vcol =>
-      report("zonemap") = graft.lake.ZoneMapIndex.refreshSnapshot(lake, vcol)
-    }
-    conf.textCol.foreach { text =>
-      val idx = conf.bandIdxPath.getOrElse(lake.path + ".bandidx")
-      report("band") = DedupIndex.upsert(drop, lake.keyCol, text, idx)
-      conf.textStatsPath.foreach { statsPath =>
-        report("textstats") = graft.ops.TextIndex.upsert(drop, lake.keyCol, text, statsPath)
-      }
-      conf.postingsPath.foreach { postPath =>
-        report("postings") = graft.ops.PostingsIndex.upsert(drop, lake.keyCol, text, postPath)
-      }
-      conf.bpePath.foreach { bpePath =>
-        report("bpe") = graft.ops.BpeIndex.refresh(drop, text, bpePath)
-      }
-      conf.clfScoresPath.foreach { clfPath =>
-        report("clf") = graft.ops.ClfIndex.upsert(drop, lake.keyCol, text, clfPath)
-      }
-      conf.clusterIdxPath.foreach { clPath =>
-        import org.apache.spark.sql.functions.{coalesce, col, expr, when, xxhash64}
-        // integral surrogate for the components fixpoint: exact for ntp
-        // and numeric keys; other key shapes fall back to xxhash64
-        // (deterministic; keep ONE key shape per lake — mixed shapes
-        // could alias surrogate ids)
-        val k = col(lake.keyCol)
-        val docId = coalesce(
-          when(graft.core.NtpIds.checkNtpId(k), graft.core.NtpIds.parseNtpId(k)),
-          expr(s"try_cast(${lake.keyCol} AS BIGINT)"),
-          xxhash64(k))
-        val corpus = lake.read.select(docId.as("__doc_long"), col(text))
-        report("cluster") = graft.ops.ClusterIndex.refresh(corpus, "__doc_long", text, clPath)
-      }
-    }
-    conf.summary.foreach { case (spec, path) =>
-      val segs = before match {
-        case Some(v0) =>
-          MaterializedAgg.landChangesDrop(
-            lake.changesBetween(v0, after, preImages = true), spec, path, s"v${v0}to$after")
-        case None =>
-          MaterializedAgg.landDrop(lake.readAt(after), spec, path, s"v0to$after")
-      }
-      report("summary") = (0L, segs)
-    }
-    conf.hll.foreach { case (dims, key, path) =>
-      report("hll") = (0L, Sketches.landHllDrop(drop, dims, key, path, s"v$after"))
-    }
-    // top-k frequency segments are ADDITIVE row counts (unlike HLL's
-    // idempotent insertion), so they land from the version interval's
-    // change feed: counting only insert/update_post rows keeps
-    // re-delivered unchanged rows out (the CoW carries them, the feed
-    // cancels them). Frequency-sketch semantics: the tier counts the
-    // EVENT STREAM of arriving rows — deletes don't retract (the bound
-    // invariant is over what was counted; rebuild the path for
-    // current-state frequencies after purges)
-    conf.topk.foreach { case (dims, key, k, path) =>
-      val src = before match {
-        case Some(v0) => lake.changesBetween(v0, after)
-          .filter(org.apache.spark.sql.functions.col("change_type")
-            .isin("insert", "update_post"))
-        case None => lake.readAt(after)
-      }
-      report("topk") = (0L, Sketches.landTopKDrop(src, dims, key, k, path, s"v$after"))
-    }
-    // quantile summaries ride the same interval feed as top-k: the
-    // distribution of ARRIVING rows (insert/update_post), per-drop
-    // segments merged at serve; see Config.quantile for the
-    // non-retractability note
-    conf.quantile.foreach { case (dims, valueCol, k, path) =>
-      val src = before match {
-        case Some(v0) => lake.changesBetween(v0, after)
-          .filter(org.apache.spark.sql.functions.col("change_type")
-            .isin("insert", "update_post"))
-        case None => lake.readAt(after)
-      }
-      report("quantile") = (0L, Sketches.landQuantileDrop(src, dims,
-        org.apache.spark.sql.functions.col(valueCol), k, path, s"v$after"))
-    }
-    // bigram-LM counts retract through the pre-image change feed — the
-    // merged model always equals a from-scratch retrain over the
-    // current corpus, at change-feed cost
-    (conf.textCol, conf.lmPath) match {
-      case (Some(text), Some(path)) =>
-        val n = before match {
-          case Some(v0) => graft.ops.Relevance.landLmChangesDrop(
-            lake.changesBetween(v0, after, preImages = true),
-            lake.keyCol, text, path, s"v${v0}to$after")
-          case None => graft.ops.Relevance.landLmDrop(
-            lake.readAt(after), lake.keyCol, text, path, s"v0to$after")
-        }
-        report("lm") = (0L, n)
-      case _ => ()
-    }
-    // per-domain token totals ride the same pre-image feed (a signed
-    // summable table like the LM's) — the domain-budget cut list is
-    // then a serve-time read of the merged totals
-    (conf.textCol, conf.domainTokens) match {
-      case (Some(text), Some((urlCol, path))) =>
-        val n = before match {
-          case Some(v0) => graft.ops.Curation.landDomainTokenChangesDrop(
-            lake.changesBetween(v0, after, preImages = true),
-            text, urlCol, path, s"v${v0}to$after")
-          case None => graft.ops.Curation.landDomainTokenDrop(
-            lake.readAt(after), text, urlCol, path, s"v0to$after")
-        }
-        report("domains") = (0L, n)
-      case _ => ()
-    }
-    // DSIR bucket counts ride the same pre-image feed (the data-selection
-    // model is a summable count table exactly like the LM's)
-    (conf.textCol, conf.dsir) match {
-      case (Some(text), Some((targetPred, path))) =>
-        val n = before match {
-          case Some(v0) => graft.ops.Curation.landDsirChangesDrop(
-            lake.changesBetween(v0, after, preImages = true),
-            lake.keyCol, text, targetPred, path, s"v${v0}to$after")
-          case None => graft.ops.Curation.landDsirDrop(
-            lake.readAt(after), lake.keyCol, text, targetPred, path, s"v0to$after")
-        }
-        report("dsir") = (0L, n)
-      case _ => ()
-    }
-    report.toMap
+    val committed = Committed(lake, drop, before, lake.latestVersion.get)
+    runSteps(tiers, committed) ++ dqReport.map("dq" -> _) +
+      ("lake" -> ((before.getOrElse(0L), committed.after)))
   }
+
+  /** What every post-commit step reads: the (clean) drop and the
+    * committed version interval `before` -> `after` of the lake.
+    */
+  private final case class Committed(lake: SnapshotLake, drop: DataFrame,
+                                     before: Option[Long], after: Long) {
+    /** Rows that ARRIVED in the interval (insert/update_post), or the
+      * whole first version.
+      */
+    def arriving: DataFrame = before match {
+      case Some(v0) => lake.changesBetween(v0, after)
+          .filter(col("change_type").isin("insert", "update_post"))
+      case None => lake.readAt(after)
+    }
+
+    /** A signed-segment tier: `changes` over the interval's pre-image
+      * change feed, or `full` over the first version, with the
+      * interval's segment id.
+      */
+    def retractable(full: (DataFrame, String) => Long,
+                    changes: (DataFrame, String) => Long): Long = before match {
+      case Some(v0) =>
+        changes(lake.changesBetween(v0, after, preImages = true), s"v${v0}to$after")
+      case None => full(lake.readAt(after), s"v0to$after")
+    }
+  }
+
+  /** One tier of a cycle: its report name, the one path it writes, and
+    * its body over the cycle's input.
+    */
+  private final case class Step[A](tier: String, path: String, body: A => (Long, Long))
+
+  /** The enabled post-commit tiers of `conf`, in report order. */
+  private def steps(lake: SnapshotLake, conf: Config): Seq[Step[Committed]] = {
+    val key = lake.keyCol
+    def step(tier: String, path: String)(body: Committed => (Long, Long)) = Step(tier, path, body)
+    def seg(tier: String, path: String)(n: Committed => Long) = step(tier, path)(c => (0L, n(c)))
+    val textTiers = conf.textCol.toSeq.flatMap { text =>
+      val bandIdx = conf.bandIdxPath.getOrElse(lake.path + ".bandidx")
+      Seq(step("band", bandIdx)(c => DedupIndex.upsert(c.drop, key, text, bandIdx))) ++
+        conf.textStatsPath.map(p => step("textstats", p)(
+          c => graft.ops.TextIndex.upsert(c.drop, key, text, p))) ++
+        conf.postingsPath.map(p => step("postings", p)(
+          c => graft.ops.PostingsIndex.upsert(c.drop, key, text, p))) ++
+        conf.bpePath.map(p => step("bpe", p)(c => graft.ops.BpeIndex.refresh(c.drop, text, p))) ++
+        conf.clfScoresPath.map(p => step("clf", p)(
+          c => graft.ops.ClfIndex.upsert(c.drop, key, text, p))) ++
+        conf.clusterIdxPath.map(p => step("cluster", p)(c => {
+          import org.apache.spark.sql.functions.{coalesce, expr, when, xxhash64}
+          // integral surrogate for the components fixpoint: exact for ntp
+          // and numeric keys; other key shapes fall back to xxhash64
+          // (deterministic; keep ONE key shape per lake — mixed shapes
+          // could alias surrogate ids)
+          val k = col(key)
+          val docId = coalesce(
+            when(graft.core.NtpIds.checkNtpId(k), graft.core.NtpIds.parseNtpId(k)),
+            expr(s"try_cast($key AS BIGINT)"),
+            xxhash64(k))
+          val corpus = lake.readAt(c.after).select(docId.as("__doc_long"), col(text))
+          graft.ops.ClusterIndex.refresh(corpus, "__doc_long", text, p)
+        })) ++
+        // bigram-LM counts retract through the pre-image change feed — the
+        // merged model always equals a from-scratch retrain over the
+        // current corpus, at change-feed cost
+        conf.lmPath.map(p => seg("lm", p)(_.retractable(
+          graft.ops.Relevance.landLmDrop(_, key, text, p, _),
+          graft.ops.Relevance.landLmChangesDrop(_, key, text, p, _)))) ++
+        // per-domain token totals ride the same pre-image feed (a signed
+        // summable table like the LM's) — the domain-budget cut list is
+        // then a serve-time read of the merged totals
+        conf.domainTokens.map { case (url, p) => seg("domains", p)(_.retractable(
+          graft.ops.Curation.landDomainTokenDrop(_, text, url, p, _),
+          graft.ops.Curation.landDomainTokenChangesDrop(_, text, url, p, _))) } ++
+        // DSIR bucket counts ride the same pre-image feed (the data-selection
+        // model is a summable count table exactly like the LM's)
+        conf.dsir.map { case (pred, p) => seg("dsir", p)(_.retractable(
+          graft.ops.Curation.landDsirDrop(_, key, text, pred, p, _),
+          graft.ops.Curation.landDsirChangesDrop(_, key, text, pred, p, _))) }
+    }
+    Seq(
+      Option.when(conf.bloom)(step("bloom", BloomIndex.snapSidecar(lake.path))(
+        _ => BloomIndex.refreshSnapshot(lake, key))),
+      conf.zonemap.map(v => step("zonemap", graft.lake.ZoneMapIndex.snapSidecar(lake.path, v))(
+        _ => graft.lake.ZoneMapIndex.refreshSnapshot(lake, v)))).flatten ++
+      textTiers ++ Seq(
+        conf.summary.map { case (spec, p) => seg("summary", p)(_.retractable(
+          MaterializedAgg.landDrop(_, spec, p, _),
+          MaterializedAgg.landChangesDrop(_, spec, p, _))) },
+        conf.hll.map { case (dims, k, p) => seg("hll", p)(c =>
+          Sketches.landHllDrop(c.drop, dims, k, p, s"v${c.after}")) },
+        // top-k frequency segments are ADDITIVE row counts (unlike HLL's
+        // idempotent insertion), so they land from the version interval's
+        // change feed: counting only insert/update_post rows keeps
+        // re-delivered unchanged rows out (the CoW carries them, the feed
+        // cancels them). Frequency-sketch semantics: the tier counts the
+        // EVENT STREAM of arriving rows — deletes don't retract (the bound
+        // invariant is over what was counted; rebuild the path for
+        // current-state frequencies after purges)
+        conf.topk.map { case (dims, k, n, p) => seg("topk", p)(c =>
+          Sketches.landTopKDrop(c.arriving, dims, k, n, p, s"v${c.after}")) },
+        // quantile summaries ride the same interval feed as top-k: the
+        // distribution of ARRIVING rows, per-drop segments merged at
+        // serve; see Config.quantile for the non-retractability note
+        conf.quantile.map { case (dims, v, k, p) => seg("quantile", p)(c =>
+          Sketches.landQuantileDrop(c.arriving, dims, col(v), k, p, s"v${c.after}")) }
+      ).flatten
+  }
+
+  /** Steps run concurrently, so no two may write the same tree: every
+    * enabled tier's path must be neither equal to nor nested in another's.
+    */
+  private def requireDisjoint(spark: SparkSession, steps: Seq[Step[_]]): Unit = {
+    val hadoop = spark.sparkContext.hadoopConfiguration
+    val roots = steps.map { s =>
+      val p = new org.apache.hadoop.fs.Path(s.path)
+      s.tier -> (p.getFileSystem(hadoop).makeQualified(p).toString.stripSuffix("/") + "/")
+    }
+    val clashes = roots.combinations(2).collect {
+      case Seq((t1, a), (t2, b)) if a.startsWith(b) || b.startsWith(a) => s"$t1 ($a) and $t2 ($b)"
+    }.toSeq
+    require(clashes.isEmpty,
+      s"concurrent drop tiers must write disjoint paths: ${clashes.mkString("; ")}")
+  }
+
+  /** Run every step at once on `in` and wait for all of them (a failure
+    * is raised only after every step has ended); tier -> its counts.
+    */
+  private def runSteps[A](steps: Seq[Step[A]], in: A): Map[String, (Long, Long)] =
+    steps.map(_.tier).zip(Overlap.all(steps.map(s => () => s.body(in)))).toMap
 
   /** The embeddings-side twin of [[run]]: maintain the persisted IVF-SQ8
     * index for a drop of (re)embedded documents. Thin by design — the
@@ -269,7 +285,8 @@ object DropCycle {
     * (carried, refreshed) reporting as the text tiers. Requires the
     * index to exist (codebook pinned at [[graft.ops.SimilarityIndex
     * .build]] — refresh NEVER retrains, so assignments stay comparable
-    * across drops).
+    * across drops). Its tiers run concurrently on disjoint paths, like
+    * [[run]]'s post-commit steps.
     */
   def runEmbeddings(embBatch: DataFrame, idCol: String, vecCol: String,
                     indexPath: String,
@@ -292,21 +309,41 @@ object DropCycle {
                     // ([[graft.ops.ImiPqIndex.upsert]]) — all three
                     // serving tiers stay on one drop cadence
                     imiPqIndexPath: Option[String] = None): Map[String, (Long, Long)] = {
-    val report = scala.collection.mutable.Map[String, (Long, Long)]()
-    report("simidx") = graft.ops.SimilarityIndex.upsert(embBatch, idCol, vecCol, indexPath)
-    pqIndexPath.foreach { pqPath =>
-      report("pqidx") = graft.ops.PqIndex.upsert(embBatch, idCol, vecCol, pqPath)
-    }
-    imiPqIndexPath.foreach { imiPath =>
-      report("imipqidx") = graft.ops.ImiPqIndex.upsert(embBatch, idCol, vecCol, imiPath)
-    }
-    pca.foreach { case (path, dim, dropId) =>
-      val n = graft.ops.PcaIndex.landDrop(embBatch, vecCol, dim, path, dropId)
-      val r = pcaRetract.map(old =>
-        graft.ops.PcaIndex.landDrop(old, vecCol, dim, path, s"$dropId-retract", sign = -1))
-        .getOrElse(0L)
-      report("pca") = (r, n)
-    }
-    report.toMap
+    val tiers = embeddingSteps(indexPath, pca, pqIndexPath, imiPqIndexPath)
+    requireDisjoint(embBatch.sparkSession, tiers)
+    runSteps(tiers, Embeddings(embBatch, idCol, vecCol, pcaRetract))
   }
+
+  /** Fails unless [[runEmbeddings]]' tiers for these paths write
+    * pairwise disjoint trees, without running any of them: a caller that
+    * commits a drop first (the CLI's `drop`) checks them before it.
+    */
+  def requireEmbeddingPaths(spark: SparkSession, indexPath: String,
+                            pca: Option[(String, Int, String)] = None,
+                            pqIndexPath: Option[String] = None,
+                            imiPqIndexPath: Option[String] = None): Unit =
+    requireDisjoint(spark, embeddingSteps(indexPath, pca, pqIndexPath, imiPqIndexPath))
+
+  /** An embeddings drop: the batch, its columns, and the old vectors to retract. */
+  private final case class Embeddings(batch: DataFrame, idCol: String, vecCol: String,
+                                      pcaRetract: Option[DataFrame])
+
+  /** The enabled embeddings tiers, in report order. */
+  private def embeddingSteps(indexPath: String, pca: Option[(String, Int, String)],
+                             pqIndexPath: Option[String],
+                             imiPqIndexPath: Option[String]): Seq[Step[Embeddings]] =
+    Seq(
+      Some(Step[Embeddings]("simidx", indexPath,
+        e => graft.ops.SimilarityIndex.upsert(e.batch, e.idCol, e.vecCol, indexPath))),
+      pqIndexPath.map(p => Step[Embeddings]("pqidx", p,
+        e => graft.ops.PqIndex.upsert(e.batch, e.idCol, e.vecCol, p))),
+      imiPqIndexPath.map(p => Step[Embeddings]("imipqidx", p,
+        e => graft.ops.ImiPqIndex.upsert(e.batch, e.idCol, e.vecCol, p))),
+      pca.map { case (path, dim, dropId) => Step[Embeddings]("pca", path, e => {
+        val n = graft.ops.PcaIndex.landDrop(e.batch, e.vecCol, dim, path, dropId)
+        val r = e.pcaRetract.map(old =>
+          graft.ops.PcaIndex.landDrop(old, e.vecCol, dim, path, s"$dropId-retract", sign = -1))
+          .getOrElse(0L)
+        (r, n)
+      }) }).flatten
 }

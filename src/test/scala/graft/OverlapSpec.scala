@@ -1,0 +1,75 @@
+package graft
+
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.Overlap
+
+class OverlapSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  /** (job group, job tags) of every job `body` starts. */
+  private def jobsOf(body: => Unit): Seq[(String, String)] = {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit =
+        seen.add((String.valueOf(job.properties.getProperty("spark.jobGroup.id")),
+          String.valueOf(job.properties.getProperty("spark.job.tags"))))
+    }
+    SpecBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; SpecBus.drain(sc) } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
+  test("par carries the caller's job group and tags onto pool threads created under another group") {
+    val sc = spark.sparkContext
+    // pool threads first created (and so inheriting) under group B
+    sc.setJobGroup("B", "stale group")
+    val gate = new CountDownLatch(1)
+    val warm = (1 to 4).map(_ => Overlap.par(gate.await()))
+    gate.countDown(); warm.foreach(Overlap.await(_))
+    try {
+      sc.setJobGroup("A", "caller group")
+      sc.addJobTag("cycle-a")
+      val underA = jobsOf {
+        val chains = Seq(
+          Overlap.par((1 to 3).foreach(i => spark.range(100L * i).repartition(2).count())),
+          Overlap.par(Overlap.await(Overlap.par(
+            (1 to 3).foreach(i => spark.range(50L * i).repartition(2).count())))))
+        chains.foreach(Overlap.await(_))
+      }
+      assert(underA.size >= 6, s"expected the chains' jobs, saw $underA")
+      assert(underA.forall(_._1 == "A"), s"every pooled job must carry group A: $underA")
+      assert(underA.forall(_._2.contains("cycle-a")), s"every pooled job must carry the tag: $underA")
+      sc.clearJobGroup(); sc.removeJobTag("cycle-a")
+      val afterwards = jobsOf(Overlap.await(Overlap.par(spark.range(10).count())))
+      assert(afterwards.nonEmpty && afterwards.forall(_._1 == "null"),
+        s"a caller without a group must not inherit a stale one: $afterwards")
+      assert(afterwards.forall(!_._2.contains("cycle-a")), s"stale tag leaked: $afterwards")
+    } finally { sc.clearJobGroup(); sc.removeJobTag("cycle-a") }
+  }
+
+  test("all waits for every step, then raises the first failure with the others suppressed") {
+    val finished = new AtomicInteger(0)
+    val first = new RuntimeException("first")
+    val second = new IllegalStateException("second")
+    val err = intercept[RuntimeException](Overlap.all(Seq(
+      () => { Thread.sleep(300); finished.incrementAndGet() },
+      () => throw first,
+      () => { Thread.sleep(600); finished.incrementAndGet() },
+      () => throw second)))
+    assert(err eq first)
+    assert(err.getSuppressed.toSeq == Seq(second))
+    assert(finished.get == 2, "both slow steps must have ended before the raise")
+    assert(Overlap.all(Seq(() => "a", () => "b", () => "c")) == Seq("a", "b", "c"))
+    assert(Overlap.all(Seq.empty[() => Int]).isEmpty)
+  }
+}
