@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Benchmark main: times every SparkEntry query at the scale factor in
@@ -399,17 +399,17 @@ object Bench {
         idx => { val lake = new graft.lake.LakeTable(spark, s"$idx/lake", "doc_id")
           lake.overwrite(docsSlim.repartition(8, col("doc_id"))); () },
         idx => { new graft.lake.LakeTable(spark, s"$idx/lake", "doc_id")
-          .buildBloomIndex(expectedItemsPerFile = 1L << 16, fpp = 0.001); () },
+          .buildBloomIndex(); () },
         idx => new graft.lake.LakeTable(spark, s"$idx/lake", "doc_id")
           .lookupKeys(Seq("3", "7", "11", "999983"))._1.count()),
       run("q_snapshot_point_lookup")(
         idx => { val lake = snapLake(idx, "doc_id")
           lake.overwrite(docsSlim.repartition(8, col("doc_id")))
-          graft.lake.BloomIndex.refreshSnapshot(lake, "doc_id", 1L << 16, 0.001); () },
+          graft.lake.BloomIndex.refreshSnapshot(lake, "doc_id"); () },
         idx => { val lake = snapLake(idx, "doc_id")
           lake.upsert(docsSlim.filter(col("doc_id") % 97 === 0)
             .withColumn("n_chars", col("n_chars") + lit(1L)))
-          graft.lake.BloomIndex.refreshSnapshot(lake, "doc_id", 1L << 16, 0.001); () },
+          graft.lake.BloomIndex.refreshSnapshot(lake, "doc_id"); () },
         idx => graft.lake.BloomIndex.lookupSnapshot(snapLake(idx, "doc_id"), "doc_id",
           Seq("3", "7", "97", "999983"))._1.count()),
       run("q_lake_time_travel")(
@@ -728,15 +728,12 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY") // debug: regex filter on query names
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(n.matches) }
-    def timeSuite(): Seq[(String, Double)] = selected.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // a failed query must be LOUD on stderr: the swallowed-throw timing
-      // (~2 ms of plan build) reads as a spectacular speedup in the JSON
-      // otherwise (this bit round 13: a whole family "ran" in 2 ms)
-      try { fn(spark, sfDir).count() } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
+    // two full passes, min-of-two per query: back-to-back runs of
+    // identical code measure ±20% host-contention variance (bench
+    // methodology notes), and the min is the better plan-cost estimator —
+    // noise only ever ADDS time. Both raw passes are carried in the JSON
+    // so regression analysis can see the spread.
+    val timed = timeQueries(spark, sfDir, selected, passes = 2) {
       // Session hygiene between queries — round-2 lesson: leftover cached
       // frames AND checkpoint/persisted RDDs (clearCache misses the
       // latter) compound in the old gen and made later queries run
@@ -758,17 +755,8 @@ object Bench {
       // next streaming query restarts both from empty.
       org.apache.spark.sql.execution.streaming.state.StateStore.stop()
       System.gc()
-      name -> dt
     }
-    // two full passes, min-of-two per query: back-to-back runs of
-    // identical code measure ±20% host-contention variance (bench
-    // methodology notes), and the min is the better plan-cost estimator —
-    // noise only ever ADDS time. Both raw passes are carried in the JSON
-    // so regression analysis can see the spread.
-    val runs = Seq(timeSuite(), timeSuite())
-    val results = runs.head.map(_._1).map { name =>
-      name -> runs.map(_.toMap.apply(name)).min
-    }
+    val results = timed.best
     def fmt(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val qs = fmt(results)
@@ -779,7 +767,9 @@ object Bench {
     // integration journeys carry. Per-tier thresholds live with the
     // consumer; the JSON just separates the subtotals.
     val (integ, pure) = results.partition(r => SparkEntry.integrationQueries(r._1))
-    val runsJson = runs.map(fmt).mkString("[", ",", "]")
+    val runsJson = timed.passes.map(fmt).mkString("[", ",", "]")
+    val errorsJson = timed.errors.map { case (k, e) => "\"" + k + "\":\"" + e + "\"" }
+      .mkString("{", ",", "}")
     // per-STAGE walls for the persisted-index journeys (round-17): the
     // journey totals above conflate scratch-index build, churn refresh
     // and the probe; the number a 100 TB operator actually cares about
@@ -791,7 +781,7 @@ object Bench {
         "\"stages\":" + stageJourneys(spark, sfDir).map { case (n, j) =>
           "\"" + n + "\":" + j }.mkString("{", ",", "}") + ","
       else ""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","pure_sec":${pure.map(_._2).sum},"integration_sec":${integ.map(_._2).sum},"pure_n":${pure.size},"integration_n":${integ.size},$stagesJson"queries":$qs,"runs":$runsJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","pure_sec":${pure.map(_._2).sum},"integration_sec":${integ.map(_._2).sum},"pure_n":${pure.size},"integration_n":${integ.size},"errors":$errorsJson,$stagesJson"queries":$qs,"runs":$runsJson,"sf":"$sfDir"}"""
     println(line)
     // also land the line in a file: stdout is shared with Spark/Ivy log
     // noise and the driver's scrape has come back "parsed": null before
@@ -799,5 +789,46 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
+    if (timed.errors.nonEmpty) {
+      System.err.println(s"[bench] ${timed.errors.size} queries FAILED: " +
+        timed.errors.map(_._1).mkString(", "))
+      sys.exit(1)
+    }
+  }
+
+  /** Per-query timings of `passes` full passes over `queries`: `best`
+    * is each query's min over the passes, `passes` the raw passes, and
+    * `errors` (name -> exception class) every query that threw in any
+    * pass. A failed query is reported, never timed: its few ms of plan
+    * building would read as a spectacular speedup in the totals.
+    */
+  private[graft] final case class Timed(best: Seq[(String, Double)],
+                                        passes: Seq[Seq[(String, Double)]],
+                                        errors: Seq[(String, String)])
+
+  /** Time each of `queries` (materialized by `count()`) in order, `passes`
+    * times, running `between` after every query. A throw is printed to
+    * stderr with its query's name and recorded in [[Timed.errors]].
+    */
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+                                 queries: Seq[(String, (SparkSession, String) => DataFrame)],
+                                 passes: Int)(between: => Unit): Timed = {
+    val runs = Seq.fill(passes)(queries.map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      val r: Either[String, Double] =
+        try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+          Left(e.getClass.getName)
+        }
+      between
+      name -> r
+    })
+    val errors = queries.map(_._1).flatMap { name =>
+      runs.flatMap(_.collectFirst { case (`name`, Left(e)) => name -> e }).headOption
+    }
+    val failed = errors.map(_._1).toSet
+    val ok = runs.map(_.collect { case (name, Right(t)) if !failed(name) => name -> t })
+    Timed(ok.head.map { case (name, _) => name -> ok.map(_.toMap.apply(name)).min }, ok, errors)
   }
 }

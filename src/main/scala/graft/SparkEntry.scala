@@ -898,7 +898,7 @@ object SparkEntry {
     // W1: contiguous per-group id assignment without a global sort
     "ntp_assign_ids" -> ((s, dir) => {
       val grp0 = versionsDf(s, dir).filter(col("ok") % 7 =!= 0).select(col("ok"))
-      graft.versions.IdAssign.assignSequential(grp0, "ok", 1L)
+      graft.versions.IdAssign.assignSequential(grp0, "ok", 1L)._1
         .select(col("ok"), NtpIds.setNtpId(col("seq")).as("_id"))
         .orderBy(col("ok"))
     }),
@@ -943,7 +943,7 @@ object SparkEntry {
         array_join(col("updated_arr"), ",").as("timeline"),
         col("status").as("status_out"), col("ok").as("ok_out"))
       val wm = exi.agg(max(NtpIds.parseNtpId(col("_id")))).collect().head.getLong(0)
-      val freshOut = graft.versions.IdAssign.assignSequential(fresh, "ok", wm + 1)
+      val freshOut = graft.versions.IdAssign.assignSequential(fresh, "ok", wm + 1)._1
         .select(NtpIds.setNtpId(col("seq")).as("_id"), col("nk"), lit("fresh").as("origin"),
           col("updated").as("timeline"), col("status").as("status_out"), col("ok").as("ok_out"))
       mergedOut.unionByName(freshOut).orderBy(col("_id"))
@@ -1211,7 +1211,7 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_bloom_q").toString
       val lake = new graft.lake.LakeTable(s, tmp + "/lake", "doc_id")
       lake.overwrite(docs.repartition(8, col("doc_id")))
-      lake.buildBloomIndex(expectedItemsPerFile = 1L << 16, fpp = 0.001)
+      lake.buildBloomIndex()
       val (rows, _) = lake.lookupKeys(Seq("3", "7", "11", "999983"))
       val out = rows
         .select(col("doc_id").cast("long").as("doc_id"), col("source"),
@@ -1238,10 +1238,10 @@ object SparkEntry {
       val tmp = java.nio.file.Files.createTempDirectory("graft_snapbloom_q").toString
       val lake = new graft.lake.SnapshotLake(s, tmp + "/lake", "doc_id")
       lake.overwrite(docs.repartition(8, col("doc_id")))                     // v1
-      graft.lake.BloomIndex.refreshSnapshot(lake, "doc_id", 1L << 16, 0.001)
+      graft.lake.BloomIndex.refreshSnapshot(lake, "doc_id")
       lake.upsert(docs.filter(col("doc_id") % 97 === 0)                      // v2 (CoW)
         .withColumn("n_chars", col("n_chars") + lit(1L)))
-      graft.lake.BloomIndex.refreshSnapshot(lake, "doc_id", 1L << 16, 0.001) // churn-only
+      graft.lake.BloomIndex.refreshSnapshot(lake, "doc_id") // churn-only
       val (rows, _) = graft.lake.BloomIndex.lookupSnapshot(lake, "doc_id",
         Seq("3", "7", "97", "999983"))
       val out = rows

@@ -1,7 +1,11 @@
 package graft.lake
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Per-file bloom-filter index for key point-lookups on a parquet lake.
@@ -16,11 +20,13 @@ import org.apache.spark.util.sketch.BloomFilter
   * lookup scans the compact index (one row per data file), keeps the
   * files whose filter might contain the key, and opens only those.
   *
-  * Scale math at 100 TB: ~800k files of 128 MB; a 1M-key / 0.1%-fpp
-  * filter is ~1.7 MB, so the index is ~0.001 of the lake. A point
-  * lookup reads the index plus (true files + fpp * 800k ≈ a few
-  * hundred) data files instead of 800k — and the index scan is itself
-  * a distributed filter, so nothing driver-side grows with the lake.
+  * Scale math at 100 TB: ~800k files of 128 MB. Each file's filter is
+  * sized from the row count in its own parquet footer at 0.1% fpp,
+  * ~14.4 bits per row, so the index costs ~1.8 bytes per row of the
+  * lake whatever the file sizes. A point lookup reads the index plus
+  * (true files + fpp * 800k ≈ a few hundred) data files instead of
+  * 800k — and the index scan is itself a distributed filter, so
+  * nothing driver-side grows with the lake.
   *
   * Freshness is handled structurally, not by rebuild discipline: the
   * index records each file's length, and lookups treat data files that
@@ -31,7 +37,10 @@ import org.apache.spark.util.sketch.BloomFilter
   *
   * The build is one `groupByKey(file).mapGroups` — typed per-group
   * aggregation (a maintenance job, not a query-surface UDF); each group
-  * is exactly one file's keys, so memory is bounded by the filter size.
+  * is exactly one file's keys, so memory is bounded by one right-sized
+  * filter. Sidecars landed while every filter was sized for 2^20 keys
+  * stay correct: refreshes carry their rows by (file, len) until those
+  * files vanish, and [[build]] re-sizes every row.
   */
 object BloomIndex {
 
@@ -45,25 +54,40 @@ object BloomIndex {
   private def deser(bytes: Array[Byte]): BloomFilter =
     BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
 
-  /** Bloom rows (file, bloom, nkeys) for the files `df` scans — one
-    * typed per-group fold, each group exactly one file's keys, memory
-    * bounded by the filter size.
+  /** False-positive rate of every filter. */
+  private val Fpp = 0.001
+
+  /** Bloom rows (file, bloom, nkeys) for the files `df` scans (a plain
+    * scan of whole files) — one typed per-group fold, each group exactly
+    * one file's keys. The task blooming a file sizes its filter from the
+    * row count in that file's parquet footer: a file has at least as
+    * many rows as keys, so each filter keeps [[Fpp]], and a group's
+    * memory is that one filter.
     */
-  private def bloomRows(df: org.apache.spark.sql.DataFrame, keyCol: String,
-                        expectedItemsPerFile: Long, fpp: Double)
-      : org.apache.spark.sql.DataFrame = {
+  private def bloomRows(df: DataFrame, keyCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
     df.select(input_file_name().as("file"), col(keyCol).cast("string").as("k"))
       .as[(String, String)]
       .groupByKey(_._1)
       .mapGroups { (file, rows) =>
-        val bf = BloomFilter.create(expectedItemsPerFile, fpp)
+        val bf = BloomFilter.create(math.max(1L, footerRows(file, conf.value.value)), Fpp)
         var n = 0L
         rows.foreach { r => if (r._2 != null) bf.putString(r._2); n += 1 }
         (file, ser(bf), n)
       }
       .toDF("file", "bloom", "nkeys")
+  }
+
+  /** Row count in the parquet footer of `file` (an `input_file_name()`
+    * URI, decoded as [[readablePaths]] does). Reads the footer only.
+    */
+  private def footerRows(file: String, conf: Configuration): Long = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(new java.net.URI(file)), conf))
+    try reader.getRecordCount finally reader.close()
   }
 
   /** URI strings (Path.toUri.toString, the index's join key form) fed
@@ -76,15 +100,13 @@ object BloomIndex {
     uris.map(u => new org.apache.hadoop.fs.Path(new java.net.URI(u)).toString)
 
   /** Build (or rebuild) the index sidecar: one row per data file with
-    * the file's length and a bloom filter of its `keyCol` values.
-    * `expectedItemsPerFile` sizes the bitmap — over-provisioning only
-    * costs space; under-provisioning degrades fpp, never correctness.
+    * the file's length and a bloom filter of its `keyCol` values, sized
+    * from the file's row count.
     */
-  def build(table: LakeTable, path: String, keyCol: String,
-            expectedItemsPerFile: Long = 1L << 20, fpp: Double = 0.001): Long = {
+  def build(table: LakeTable, path: String, keyCol: String): Long = {
     val spark = table.read.sparkSession
     import spark.implicits._
-    val perFile = bloomRows(table.read, keyCol, expectedItemsPerFile, fpp)
+    val perFile = bloomRows(table.read, keyCol)
     // join the current listing for each file's length (freshness token);
     // the listing is driver-side but only touches paths, never data
     val lens = fileLengths(spark, path).toSeq.toDF("file", "len")
@@ -99,15 +121,13 @@ object BloomIndex {
     * write churn, not lake size — an ingest touching 1% of the buckets
     * re-blooms 1% of the files. Returns (keptRows, rebuiltRows).
     */
-  def refresh(table: LakeTable, path: String, keyCol: String,
-              expectedItemsPerFile: Long = 1L << 20, fpp: Double = 0.001)
-      : (Long, Long) = {
+  def refresh(table: LakeTable, path: String, keyCol: String): (Long, Long) = {
     val spark = table.read.sparkSession
     import spark.implicits._
     val idxPath = new org.apache.hadoop.fs.Path(sidecar(path))
     val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(idxPath))
-      return (0L, build(table, path, keyCol, expectedItemsPerFile, fpp))
+      return (0L, build(table, path, keyCol))
     val live = fileLengths(spark, path)
     val old = spark.read.parquet(idxPath.toString)
     val lens = live.toSeq.toDF("file", "len2")
@@ -128,7 +148,7 @@ object BloomIndex {
       else bloomRows(
         spark.read.option("basePath", path).schema(table.read.schema)
           .parquet(readablePaths(freshFiles): _*),
-        keyCol, expectedItemsPerFile, fpp)
+        keyCol)
         .join(live.toSeq.toDF("file", "len"), "file")
         .select(col("file"), col("bloom"), col("nkeys"), col("len"))
     // one staged landing: a crash leaves the old index, the new one, or
@@ -188,7 +208,7 @@ object BloomIndex {
   /** The candidate-file pass shared by the directory and snapshot tiers:
     * one distributed scan evaluates might-contain next to the bloom
     * bytes; only (path, len, hit) triples reach the driver — bytes per
-    * file, not the megabyte filters. A live file missing from the index
+    * file, not the filters. A live file missing from the index
     * (or length-drifted) is an unconditional candidate — never a wrong
     * answer, only less selective.
     */
@@ -248,9 +268,7 @@ object BloomIndex {
     * file so time-travel lookups stay selective. Cost is proportional to
     * write churn, never lake size. Returns (keptRows, bloomedRows).
     */
-  def refreshSnapshot(lake: SnapshotLake, keyCol: String,
-                      expectedItemsPerFile: Long = 1L << 20, fpp: Double = 0.001)
-      : (Long, Long) = {
+  def refreshSnapshot(lake: SnapshotLake, keyCol: String): (Long, Long) = {
     val spark = lake.spark
     import spark.implicits._
     val versions = lake.completeVersions
@@ -284,8 +302,7 @@ object BloomIndex {
         .select(col("file")).as[String].collect().toSeq.sorted
     val rebuilt =
       if (freshFiles.isEmpty) kept.limit(0)
-      else bloomRows(spark.read.schema(schema).parquet(readablePaths(freshFiles): _*),
-        keyCol, expectedItemsPerFile, fpp)
+      else bloomRows(spark.read.schema(schema).parquet(readablePaths(freshFiles): _*), keyCol)
         .join(lens.withColumnRenamed("len2", "len"), "file")
         .select(col("file"), col("bloom"), col("nkeys"), col("len"))
     // (kept, rebuilt) observed on the one staged landing, as in [[refresh]]

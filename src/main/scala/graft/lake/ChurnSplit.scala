@@ -99,7 +99,8 @@ object ChurnSplit {
   /** Land kept ∪ fresh at `path` in one staged write, after the
     * uncounted `carried` rows if any, and return `n` over the kept and
     * the fresh branch of that write. [[land]]'s body, and the landing of
-    * index rows not split here ([[BloomIndex]]'s (file, len) rows).
+    * index rows not split here ([[BloomIndex]]'s (file, len) rows, and
+    * [[graft.ops.DedupIndex.build]]'s, all fresh).
     */
   def landRows(spark: SparkSession, path: String, kept: DataFrame, fresh: DataFrame,
                n: Column = count(lit(1)),

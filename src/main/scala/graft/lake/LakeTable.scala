@@ -496,16 +496,12 @@ class LakeTable(spark: SparkSession, path: String, keyCol: String,
     * one only widens the candidate set), so builds can run beside
     * readers freely.
     */
-  def buildBloomIndex(expectedItemsPerFile: Long = 1L << 20,
-                      fpp: Double = 0.001): Long =
-    BloomIndex.build(this, path, keyCol, expectedItemsPerFile, fpp)
+  def buildBloomIndex(): Long = BloomIndex.build(this, path, keyCol)
 
   /** Incrementally refresh the bloom sidecar after writes: re-bloom
     * only new/changed files, keep the rest. Returns (kept, rebuilt).
     */
-  def refreshBloomIndex(expectedItemsPerFile: Long = 1L << 20,
-                        fpp: Double = 0.001): (Long, Long) =
-    BloomIndex.refresh(this, path, keyCol, expectedItemsPerFile, fpp)
+  def refreshBloomIndex(): (Long, Long) = BloomIndex.refresh(this, path, keyCol)
 
   /** Point lookup through the bloom sidecar: rows whose key is in
     * `keys`, opening only bloom-candidate (or index-unknown) files.

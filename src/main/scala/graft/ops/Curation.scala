@@ -281,7 +281,7 @@ object Curation {
     graft.versions.IdAssign.assignSequential(
         df.select(col(idCol))
           .withColumn("__h", md5(concat(lit(seed), col(idCol).cast("string")))),
-        "__h", 0L)
+        "__h", 0L)._1
       .select(col(idCol), col("seq").as("pos"),
         pmod(col("seq"), lit(nShards.toLong)).as("shard"))
   }

@@ -63,17 +63,12 @@ object DedupIndex {
   /** Build the index from scratch at `path`. Returns indexed doc count. */
   def build(docs: DataFrame, idCol: String, textCol: String, path: String,
             bands: Int = 4, rowsPerBand: Int = 2): Long = {
-    val spark = docs.sparkSession
-    // sign once into a checkpoint: the landing and the indexed-doc
-    // count both read the materialized rows, overlapped — instead of
-    // one signing pass for the write plus a full re-read of the landed
-    // table for the count (guide §2.4/§2.6; landed content == rows by
-    // construction)
+    // one signing pass, and the indexed-doc count is observed on its
+    // landing: nothing is kept on a build, and each doc has exactly one
+    // `band <= 0` row (the [[docFps]] invariant), as in [[churn]]
     val rows = bandRows(docs, idCol, textCol, bands, rowsPerBand)
-      .localCheckpoint(true)
-    val fN = graft.core.Overlap.par(rows.select("doc").distinct().count())
-    graft.lake.Staged.land(spark, path, rows)
-    graft.core.Overlap.await(fN)
+    ChurnSplit.landRows(docs.sparkSession, path, rows.limit(0), rows,
+      count(when(col("band") <= 0, 1)))._2
   }
 
   /** Churn-proportional refresh: carry unchanged documents' rows

@@ -229,8 +229,10 @@ object IngestJob {
         overlapMerge(scoped.filter(col("obsolete_version").isNull), normalized, naturalId)
       else (null: DataFrame, normalized, null: DataFrame)
 
-    // 5. assign contiguous ids in natural-key order (W1) — fresh rows only
-    val withIds = IdAssign.assignSequential(fresh, naturalId, watermark)
+    // 5. assign contiguous ids in natural-key order (W1) — fresh rows only;
+    //    the numbering's partition counts also give the fresh-row count
+    val (numbered, nFresh) = IdAssign.assignSequential(fresh, naturalId, watermark)
+    val withIds = numbered
       .withColumn("_id", NtpIds.setNtpId(col("seq"))).drop("seq")
       .withColumn("obsolete_version", lit(null).cast("boolean"))
       .withColumn("updated_to", lit(null).cast("string"))
@@ -276,7 +278,6 @@ object IngestJob {
     // Crossing the ceiling would not fail — setNtpId formats 9 digits,
     // NtpIds.group reclassifies the row into the NEXT group, and the
     // other group's watermark scan then collides with it. Refuse loudly.
-    val nFresh = fresh.count()
     require(watermark + nFresh <= (group + 1L) * NtpIds.MinOrderMinors,
       s"id space exhausted for group $group: watermark $watermark + $nFresh fresh ids " +
         s"would cross ${(group + 1L) * NtpIds.MinOrderMinors}")
@@ -287,8 +288,8 @@ object IngestJob {
       val stateP = state
         .withColumn("grp", NtpIds.group(col("_id")))
         .withColumn("bucket", bucketOf(col(naturalId)))
-      // commit the advanced watermark; one drop-proportional count (the
-      // scoped classification, never the lake). Pre-land for an existing
+      // commit the advanced watermark (nFresh came off the numbering's
+      // partition counts; no extra job). Pre-land for an existing
       // lake (see WatermarkSidecar's crash protocol); post-land for a
       // brand-new one (writing the sidecar first would materialize the
       // table dir early and break the exists-checks in the land path).

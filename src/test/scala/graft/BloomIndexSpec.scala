@@ -22,7 +22,7 @@ class BloomIndexSpec extends AnyFunSuite {
   test("bloom lookup: row-identical to a full scan, opens far fewer files") {
     val dir = java.nio.file.Files.createTempDirectory("bloom").toFile.getAbsolutePath
     val t = mkLake(dir, 16)
-    val nIndexed = t.buildBloomIndex(expectedItemsPerFile = 4096, fpp = 0.001)
+    val nIndexed = t.buildBloomIndex()
     assert(nIndexed == 16, s"one index row per data file, got $nIndexed")
 
     val keys = Seq("doc-7", "doc-19999")
@@ -43,7 +43,7 @@ class BloomIndexSpec extends AnyFunSuite {
   test("bloom lookup stays correct when files change after the build") {
     val dir = java.nio.file.Files.createTempDirectory("bloom2").toFile.getAbsolutePath
     val t = mkLake(dir, 8)
-    t.buildBloomIndex(expectedItemsPerFile = 4096, fpp = 0.001)
+    t.buildBloomIndex()
     // land a key the index has never seen
     t.upsert(Seq(("doc-new", 123L)).toDF("k", "v"))
     val (rows, opened) = t.lookupKeys(Seq("doc-new"))
@@ -53,7 +53,7 @@ class BloomIndexSpec extends AnyFunSuite {
     // so the lookup is correct without a rebuild (just less selective)
     assert(opened >= 1)
     // a rebuild restores selectivity
-    t.buildBloomIndex(expectedItemsPerFile = 4096, fpp = 0.001)
+    t.buildBloomIndex()
     val (rows2, opened2) = t.lookupKeys(Seq("doc-new"))
     assert(rows2.count() == 1 && opened2 <= 3,
       s"rebuilt index should re-prune, opened $opened2")
@@ -66,7 +66,7 @@ class BloomIndexSpec extends AnyFunSuite {
       (col("id") % 2).cast("string").as("grp"), col("id").as("v"))
     val t = new LakeTable(spark, s"$dir/t", "k", partitionCols = Seq("grp"))
     t.overwrite(data.repartition(4, col("k")))
-    t.buildBloomIndex(expectedItemsPerFile = 4096, fpp = 0.001)
+    t.buildBloomIndex()
     def idxRows() = spark.read.parquet(s"$dir/t.bloomidx")
       .collect().map(r => (r.getAs[String]("file"),
         r.getAs[Array[Byte]]("bloom").toSeq, r.getAs[Long]("nkeys"))).toSet
@@ -74,7 +74,7 @@ class BloomIndexSpec extends AnyFunSuite {
 
     // partition-scoped upsert: only grp=1 files change
     t.upsert(Seq(("doc-new", "1", 9999L)).toDF("k", "grp", "v"))
-    val (kept, rebuilt) = t.refreshBloomIndex(expectedItemsPerFile = 4096, fpp = 0.001)
+    val (kept, rebuilt) = t.refreshBloomIndex()
     // the untouched partition's rows survive EXACTLY: one kept row per
     // grp=0 file, byte-identical to the old index
     val grp0Files = before.count(_._1.contains("grp=0"))
@@ -104,7 +104,7 @@ class BloomIndexSpec extends AnyFunSuite {
       col("id").as("v"))
     val t = new LakeTable(spark, s"$dir/t", "k", partitionCols = Seq("grp"))
     t.overwrite(data.repartition(4, col("k")))
-    t.buildBloomIndex(expectedItemsPerFile = 4096, fpp = 0.001)
+    t.buildBloomIndex()
     val (rows, opened) = t.lookupKeys(Seq("id-42"))
     val got = rows.select("k", "grp", "v").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq

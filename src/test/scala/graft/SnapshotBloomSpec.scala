@@ -28,7 +28,7 @@ class SnapshotBloomSpec extends AnyFunSuite {
 
   test("snapshot lookup: row-identical to readAt filter, opens far fewer files") {
     val lake = mkLake(tmp(), 16)
-    val (kept, bloomed) = BloomIndex.refreshSnapshot(lake, "k", 4096, 0.001)
+    val (kept, bloomed) = BloomIndex.refreshSnapshot(lake, "k")
     assert(kept == 0 && bloomed == 16, s"first refresh blooms every file, got ($kept, $bloomed)")
 
     val keys = Seq("doc-7", "doc-19999")
@@ -46,7 +46,7 @@ class SnapshotBloomSpec extends AnyFunSuite {
 
   test("CoW upsert: unrefreshed lookup stays correct; refresh re-blooms only churn") {
     val lake = mkLake(tmp(), 8)
-    BloomIndex.refreshSnapshot(lake, "k", 4096, 0.001)
+    BloomIndex.refreshSnapshot(lake, "k")
     val v1Files = lake.readManifest(1L).get.files.map(_.rel).toSet
 
     lake.upsert(Seq(("doc-7", 700L), ("doc-brand-new", 123L)).toDF("k", "v"))
@@ -60,7 +60,7 @@ class SnapshotBloomSpec extends AnyFunSuite {
     // refresh blooms ONLY the churned files: kept == carried v1 files
     val v2Files = lake.readManifest(2L).get.files.map(_.rel).toSet
     val carried = (v1Files intersect v2Files).size
-    val (kept, bloomed) = BloomIndex.refreshSnapshot(lake, "k", 4096, 0.001)
+    val (kept, bloomed) = BloomIndex.refreshSnapshot(lake, "k")
     // index retains rows for BOTH versions' live files (time travel);
     // churn = v2's new files only
     assert(bloomed == (v2Files -- v1Files).size,
@@ -76,9 +76,9 @@ class SnapshotBloomSpec extends AnyFunSuite {
 
   test("time travel lookup: pre-upsert value at v1, pruned by the same index") {
     val lake = mkLake(tmp(), 8)
-    BloomIndex.refreshSnapshot(lake, "k", 4096, 0.001)
+    BloomIndex.refreshSnapshot(lake, "k")
     lake.upsert(Seq(("doc-7", 700L)).toDF("k", "v"))
-    BloomIndex.refreshSnapshot(lake, "k", 4096, 0.001)
+    BloomIndex.refreshSnapshot(lake, "k")
 
     val (now, _) = BloomIndex.lookupSnapshot(lake, "k", Seq("doc-7"))
     assert(now.select("v").as[Long].collect().toSeq == Seq(700L))
@@ -90,13 +90,13 @@ class SnapshotBloomSpec extends AnyFunSuite {
 
   test("vacuum drops old versions; refresh sheds their index rows") {
     val lake = mkLake(tmp(), 8)
-    BloomIndex.refreshSnapshot(lake, "k", 4096, 0.001)
+    BloomIndex.refreshSnapshot(lake, "k")
     lake.upsert(Seq(("doc-7", 700L)).toDF("k", "v"))
-    BloomIndex.refreshSnapshot(lake, "k", 4096, 0.001)
+    BloomIndex.refreshSnapshot(lake, "k")
     val withHistory = spark.read.parquet(s"${lakePath(lake)}/_bloomidx").count()
 
     lake.vacuum(retainVersions = 1)
-    BloomIndex.refreshSnapshot(lake, "k", 4096, 0.001)
+    BloomIndex.refreshSnapshot(lake, "k")
     val afterVacuum = spark.read.parquet(s"${lakePath(lake)}/_bloomidx").count()
     assert(afterVacuum == lake.readManifest(lake.latestVersion.get).get.files.size.toLong,
       "post-vacuum index covers exactly the retained version's files")

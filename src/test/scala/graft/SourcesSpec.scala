@@ -51,7 +51,8 @@ class SourcesSpec extends AnyFunSuite {
 
   test("assignSequential: contiguous ids in key order, no single-partition sort (W1)") {
     val df = (1 to 1000).map(i => (i * 7) % 1001).toDF("k")  // unique, scrambled
-    val out = IdAssign.assignSequential(df, "k", startFrom = 100L, numPartitions = Some(8))
+    val (out, n) = IdAssign.assignSequential(df, "k", startFrom = 100L, numPartitions = Some(8))
+    assert(n == 1000)
     val rows = out.orderBy("seq").collect().map(r => (r.getAs[Int]("k"), r.getAs[Long]("seq")))
     assert(rows.map(_._2).toSeq == (100L until 1100L))           // contiguous
     assert(rows.map(_._1).toSeq == rows.map(_._1).sorted.toSeq)  // key order
