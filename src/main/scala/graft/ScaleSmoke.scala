@@ -1,17 +1,18 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.core.Work
 
 /** Scale smoke (round-12 verdict #2): run the three heaviest maintained
   * pipelines — the flagship versioned ingest, the persisted MinHash band
   * index, and the persisted IVF-SQ8 index — at ~sf1 (a `factor`×
   * synthetic inflation of an sf0.1 testdata dir, ≈1.5M orders ≈ TPC-H
   * sf1) and record per-phase wall time, shuffle read/write bytes and
-  * spill. sf0.1 is too small to surface skew or spill; the 100×-scale
-  * claims should rest on at least one order-of-magnitude extrapolation
-  * measured, not argued from plans alone.
+  * spill (from [[graft.core.Work]]). sf0.1 is too small to surface skew
+  * or spill; the 100×-scale claims should rest on at least one
+  * order-of-magnitude extrapolation measured, not argued from plans alone.
   *
   * Inflation is key-shifted union: copy i shifts every key by
   * i·KeySpan, shifts `o_orderdate` by i days (so versions are distinct,
@@ -30,24 +31,6 @@ import org.apache.spark.sql.functions._
   * inflation (measured wall, documented in BASELINE.md round 15).
   */
 object ScaleSmoke {
-
-  private class MetricsListener extends SparkListener {
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shufRead = new java.util.concurrent.atomic.AtomicLong(0L)
-    val memSpill = new java.util.concurrent.atomic.AtomicLong(0L)
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        memSpill.addAndGet(m.memoryBytesSpilled)
-        diskSpill.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def snapshot: (Long, Long, Long, Long) =
-      (shufWrite.get, shufRead.get, memSpill.get, diskSpill.get)
-  }
 
   def main(args: Array[String]): Unit = {
     val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
@@ -79,9 +62,6 @@ object ScaleSmoke {
   def run(spark: SparkSession, baseDir: String, factor: Int,
           outFile: String,
           only: Option[String] = None): Seq[(String, Double, Long, Long, Long, Long, Long)] = {
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
-
     val work = java.nio.file.Files.createTempDirectory("graft_scale").toString
     val phases = scala.collection.mutable.ArrayBuffer[(String, Double, Long, Long, Long, Long, Long)]()
     // after a FATAL throwable (OOM, linkage...) the JVM may be degraded:
@@ -94,29 +74,30 @@ object ScaleSmoke {
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       System.gc()
-      val (w0, r0, m0, d0) = listener.snapshot
-      val t0 = System.nanoTime()
-      // a phase that hits a wall (OOM'd stage, exhausted id space) must
-      // RECORD the wall and keep measuring the remaining phases — the
-      // smoke exists to find walls, and one crash losing every later
-      // phase's numbers is the round-15 factor-100 lesson. rows = -1
-      // marks the failure in the JSON; the message goes to stdout.
-      val rows =
-        try body
-        catch {
-          case t: Throwable =>
-            if (!scala.util.control.NonFatal(t) && tainted.isEmpty)
-              tainted = Some(s"$name: ${t.getClass.getSimpleName}")
-            println(s"[scale-smoke] $name FAILED: ${t.getClass.getSimpleName}: ${t.getMessage}")
-            -1L
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (w1, r1, m1, d1) = listener.snapshot
-      phases += ((name, dt, rows, w1 - w0, r1 - r0, m1 - m0, d1 - d0))
+      val ((rows, dt), work) = Work.measure(spark.sparkContext, name) {
+        val t0 = System.nanoTime()
+        // a phase that hits a wall (OOM'd stage, exhausted id space) must
+        // RECORD the wall and keep measuring the remaining phases — the
+        // smoke exists to find walls, and one crash losing every later
+        // phase's numbers is the round-15 factor-100 lesson. rows = -1
+        // marks the failure in the JSON; the message goes to stdout.
+        val rows =
+          try body
+          catch {
+            case t: Throwable =>
+              if (!scala.util.control.NonFatal(t) && tainted.isEmpty)
+                tainted = Some(s"$name: ${t.getClass.getSimpleName}")
+              println(s"[scale-smoke] $name FAILED: ${t.getClass.getSimpleName}: ${t.getMessage}")
+              -1L
+          }
+        (rows, (System.nanoTime() - t0) / 1e9)
+      }
+      val (w, r, m, d) = (work.shuffleWriteB, work.shuffleReadB, work.memSpillB, work.diskSpillB)
+      phases += ((name, dt, rows, w, r, m, d))
       taints += taintedBy.getOrElse("")
       println(f"[scale-smoke] $name%-28s ${dt}%8.1f s  rows=$rows%10d  " +
-        f"shufW=${(w1 - w0) / 1e6}%9.1f MB  shufR=${(r1 - r0) / 1e6}%9.1f MB  " +
-        f"spillMem=${(m1 - m0) / 1e6}%7.1f MB  spillDisk=${(d1 - d0) / 1e6}%7.1f MB" +
+        f"shufW=${w / 1e6}%9.1f MB  shufR=${r / 1e6}%9.1f MB  " +
+        f"spillMem=${m / 1e6}%7.1f MB  spillDisk=${d / 1e6}%7.1f MB" +
         taintedBy.fold("")(c => s"  TAINTED(after $c)"))
     }
 
@@ -641,7 +622,6 @@ object ScaleSmoke {
     new org.apache.hadoop.fs.Path(work)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new org.apache.hadoop.fs.Path(work), true)
-    spark.sparkContext.removeSparkListener(listener)
     phases.toSeq
   }
 }

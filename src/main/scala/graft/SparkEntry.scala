@@ -33,11 +33,12 @@ object SparkEntry {
     * so the landings share nothing; the merged serve is an
     * order-independent fold (sums / distinct / sketch merges), so the
     * landing ORDER was never semantic — only the wall clock moves.
-    * Failures propagate (await rethrows the first landing error).
+    * The first landing's error (in item order) is raised only after
+    * every landing has ended, so none still writes into a scratch dir
+    * the caller deletes next.
     */
   private[graft] def parDrops[T](items: Seq[T])(f: T => Unit): Unit =
-    items.map(it => graft.core.Overlap.par(f(it)))
-      .foreach(graft.core.Overlap.await(_))
+    graft.core.Overlap.all(items.map(it => () => f(it)))
 
   /** events.parquet's `ts` physical encoding has drifted across driver
     * testdata generations — TIMESTAMP(NANOS) (which Spark reads as a raw

@@ -23,4 +23,16 @@ class BenchSpec extends AnyFunSuite {
     assert(timed.passes.size == 2 && timed.passes.forall(_.map(_._1) == Seq("ok_query", "ok_too")))
     assert(timed.best.forall { case (n, t) => t == timed.passes.map(_.toMap.apply(n)).min })
   }
+
+  test("timeQueries reports the Spark work of every query that passed") {
+    val queries = Seq[(String, (SparkSession, String) => DataFrame)](
+      "shuffled" -> ((s, _) => s.range(1000).repartition(3).toDF("id")),
+      "broken_query" -> ((s, _) => s.range(10).selectExpr("no_such_column")),
+      "plain" -> ((s, _) => s.range(5).toDF("id")))
+    val timed = Bench.timeQueries(spark, "/unused", queries, passes = 2)(())
+    assert(timed.work.map(_._1) == Seq("shuffled", "plain"), "no entry for the broken query")
+    val work = timed.work.map { case (n, c) => n -> c.fields.toMap }.toMap
+    assert(work.values.forall(_("jobs") >= 1), work)
+    assert(work("shuffled")("shuffle_write_mb") > 0, work)
+  }
 }

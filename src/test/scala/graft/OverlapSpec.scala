@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.SpecBus
+import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,9 +23,9 @@ class OverlapSpec extends AnyFunSuite {
         seen.add((String.valueOf(job.properties.getProperty("spark.jobGroup.id")),
           String.valueOf(job.properties.getProperty("spark.job.tags"))))
     }
-    SpecBus.drain(sc)
+    GraftBus.drain(sc)
     sc.addSparkListener(listener)
-    try { body; SpecBus.drain(sc) } finally sc.removeSparkListener(listener)
+    try { body; GraftBus.drain(sc) } finally sc.removeSparkListener(listener)
     seen.asScala.toSeq
   }
 

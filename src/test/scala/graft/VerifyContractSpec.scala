@@ -50,14 +50,6 @@ class VerifyContractSpec extends AnyFunSuite {
     spark.catalog.dropTempView("user_view_sink")
   }
 
-  test("bench stage journeys are pinned, known, integration-tier queries") {
-    assert(Bench.stageJourneyNames.size >= 8, "at least the 8 index journeys split stages")
-    assert(Bench.stageJourneyNames.subsetOf(SparkEntry.queries.keySet),
-      s"unknown stage journeys: ${Bench.stageJourneyNames -- SparkEntry.queries.keySet}")
-    assert(Bench.stageJourneyNames.subsetOf(SparkEntry.integrationQueries),
-      "every stage journey is an integration-tier query")
-  }
-
   test("integration tier is exactly the scratch-dir-building queries") {
     val q = SparkEntry.queries.keySet
     assert((SparkEntry.integrationQueries -- q).isEmpty,
