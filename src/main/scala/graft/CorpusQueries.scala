@@ -25,11 +25,39 @@ object CorpusQueries {
   // chain / recompute twin / brute floor; the boards' trainers) rides
   // the shared daemon pool — see graft.core.Overlap's contract note
   // ("chainPool note" in the bodies below)
-  private def par[T](body: => T): scala.concurrent.Future[T] =
-    graft.core.Overlap.par(body)
+  import graft.core.Overlap.{all, both}
 
-  private def await[T](f: scala.concurrent.Future[T]): T =
-    graft.core.Overlap.await(f)
+  /** The persisted-index parity row: the `served` index chain, its
+    * `recomputed` twin and the brute top-5 floor run overlapped
+    * (chainPool note — each is deterministic alone, so only the wall
+    * moves). Flags whether served equals recomputed row for row and
+    * clears 0.80 recall against the brute floor, then deletes the
+    * scratch dir `tmp` both chains wrote under.
+    */
+  private def persistedParity(emb: org.apache.spark.sql.DataFrame,
+                              q: org.apache.spark.sql.DataFrame, tmp: String,
+                              served: => org.apache.spark.sql.DataFrame,
+                              recomputed: => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val ((sv, mismatches), exact) = both({
+      val (sv, rc) = both(served, recomputed)
+      (sv, sv.unionByName(rc)
+        .groupBy(col("qid"), col("cid"), col("rank"))
+        .agg(count(lit(1)).as("__n")).filter(col("__n") =!= 2).count())
+    }, Similarity.bruteTopKExact(emb, q, "vec_id", "embedding", 5).localCheckpoint(true))
+    val rec = exact
+      .select(col("qid").cast("long").as("qid"), col("cid").cast("long").as("cid"))
+      .join(sv.select(col("qid"), col("cid"), lit(1).as("__hit")),
+        Seq("qid", "cid"), "left_outer")
+      .agg(count_distinct(col("qid")).as("n_queries"),
+        (sum(coalesce(col("__hit"), lit(0))) >= count(lit(1)) * lit(0.80))
+          .as("recall_ge_080"))
+      .withColumn("served_eq_recompute", lit(mismatches) === 0)
+    new org.apache.hadoop.fs.Path(tmp)
+      .getFileSystem(emb.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(tmp), true)
+    rec
+  }
 
   // ----------------------------------------------------------- SQL builders
 
@@ -1209,14 +1237,13 @@ object CorpusQueries {
       // classifier training (3 signSGD rounds of driver-coordinated
       // jobs) is independent of the dedup component chain — overlap
       // them (guide §2.6, chainPool note); both are deterministic alone
-      val fClf = par(graft.ops.QualityClassifier.train(train, "doc_id", "text",
-        col("lang") === "en"))
-      val comp = Dedup.connectedComponents(pairs)
-      val contam = Dedup.contaminatedFromShingles(trainSh,
-          docs.filter(col("doc_id") % 10 === 0)
-            .select(Dedup.shingles(col("text")).as("sh")), minShared = 8)
-        .select(col("doc").as("doc_id"))
-      val m = await(fClf)
+      val (m, (comp, contam)) = both(
+        graft.ops.QualityClassifier.train(train, "doc_id", "text", col("lang") === "en"),
+        (Dedup.connectedComponents(pairs),
+          Dedup.contaminatedFromShingles(trainSh,
+              docs.filter(col("doc_id") % 10 === 0)
+                .select(Dedup.shingles(col("text")).as("sh")), minShared = 8)
+            .select(col("doc").as("doc_id"))))
       val scores = graft.ops.QualityClassifier.score(train, "doc_id", "text", m)
         .select(col("doc").as("doc_id"), col("clf_prob"))
       val kept = train.select(col("doc_id"), col("text"), col("source"))
@@ -1405,32 +1432,32 @@ object CorpusQueries {
       // trainers depend only on their own book) and each is
       // deterministic in isolation — overlap them (guide §2.6,
       // chainPool note); the board's meaning is unchanged
-      val fExact = par {
-        Similarity.bruteTopKExact(emb, q, "vec_id", "embedding", 5)
-          .select(col("qid"), col("cid")).localCheckpoint(true)
-      }
-      val fKmeans = par(Similarity.ivfCentroidsKMeans(emb, "vec_id", "embedding", 8))
-      val fHier = par(graft.ops.IvfHier.train(emb, "vec_id", "embedding", 8, m = 2))
-      val fImiBook = par(graft.ops.IvfImi.train(emb, "vec_id", "embedding", 8))
-      // ONE full-basis fit feeds both the 48-component gate model (the
-      // fit eig-sorts then truncates, so take(48) == fit(..., 48)) and
-      // the round-18 OPQ rotation
-      val fPcaRot = par {
-        val pcaFull = graft.ops.Pca.fit(emb, "embedding", 64, 64)
-        // parametric-OPQ tiers (Ge et al. 2013): the SAME serves over
-        // the eigen-rotated, variance-balanced corpus — orthonormal, so
-        // the scored inner products are preserved up to float rounding.
-        // On this deliberately ISOTROPIC fixture OPQ ≈ PQ by
-        // construction (measured 44/52/48 vs 44/52/46.5 across the SFs
-        // — the +1.5 at sf0.1 is the balance effect); the anisotropic
-        // win is pinned by PqSpec's A/B and sim_opq_aniso_purity.
-        // Rotation materialized once for both tiers.
-        val opqBasis = graft.ops.Pq.opqBasis(pcaFull, 8)
-        val embR = emb.withColumn("embedding",
-          graft.ops.Pq.opqRotateExpr(col("embedding"), opqBasis)).localCheckpoint(true)
-        (pcaFull, embR)
-      }
-      val exact = await(fExact)
+      val ((exact, kmeansCents), ((hier, imiBook), (pcaFull, embR, imiBookR))) = both(
+        both(
+          Similarity.bruteTopKExact(emb, q, "vec_id", "embedding", 5)
+            .select(col("qid"), col("cid")).localCheckpoint(true),
+          Similarity.ivfCentroidsKMeans(emb, "vec_id", "embedding", 8)),
+        both(
+          both(graft.ops.IvfHier.train(emb, "vec_id", "embedding", 8, m = 2),
+            graft.ops.IvfImi.train(emb, "vec_id", "embedding", 8)), {
+            // ONE full-basis fit feeds both the 48-component gate model (the
+            // fit eig-sorts then truncates, so take(48) == fit(..., 48)) and
+            // the round-18 OPQ rotation; the rotated IMI book trains
+            // right behind the rotation
+            val pcaFull = graft.ops.Pca.fit(emb, "embedding", 64, 64)
+            // parametric-OPQ tiers (Ge et al. 2013): the SAME serves over
+            // the eigen-rotated, variance-balanced corpus — orthonormal, so
+            // the scored inner products are preserved up to float rounding.
+            // On this deliberately ISOTROPIC fixture OPQ ≈ PQ by
+            // construction (measured 44/52/48 vs 44/52/46.5 across the SFs
+            // — the +1.5 at sf0.1 is the balance effect); the anisotropic
+            // win is pinned by PqSpec's A/B and sim_opq_aniso_purity.
+            // Rotation materialized once for both tiers.
+            val opqBasis = graft.ops.Pq.opqBasis(pcaFull, 8)
+            val embR = emb.withColumn("embedding",
+              graft.ops.Pq.opqRotateExpr(col("embedding"), opqBasis)).localCheckpoint(true)
+            (pcaFull, embR, graft.ops.IvfImi.train(embR, "vec_id", "embedding", 8))
+          }))
       def row(tier: String, approx: org.apache.spark.sql.DataFrame,
               floorPct: Int): org.apache.spark.sql.DataFrame =
         exact.join(approx.select(col("qid"), col("cid"), lit(1).as("__hit")),
@@ -1439,16 +1466,10 @@ object CorpusQueries {
             (sum(coalesce(col("__hit"), lit(0))) * 100 >=
               count(lit(1)) * lit(floorPct)).as("recall_ok"))
           .select(lit(tier).as("tier"), col("n_pairs"), col("recall_ok"))
-      val (pcaFull, embR) = await(fPcaRot)
       val pcaModel = graft.ops.Pca.PcaModel(pcaFull.mean,
         pcaFull.eigenvalues.take(48), pcaFull.components.take(48))
       val pcaMargin = math.max(25, math.ceil(embN * 0.2).toInt)
       val qR = embR.filter(col("vec_id") % 50 === 0)
-      val fImiBookR = par(graft.ops.IvfImi.train(embR, "vec_id", "embedding", 8))
-      val kmeansCents = await(fKmeans)
-      val hier = await(fHier)
-      val imiBook = await(fImiBook)
-      val imiBookR = await(fImiBookR)
       // floors pinned at measured-minus-noise (round-15 tightening;
       // ivf_hier + ivf_pq + ivf_hier_pq added round 16, both PQ tiers
       // switched to MEAN-REFERENCED RESIDUAL coding round 17): recall@5
@@ -1466,42 +1487,42 @@ object CorpusQueries {
       // each tier's construction runs its own training/encode actions
       // (ivfTopKPq trains codebooks when called) — independent given
       // the shared models above, so they overlap too; the union is
-      // assembled from the awaited frames in the SAME fixed order
-      Seq(
-        par(row("brute", exact, 100)),
-        par(row("ivf_kmeans", Similarity.ivfTopKWith(kmeansCents, emb, q,
-          "vec_id", "embedding", 5, 2), 38)),
-        par(row("ivf_seed", Similarity.ivfTopK(emb, q, "vec_id", "embedding", 5, 8, 2), 42)),
-        par(row("ivf_hier", Similarity.ivfTopKHier(emb, q,
-          "vec_id", "embedding", hier, 5, 2), 37)),
-        par(row("ivf_sq8", Similarity.ivfTopKInt8(emb, q, "vec_id", "embedding", 5, 8, 2), 42)),
-        par(row("ivf_pq", graft.ops.Pq.ivfTopKPq(emb, q, "vec_id", "embedding", 5, 8, 2,
-          pqMargin), 42)),
-        par(row("ivf_hier_pq", graft.ops.Pq.ivfTopKPqHier(emb, q, "vec_id", "embedding",
+      // assembled from the joined frames in the SAME fixed order
+      all(Seq(
+        () => row("brute", exact, 100),
+        () => row("ivf_kmeans", Similarity.ivfTopKWith(kmeansCents, emb, q,
+          "vec_id", "embedding", 5, 2), 38),
+        () => row("ivf_seed", Similarity.ivfTopK(emb, q, "vec_id", "embedding", 5, 8, 2), 42),
+        () => row("ivf_hier", Similarity.ivfTopKHier(emb, q,
+          "vec_id", "embedding", hier, 5, 2), 37),
+        () => row("ivf_sq8", Similarity.ivfTopKInt8(emb, q, "vec_id", "embedding", 5, 8, 2), 42),
+        () => row("ivf_pq", graft.ops.Pq.ivfTopKPq(emb, q, "vec_id", "embedding", 5, 8, 2,
+          pqMargin), 42),
+        () => row("ivf_hier_pq", graft.ops.Pq.ivfTopKPqHier(emb, q, "vec_id", "embedding",
           hier, graft.ops.Pq.trainResidualHier(emb, "vec_id", "embedding", hier), 5, 2,
-          pqMargin), 35)),
+          pqMargin), 35),
         // product-coarse (IMI) tiers (round-17, closes the codebook
         // task-state seam): measured minima 36/36 across the three SFs,
         // floors 2 under — the axis-aligned product cells trade ~6
         // recall points vs the data-shaped hier cells for O(√nList·dim)
         // task state
-        par(row("ivf_imi", Similarity.ivfTopKImi(emb, q, "vec_id", "embedding",
-          imiBook, 5, 2), 34)),
-        par(row("ivf_imi_pq", graft.ops.Pq.ivfTopKPqImi(emb, q, "vec_id", "embedding",
+        () => row("ivf_imi", Similarity.ivfTopKImi(emb, q, "vec_id", "embedding",
+          imiBook, 5, 2), 34),
+        () => row("ivf_imi_pq", graft.ops.Pq.ivfTopKPqImi(emb, q, "vec_id", "embedding",
           imiBook, graft.ops.Pq.trainResidualImi(emb, "vec_id", "embedding", imiBook), 5, 2,
-          pqMargin), 34)),
+          pqMargin), 34),
         // OPQ tiers: measured minima 44 (ivf_opq) / 36 (ivf_imi_opq)
         // across the three SFs, floors 2 under
-        par(row("ivf_opq", graft.ops.Pq.ivfTopKPq(embR, qR, "vec_id", "embedding", 5, 8, 2,
-          pqMargin), 42)),
-        par(row("ivf_imi_opq", graft.ops.Pq.ivfTopKPqImi(embR, qR, "vec_id", "embedding",
+        () => row("ivf_opq", graft.ops.Pq.ivfTopKPq(embR, qR, "vec_id", "embedding", 5, 8, 2,
+          pqMargin), 42),
+        () => row("ivf_imi_opq", graft.ops.Pq.ivfTopKPqImi(embR, qR, "vec_id", "embedding",
           imiBookR, graft.ops.Pq.trainResidualImi(embR, "vec_id", "embedding", imiBookR), 5, 2,
-          pqMargin), 34)),
-        par(row("lsh_multiprobe", Similarity.multiProbeTopKExact(emb, q,
-          "vec_id", "embedding", 5, 4, 64), 38)),
-        par(row("pca_gate", graft.ops.Pca.pcaTopK(emb, q, "vec_id", "embedding",
-          pcaModel, 5, pcaMargin), 95))
-      ).map(await(_)).reduce(_ unionByName _).orderBy(col("tier"))
+          pqMargin), 34),
+        () => row("lsh_multiprobe", Similarity.multiProbeTopKExact(emb, q,
+          "vec_id", "embedding", 5, 4, 64), 38),
+        () => row("pca_gate", graft.ops.Pca.pcaTopK(emb, q, "vec_id", "embedding",
+          pcaModel, 5, pcaMargin), 95)
+      )).reduce(_ unionByName _).orderBy(col("tier"))
     }),
 
     // the hier-cell coarse-beam knob documented as a board (round-17
@@ -1602,13 +1623,12 @@ object CorpusQueries {
       // three INDEPENDENT chains — index lifecycle, recompute twin,
       // brute floor — overlapped (guide §2.6, chainPool note): each is
       // deterministic alone, so only the wall moves, never a result
-      val fServed = par {
+      persistedParity(emb, q, tmp, {
         PqIndex.build(b90, "vec_id", "embedding", idx, nList = 8)
         PqIndex.refresh(emb, "vec_id", "embedding", idx) // churn = % 10 == 9
         PqIndex.topK(emb, q, "vec_id", "embedding", idx, 5, 8, margin)
           .localCheckpoint(true) // the scratch index is deleted below
-      }
-      val fRecomputed = par {
+      }, {
         val cents = Similarity.ivfCentroids(b90, "vec_id", "embedding", 8)
         val model = graft.ops.Pq.trainResidualFlat(b90, "vec_id", "embedding", cents)
         graft.ops.Pq.ivfTopKPqFromLists(cents, model,
@@ -1616,29 +1636,7 @@ object CorpusQueries {
             .localCheckpoint(true), // serve re-evaluates lazy lists ~5x
           emb, q, "vec_id", "embedding", 5, 8, margin)
           .localCheckpoint(true)
-      }
-      val fExact = par {
-        Similarity.bruteTopKExact(emb, q, "vec_id", "embedding", 5)
-          .localCheckpoint(true)
-      }
-      val served = await(fServed)
-      val recomputed = await(fRecomputed)
-      val mismatches = served.unionByName(recomputed)
-        .groupBy(col("qid"), col("cid"), col("rank"))
-        .agg(count(lit(1)).as("__n")).filter(col("__n") =!= 2).count()
-      val exact = await(fExact)
-      val rec = exact
-        .select(col("qid").cast("long").as("qid"), col("cid").cast("long").as("cid"))
-        .join(served.select(col("qid"), col("cid"), lit(1).as("__hit")),
-          Seq("qid", "cid"), "left_outer")
-        .agg(count_distinct(col("qid")).as("n_queries"),
-          (sum(coalesce(col("__hit"), lit(0))) >= count(lit(1)) * lit(0.80))
-            .as("recall_ge_080"))
-        .withColumn("served_eq_recompute", lit(mismatches) === 0)
-      new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      rec
+      })
     }),
 
     // persisted IMI-PQ: the fully FACTORIZED 10^10+-vector serving
@@ -1663,13 +1661,12 @@ object CorpusQueries {
       val idx = tmp + "/opq"
       val b90 = emb.filter(col("vec_id") % 10 =!= 9)
       // independent chains overlapped (guide §2.6, chainPool note)
-      val fServed = par {
+      persistedParity(emb, q, tmp, {
         PqIndex.build(b90, "vec_id", "embedding", idx, nList = 8, opq = true)
         PqIndex.refresh(emb, "vec_id", "embedding", idx)
         PqIndex.topK(emb, q, "vec_id", "embedding", idx, 5, 8, margin)
           .localCheckpoint(true) // the scratch index is deleted below
-      }
-      val fRecomputed = par {
+      }, {
         // recompute twin: the same pinned-at-build artifacts from
         // scratch. The rotated corpus materializes ONCE and b90/q
         // derive from it by the same vec_id filters (rotation is
@@ -1688,29 +1685,7 @@ object CorpusQueries {
             .localCheckpoint(true), // serve re-evaluates lazy lists ~5x
           rotEmb, rq, "vec_id", "embedding", 5, 8, margin)
           .localCheckpoint(true)
-      }
-      val fExact = par {
-        Similarity.bruteTopKExact(emb, q, "vec_id", "embedding", 5)
-          .localCheckpoint(true)
-      }
-      val served = await(fServed)
-      val recomputed = await(fRecomputed)
-      val mismatches = served.unionByName(recomputed)
-        .groupBy(col("qid"), col("cid"), col("rank"))
-        .agg(count(lit(1)).as("__n")).filter(col("__n") =!= 2).count()
-      val exact = await(fExact)
-      val rec = exact
-        .select(col("qid").cast("long").as("qid"), col("cid").cast("long").as("cid"))
-        .join(served.select(col("qid"), col("cid"), lit(1).as("__hit")),
-          Seq("qid", "cid"), "left_outer")
-        .agg(count_distinct(col("qid")).as("n_queries"),
-          (sum(coalesce(col("__hit"), lit(0))) >= count(lit(1)) * lit(0.80))
-            .as("recall_ge_080"))
-        .withColumn("served_eq_recompute", lit(mismatches) === 0)
-      new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      rec
+      })
     }),
 
     "sim_imi_persisted_topk" -> ((s, dir) => {
@@ -1721,41 +1696,18 @@ object CorpusQueries {
       val idx = tmp + "/imipq"
       val b90 = emb.filter(col("vec_id") % 10 =!= 9)
       // independent chains overlapped (guide §2.6, chainPool note)
-      val fServed = par {
+      persistedParity(emb, q, tmp, {
         graft.ops.ImiPqIndex.build(b90, "vec_id", "embedding", idx, nCells = 16)
         graft.ops.ImiPqIndex.refresh(emb, "vec_id", "embedding", idx)
         graft.ops.ImiPqIndex.topK(emb, q, "vec_id", "embedding", idx, 5, 16, margin)
           .localCheckpoint(true) // the scratch index is deleted below
-      }
-      val fRecomputed = par {
+      }, {
         val imi = graft.ops.IvfImi.train(b90, "vec_id", "embedding", 16)
         val model = graft.ops.Pq.trainResidualImi(b90, "vec_id", "embedding", imi)
         graft.ops.Pq.ivfTopKPqImi(emb, q, "vec_id", "embedding",
           imi, model, 5, 16, margin)
           .localCheckpoint(true)
-      }
-      val fExact = par {
-        Similarity.bruteTopKExact(emb, q, "vec_id", "embedding", 5)
-          .localCheckpoint(true)
-      }
-      val served = await(fServed)
-      val recomputed = await(fRecomputed)
-      val mismatches = served.unionByName(recomputed)
-        .groupBy(col("qid"), col("cid"), col("rank"))
-        .agg(count(lit(1)).as("__n")).filter(col("__n") =!= 2).count()
-      val exact = await(fExact)
-      val rec = exact
-        .select(col("qid").cast("long").as("qid"), col("cid").cast("long").as("cid"))
-        .join(served.select(col("qid"), col("cid"), lit(1).as("__hit")),
-          Seq("qid", "cid"), "left_outer")
-        .agg(count_distinct(col("qid")).as("n_queries"),
-          (sum(coalesce(col("__hit"), lit(0))) >= count(lit(1)) * lit(0.80))
-            .as("recall_ge_080"))
-        .withColumn("served_eq_recompute", lit(mismatches) === 0)
-      new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      rec
+      })
     }),
 
     // the COMPOSED rotated+factorized persisted serve (round-19): OPQ
@@ -1776,14 +1728,13 @@ object CorpusQueries {
       val idx = tmp + "/imiopq"
       val b90 = emb.filter(col("vec_id") % 10 =!= 9)
       // independent chains overlapped (guide §2.6, chainPool note)
-      val fServed = par {
+      persistedParity(emb, q, tmp, {
         graft.ops.ImiPqIndex.build(b90, "vec_id", "embedding", idx,
           nCells = 16, opq = true)
         graft.ops.ImiPqIndex.refresh(emb, "vec_id", "embedding", idx)
         graft.ops.ImiPqIndex.topK(emb, q, "vec_id", "embedding", idx, 5, 16, margin)
           .localCheckpoint(true) // the scratch index is deleted below
-      }
-      val fRecomputed = par {
+      }, {
         // recompute twin: the same pinned-at-build artifacts from
         // scratch, all in the rotated space; the rotation materializes
         // ONCE (filter-then-rotate == rotate-then-filter — see the
@@ -1798,29 +1749,7 @@ object CorpusQueries {
         graft.ops.Pq.ivfTopKPqImi(rotEmb, rq,
           "vec_id", "embedding", imi, model, 5, 16, margin)
           .localCheckpoint(true)
-      }
-      val fExact = par {
-        Similarity.bruteTopKExact(emb, q, "vec_id", "embedding", 5)
-          .localCheckpoint(true)
-      }
-      val served = await(fServed)
-      val recomputed = await(fRecomputed)
-      val mismatches = served.unionByName(recomputed)
-        .groupBy(col("qid"), col("cid"), col("rank"))
-        .agg(count(lit(1)).as("__n")).filter(col("__n") =!= 2).count()
-      val exact = await(fExact)
-      val rec = exact
-        .select(col("qid").cast("long").as("qid"), col("cid").cast("long").as("cid"))
-        .join(served.select(col("qid"), col("cid"), lit(1).as("__hit")),
-          Seq("qid", "cid"), "left_outer")
-        .agg(count_distinct(col("qid")).as("n_queries"),
-          (sum(coalesce(col("__hit"), lit(0))) >= count(lit(1)) * lit(0.80))
-            .as("recall_ge_080"))
-        .withColumn("served_eq_recompute", lit(mismatches) === 0)
-      new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-        .delete(new org.apache.hadoop.fs.Path(tmp), true)
-      rec
+      })
     }),
 
     // the OPQ rotation's recall WIN, driver-verified (round-19): the

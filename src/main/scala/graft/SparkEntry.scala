@@ -1451,15 +1451,17 @@ object SparkEntry {
       // contract), so the v1 base drop overlaps the v2 commit, the v1→2
       // change drop overlaps the v3 commit, and the segment landings
       // stay disjoint-dir/order-independent (the parDrops contract)
-      val fBase = graft.core.Overlap.par(
-        MaterializedAgg.landDrop(lake.readAt(1), spec, sumPath, "v1"))
-      lake.upsert(orders.filter(key % 5 === 0 || key % 3 === 2))
-      val f12 = graft.core.Overlap.par(MaterializedAgg.landChangesDrop(
-        lake.changesBetween(1, 2, preImages = true), spec, sumPath, "v1to2"))
-      lake.deleteWhere(key % 7 === 0)
-      MaterializedAgg.landChangesDrop(
-        lake.changesBetween(2, 3, preImages = true), spec, sumPath, "v2to3")
-      graft.core.Overlap.await(fBase); graft.core.Overlap.await(f12)
+      graft.core.Overlap.both(
+        MaterializedAgg.landDrop(lake.readAt(1), spec, sumPath, "v1"), {
+          lake.upsert(orders.filter(key % 5 === 0 || key % 3 === 2))
+          graft.core.Overlap.both(
+            MaterializedAgg.landChangesDrop(
+              lake.changesBetween(1, 2, preImages = true), spec, sumPath, "v1to2"), {
+              lake.deleteWhere(key % 7 === 0)
+              MaterializedAgg.landChangesDrop(
+                lake.changesBetween(2, 3, preImages = true), spec, sumPath, "v2to3")
+            })
+        })
       val out = MaterializedAgg.serve(s, sumPath, spec)
         .select(col("o_orderstatus"), col("o_orderpriority"), col("n"),
           (col("sum_cents").cast("double") / 100.0).as("total_price"))

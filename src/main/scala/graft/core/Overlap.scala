@@ -21,9 +21,13 @@ package graft.core
   * when idle, and every thread is a daemon so the pool never blocks
   * JVM exit.
   *
+  * [[all]] and its typed two-result form [[both]] are the only entry
+  * points: each starts its steps on the pool and returns only once every
+  * step has ended, so no Spark work forked here outlives its caller.
+  *
   * LOCAL PROPERTIES: a pooled thread inherits Spark's local properties
   * (job group, job tags, scheduler pool, description) only when it is
-  * created, and the cached pool reuses it for later callers. [[par]]
+  * created, and the cached pool reuses it for later callers. Each step
   * therefore captures the CALLER's properties and sets them for the
   * body, then restores the thread's own: jobs of a pooled body carry
   * the caller's group and tags (so `cancelJobGroup` reaches them), and
@@ -42,12 +46,14 @@ object Overlap {
           }
         }))
 
-  def par[T](body: => T): scala.concurrent.Future[T] = {
+  private def par[T](body: => T): scala.concurrent.Future[T] = {
     val props = org.apache.spark.GraftLocalProperties.capture()
     scala.concurrent.Future(org.apache.spark.GraftLocalProperties.within(props)(body))(pool)
   }
 
-  def await[T](f: scala.concurrent.Future[T]): T =
+  // unbounded on purpose: a bound that raised while a step still ran
+  // would break `all`'s "no step outlives the call" rule
+  private def await[T](f: scala.concurrent.Future[T]): T =
     scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
 
   /** Start every step on the pool, wait for ALL of them, and return
@@ -69,5 +75,13 @@ object Overlap {
         throw first
       case _ => outcomes.collect { case Right(v) => v }
     }
+  }
+
+  /** [[all]] over two steps of different types, results in step order;
+    * nest it for three (`both(a, both(b, c))`).
+    */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    val Seq(x, y) = all(Seq[() => Any](() => a, () => b))
+    (x.asInstanceOf[A], y.asInstanceOf[B])
   }
 }

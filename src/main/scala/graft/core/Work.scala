@@ -11,7 +11,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   *
   * [[measure]] adds a job tag for its scope. A job carries the tags of the
   * thread that submits it, and the threads that submit work for a caller
-  * carry the caller's tags too: [[Overlap.par]] copies them onto pooled
+  * carry the caller's tags too: [[Overlap.all]] copies them onto pooled
   * threads, SQL copies them onto its broadcast threads, and a streaming
   * query's thread inherits them when `start()` creates it. (A job GROUP
   * would not do: a stream sets its own group on that thread.) The

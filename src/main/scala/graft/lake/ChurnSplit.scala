@@ -25,19 +25,20 @@ import org.apache.spark.sql.functions._
   *
   * Lifting the three joins here keeps ten tiers from drifting on the
   * freshness contract ("unchanged rows carry verbatim; lagging costs
-  * recompute, never correctness"). Non-users, deliberately:
-  * [[graft.ops.BpeIndex]] (its word cache only ever GROWS — re-delivery
-  * and deletion are meaningless for a vocabulary), and the lake
-  * sidecars ([[BloomIndex]]/[[ZoneMapIndex]]), whose key is the
-  * (file, len) physical identity joined against a manifest, not a
+  * recompute, never correctness"). Non-users of [[split]],
+  * deliberately: [[graft.ops.BpeIndex]] (its word cache only ever GROWS
+  * — re-delivery and deletion are meaningless for a vocabulary), and
+  * the lake sidecars ([[BloomIndex]]/[[ZoneMapIndex]]), whose key is
+  * the (file, len) physical identity joined against a manifest, not a
   * record fingerprint.
   *
   * [[land]] recombines the split and lands it through [[Staged.land]]
-  * ([[graft.ops.PostingsIndex]], whose two tables swap together through
-  * [[Staged.landMany]], recombines with [[observedUnion]]; [[BloomIndex]]
-  * lands its kept and re-bloomed rows through [[landRows]]) — split
-  * decides WHAT to rewrite, the staged swap guarantees the rewrite is
-  * never torn.
+  * ([[graft.ops.PostingsIndex]] and [[graft.ops.FuzzyJoinIndex]], whose
+  * tables swap together through [[Staged.landMany]], recombine with
+  * [[observedUnion]]; [[BloomIndex]], [[ZoneMapIndex]] and
+  * [[graft.ops.IncrementalLabels]] land their kept and rebuilt rows
+  * through [[landRows]]) — split decides WHAT to rewrite, the staged
+  * swap guarantees the rewrite is never torn.
   *
   * COUNTING CONTRACT: the (kept, signed) churn counters are metrics of
   * the landing write itself — an `Observation` on the kept and fresh

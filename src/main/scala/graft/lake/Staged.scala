@@ -67,9 +67,11 @@ object Staged {
     * root rename gives old index, new index, or none.
     *
     * Plans may read the CURRENT tables under `root`: staging writes
-    * materialize them before the old root is touched.
+    * materialize them before the old root is touched. Returns each
+    * table's landed row count, observed on its write as in [[land]].
     */
-  def landMany(spark: SparkSession, root: String, tables: Seq[(String, DataFrame)]): Unit = {
+  def landMany(spark: SparkSession, root: String,
+               tables: Seq[(String, DataFrame)]): Map[String, Long] = {
     val dest = new org.apache.hadoop.fs.Path(root)
     require(dest.getParent != null, s"cannot stage-land at a filesystem root: $root")
     val staging = new org.apache.hadoop.fs.Path(
@@ -84,11 +86,14 @@ object Staged {
     // ONE staging root swapped by ONE rename. `all` raises a failed
     // table only once every sibling write has ended, so a retry's
     // delete of the staging root is never raced by a late sibling.
-    graft.core.Overlap.all(tables.map { case (name, df) =>
-      () => df.write.mode("overwrite").parquet(s"$staging/$name")
+    val landed = tables.map { case (name, df) => (name, df, Observation()) }
+    graft.core.Overlap.all(landed.map { case (name, df, o) =>
+      () => df.observe(o, count(lit(1)).as("n")).write.mode("overwrite")
+        .parquet(s"$staging/$name")
     })
     fs.delete(dest, true)
     renameOrThrow(fs, staging, dest)
+    landed.map { case (name, _, o) => name -> ChurnSplit.observed(o, s"$root/$name") }.toMap
   }
 
   /** Swap an ENTIRE segmented root (`path/seg=...`) for one folded

@@ -52,18 +52,6 @@ object ZoneMapIndex {
       s"zone-map column name must be [A-Za-z0-9_]+ (it names the sidecar dir): '$valCol'")
   }
 
-  /** Zone rows (file, minv, maxv, nrows, nvals) for the files `df`
-    * scans — one map-side-combined aggregate keyed by file, shuffle
-    * carries per-file stats only. `nvals` counts non-null values, so
-    * `nrows == nvals` tells a reader the file has no nulls and an
-    * all-null file gets (null, null) bounds (pruned by every range —
-    * correct, since a range predicate never matches null).
-    */
-  private def zoneRows(df: DataFrame, valCol: String): DataFrame =
-    df.groupBy(input_file_name().as("file"))
-      .agg(min(col(valCol)).as("minv"), max(col(valCol)).as("maxv"),
-        count(lit(1)).as("nrows"), count(col(valCol)).as("nvals"))
-
   /** Refresh the lake's zone-map sidecar for `valCol`: scan ONLY the
     * data files added since the last refresh (or all, on first build),
     * keep existing rows verbatim, retain a row while ANY complete
@@ -71,57 +59,8 @@ object ZoneMapIndex {
     * selective. Cost is proportional to write churn, never lake size.
     * Returns (keptRows, scannedRows).
     */
-  def refreshSnapshot(lake: SnapshotLake, valCol: String): (Long, Long) = {
-    requireIndexable(valCol)
-    val spark = lake.spark
-    import spark.implicits._
-    val versions = lake.completeVersions
-    if (versions.isEmpty) return (0L, 0L)
-    val manifests = versions.flatMap(lake.readManifest)
-    val live: Map[String, Long] =
-      manifests.foldLeft(Map.empty[String, Long])((acc, m) =>
-        acc ++ BloomIndex.manifestFiles(lake, m))
-    val schema = manifests.last.schema
-    val idxPath = snapSidecar(lake.path, valCol)
-    val fs = new org.apache.hadoop.fs.Path(idxPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val idxExists = fs.exists(new org.apache.hadoop.fs.Path(idxPath))
-    val lens = live.toSeq.toDF("file", "len2")
-    // churn cluster-side, as in the bloom tier: anti-join the manifest-
-    // resolved live set against the sidecar; only churn-sized paths land
-    // on the driver
-    val freshFiles =
-      if (!idxExists) live.keys.toSeq.sorted
-      else lens.join(
-          spark.read.parquet(idxPath).select(col("file"), col("len").as("len2")),
-          Seq("file", "len2"), "left_anti")
-        .select(col("file")).as[String].collect().toSeq.sorted
-    // a truly empty lake (versions exist, zero live files) has nothing
-    // to index; a no-churn refresh on an existing sidecar lands kept
-    // rows only (a zero-path parquet read is never constructed)
-    if (freshFiles.isEmpty && !idxExists) return (0L, 0L)
-    val kept =
-      if (!idxExists) null
-      else spark.read.parquet(idxPath).alias("old")
-        .join(lens, col("old.file") === lens("file") && col("old.len") === lens("len2"))
-        .select(col("old.file"), col("old.minv"), col("old.maxv"),
-          col("old.nrows"), col("old.nvals"), col("old.len"))
-    if (freshFiles.isEmpty)
-      return (Staged.land(spark, idxPath, kept), 0L) // drop rows of vanished files
-    val rebuilt =
-      zoneRows(
-          spark.read.schema(schema).parquet(BloomIndex.readablePaths(freshFiles): _*), valCol)
-        .join(lens.withColumnRenamed("len2", "len"), "file")
-        .select(col("file"), col("minv"), col("maxv"),
-          col("nrows"), col("nvals"), col("len"))
-    val rebuiltP = rebuilt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keptN = if (kept == null) 0L else kept.count()
-    val rebuiltN = rebuiltP.count()
-    Staged.land(spark, idxPath,
-      if (kept == null) rebuiltP else kept.unionByName(rebuiltP))
-    rebuiltP.unpersist()
-    (keptN, rebuiltN)
-  }
+  def refreshSnapshot(lake: SnapshotLake, valCol: String): (Long, Long) =
+    refreshSnapshotMulti(lake, Seq(valCol))(valCol)
 
   /** Refresh SEVERAL columns' sidecars with ONE scan of the churn: at
     * 100 TB the fresh-file read IS the cost (the sidecar writes are
@@ -181,9 +120,11 @@ object ZoneMapIndex {
       val idxPath = snapSidecar(lake.path, c)
       val rebuilt =
         if (statsAll == null || fresh.isEmpty) null
-        // semi-join, not isin: a first build's fresh list is EVERY live
-        // file and an In over 10^6 literals is a plan, not a filter
-        else statsAll.join(fresh.toDF("file"), Seq("file"), "left_semi")
+        // a column whose churn is the whole scanned set reads the stats as is
+        else (if (fresh.size == unionFresh.size) statsAll
+          // semi-join, not isin: a first build's fresh list is EVERY live
+          // file and an In over 10^6 literals is a plan, not a filter
+          else statsAll.join(fresh.toDF("file"), Seq("file"), "left_semi"))
           .select(col("file"), col(s"minv_$c").as("minv"), col(s"maxv_$c").as("maxv"),
             col("nrows"), col(s"nvals_$c").as("nvals"), col("len"))
       val kept =
@@ -195,11 +136,7 @@ object ZoneMapIndex {
       (kept, rebuilt) match {
         case (null, null) => c -> (0L, 0L) // empty lake
         case (k, null) => c -> (Staged.land(spark, idxPath, k), 0L)
-        case (k, r) =>
-          val keptN = if (k == null) 0L else k.count()
-          val rebuiltN = r.count()
-          Staged.land(spark, idxPath, if (k == null) r else k.unionByName(r))
-          c -> (keptN, rebuiltN)
+        case (k, r) => c -> ChurnSplit.landRows(spark, idxPath, Option(k).getOrElse(r.limit(0)), r)
       }
     }.toMap
     if (statsAll != null) statsAll.unpersist()

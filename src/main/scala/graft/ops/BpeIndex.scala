@@ -48,13 +48,12 @@ object BpeIndex {
     val words = Bpe.wordCounts(df, textCol).localCheckpoint(true)
     val merges = Bpe.trainOnCounts(words, nMerges)
     val cache = Bpe.wordTokenCounts(words.select(col("word")), merges)
-    graft.lake.Staged.landMany(spark, path, Seq(
+    val landed = graft.lake.Staged.landMany(spark, path, Seq(
       "merges" -> Bpe.mergesDf(spark, merges),
       "word_tokens" -> cache,
       "meta" -> Seq(nMerges).toDF("n_merges")))
-    val n = spark.read.parquet(path + "/word_tokens").count()
     words.unpersist()
-    (merges.size, n)
+    (merges.size, landed("word_tokens"))
   }
 
   /** Churn-proportional cache refresh under the PINNED merges: tokenize
@@ -72,9 +71,7 @@ object BpeIndex {
     // carried count must COMPLETE before the landing swaps the root it
     // scans (`cached` reads the live path unpersisted), so it overlaps
     // only the fresh count, never the land.
-    val fCarried = graft.core.Overlap.par(cached.count())
-    val freshN = fresh.count()
-    val carriedN = graft.core.Overlap.await(fCarried)
+    val (carriedN, freshN) = graft.core.Overlap.both(cached.count(), fresh.count())
     if (freshN > 0)
       graft.lake.Staged.landMany(spark, path, Seq(
         "merges" -> spark.read.parquet(path + "/merges"),

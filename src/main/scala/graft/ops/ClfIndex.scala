@@ -161,8 +161,7 @@ object ClfIndex {
       "model" -> QualityClassifier.modelDf(spark, model).coalesce(1),
       "meta" -> Seq((nBuckets, n, x, s))
         .toDF("nbuckets", "train_n", "train_xor", "train_sum").coalesce(1),
-      "scores" -> scoreRows(corpus, idCol, textCol, model, nBuckets)))
-    spark.read.parquet(scoresPath(path)).count()
+      "scores" -> scoreRows(corpus, idCol, textCol, model, nBuckets)))("scores")
   }
 
   /** The pinned model, collected back nBuckets-bounded. */

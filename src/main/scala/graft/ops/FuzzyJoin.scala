@@ -469,9 +469,8 @@ object FuzzyJoin {
       s"extraChunks must be in [0, 8]: $extraChunks")
     // the two side preps (checkpoint jobs) and the two direction counts
     // are pairwise independent — overlap them (guide §2.6)
-    val fP = graft.core.Overlap.par(prep(probes, probeId, probeStr))
-    val r = prep(reference, refId, refStr)
-    val p = graft.core.Overlap.await(fP)
+    val (p, r) = graft.core.Overlap.both(
+      prep(probes, probeId, probeStr), prep(reference, refId, refStr))
     // Direction choice (optimization round 19, guide §2.3 "shuffle
     // fewer bytes"): candidates(a, b) charges the CHUNK multiplier
     // (~d+1+extra rows/string) to `a` and the much larger WINDOW/drift
@@ -484,9 +483,8 @@ object FuzzyJoin {
     // backwards: it chunked the (small) probe batch and fanned the
     // master out ~15-25×. Counts are two jobs over the already-
     // checkpointed prepped frames — cheap at every scale.
-    val fPn = graft.core.Overlap.par(p.count())
-    val rn = r.count()
-    val probesAreBig = graft.core.Overlap.await(fPn) >= rn
+    val (pn, rn) = graft.core.Overlap.both(p.count(), r.count())
+    val probesAreBig = pn >= rn
     val cand =
       if (probesAreBig)
         candidates(p, r, maxDist, extraChunks, hotChunkCap, candBudgetPerString)

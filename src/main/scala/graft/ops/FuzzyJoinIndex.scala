@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.lake.ChurnSplit
+
 /** Persisted PassJoin chunk index — fuzzy entity resolution against a
   * MASTER table as a lake artifact instead of a per-batch rebuild.
   *
@@ -161,18 +163,17 @@ object FuzzyJoinIndex {
     * [[graft.lake.ChurnSplit]] seam with the STRING as its own
     * fingerprint: diff the incoming rows against the indexed strings by
     * (id, s) and chunk ONLY the fresh side under the pinned hot list.
-    * `carriedIds` comes back persisted (the caller counts it and
-    * semi-joins the old keys against it, then unpersists).
+    * Returns the split, the old keys, the prepped incoming rows, the
+    * checkpointed fresh rows, their keys and the pinned meta.
     */
   private def churnSplit(incoming: DataFrame, refId: String, refStr: String,
-                         path: String): (DataFrame, DataFrame, DataFrame,
-                                         DataFrame, DataFrame, DataFrame, Meta) = {
+                         path: String): (ChurnSplit.Split, DataFrame, DataFrame,
+                                         DataFrame, DataFrame, Meta) = {
     val spark = incoming.sparkSession
     // the meta read and the incoming-side prep (a checkpoint job) are
     // independent tiny jobs — overlap them (guide §2.6)
-    val fMeta = graft.core.Overlap.par(readMeta(spark, path))
-    val cur = FuzzyJoin.prep(incoming, refId, refStr)
-    val meta = graft.core.Overlap.await(fMeta)
+    val (meta, cur) = graft.core.Overlap.both(
+      readMeta(spark, path), FuzzyJoin.prep(incoming, refId, refStr))
     val (oldStrings, oldKeys) = tables(spark, path)
     val hotRaw = spark.read.parquet(path + "/hot")
     // pre-pop indexes lack the `pop` column: fall back to index-order
@@ -183,51 +184,43 @@ object FuzzyJoinIndex {
           col("key").as("__key"), col("pop").as("__pop"))
       else hotRaw.select(col("la").as("__la"), col("i").as("__i"),
         col("key").as("__key"))
-    val s = graft.lake.ChurnSplit.split(oldStrings, "__id", "__s",
-      cur, "__id", cur("__s"))
-    val carriedIds = s.kept.select(col("__id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val s = ChurnSplit.split(oldStrings, "__id", "__s", cur, "__id", cur("__s"))
     val fresh = s.fresh.localCheckpoint(true)
     // fresh emissions follow the PINNED key scheme — a complement-built
     // index never mixes singleton rows into its escalated lengths
     val freshKeys = schemeKeys(fresh, FuzzyJoin.chunkLens(fresh, meta.maxDist),
       meta, Some(pinnedHot))
-    (oldStrings, oldKeys, cur, carriedIds, fresh, freshKeys, meta)
+    (s, oldKeys, cur, fresh, freshKeys, meta)
   }
 
   /** Churn-proportional refresh under the PINNED hot list: carry
     * unchanged strings' key rows verbatim, chunk only new/changed ids,
     * drop vanished ones. The passed `reference` is the full current
     * master (deletions are the difference). Returns
-    * (carriedStrings, chunkedStrings).
+    * (carriedStrings, chunkedStrings), observed on the strings landing.
     */
   def refresh(reference: DataFrame, refId: String, refStr: String,
               path: String): (Long, Long) = {
     val spark = reference.sparkSession
     import spark.implicits._
-    val (_, oldKeys, cur, carriedIds, fresh, freshKeys, meta) =
+    val (s, oldKeys, cur, fresh, freshKeys, meta) =
       churnSplit(reference, refId, refStr, path)
-    // churn counters overlap the landing (guide §2.6 via Overlap.all)
-    // full-reference semantics: strings' = the passed reference; keys of
-    // ids outside it (deletions) drop out via the carried semi-join.
-    // The lens sidecar recomputes EXACTLY from cur (a distinct over a
-    // checkpointed int column — map-side partial aggregation collapses
-    // it to ~|distinct lengths| rows regardless of corpus size)
-    val Seq(_, carriedN, freshN) = graft.core.Overlap.all(Seq(
-      () => {
-        graft.lake.Staged.landMany(spark, path, Seq(
-          "strings" -> stringsOut(cur),
-          "keys" -> keysOut(
-            oldKeys.join(carriedIds.select(col("__id").as("__aid")), Seq("__aid"), "left_semi")
-              .unionByName(freshKeys)),
-          "hot" -> spark.read.parquet(path + "/hot"),
-          "lens" -> FuzzyJoin.chunkLens(cur, meta.maxDist).toDF("l").coalesce(1),
-          "meta" -> spark.read.parquet(path + "/meta")))
-        0L
-      },
-      () => carriedIds.count(), () => fresh.count()))
-    carriedIds.unpersist()
-    (carriedN, freshN)
+    // full-reference semantics: strings' = kept ∪ fresh (the passed
+    // reference); keys of ids outside it (deletions) drop out via the
+    // kept semi-join. The lens sidecar recomputes EXACTLY from cur (a
+    // distinct over a checkpointed int column — map-side partial
+    // aggregation collapses it to ~|distinct lengths| rows regardless of
+    // corpus size)
+    val (strings, counts) = ChurnSplit.observedUnion(path, s.kept, fresh)
+    graft.lake.Staged.landMany(spark, path, Seq(
+      "strings" -> stringsOut(strings),
+      "keys" -> keysOut(
+        oldKeys.join(s.kept.select(col("__id").as("__aid")), Seq("__aid"), "left_semi")
+          .unionByName(freshKeys)),
+      "hot" -> spark.read.parquet(path + "/hot"),
+      "lens" -> FuzzyJoin.chunkLens(cur, meta.maxDist).toDF("l").coalesce(1),
+      "meta" -> spark.read.parquet(path + "/meta")))
+    counts()
   }
 
   /** Delta UPSERT — the streaming / foreachBatch form of [[refresh]]:
@@ -242,7 +235,7 @@ object FuzzyJoinIndex {
              path: String): (Long, Long) = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val (oldStrings, oldKeys, cur, carriedIds, fresh, freshKeys, meta) =
+    val (s, oldKeys, cur, fresh, freshKeys, meta) =
       churnSplit(batch, refId, refStr, path)
     // delta-mode lens: old lens ∪ the batch's lengths — a SUPERSET of
     // the exact list when a replaced string removed a length (probing a
@@ -259,24 +252,17 @@ object FuzzyJoinIndex {
       else Seq("lens" -> spark.read.parquet(path + "/lens")
         .unionByName(FuzzyJoin.chunkLens(cur, meta.maxDist).toDF("l"))
         .distinct().coalesce(1))
-    // churn counters overlap the landing (guide §2.6 via Overlap.all)
-    // delta semantics: strings/keys OUTSIDE this batch stay untouched;
-    // changed batch ids' old keys drop via the fresh anti-join
-    val Seq(_, carriedN, freshN) = graft.core.Overlap.all(Seq(
-      () => {
-        graft.lake.Staged.landMany(spark, path, Seq(
-          "strings" -> oldStrings.join(cur.select(col("__id")), Seq("__id"), "left_anti")
-            .unionByName(cur).transform(stringsOut),
-          "keys" -> keysOut(
-            oldKeys.join(fresh.select(col("__id").as("__aid")), Seq("__aid"), "left_anti")
-              .unionByName(freshKeys)),
-          "hot" -> spark.read.parquet(path + "/hot"),
-          "meta" -> spark.read.parquet(path + "/meta")) ++ lensTable)
-        0L
-      },
-      () => carriedIds.count(), () => fresh.count()))
-    carriedIds.unpersist()
-    (carriedN, freshN)
+    // delta semantics: strings/keys OUTSIDE this batch (others) stay
+    // untouched; changed batch ids' old keys drop via the fresh anti-join
+    val (batchStrings, counts) = ChurnSplit.observedUnion(path, s.kept, fresh)
+    graft.lake.Staged.landMany(spark, path, Seq(
+      "strings" -> stringsOut(s.others.unionByName(batchStrings)),
+      "keys" -> keysOut(
+        oldKeys.join(fresh.select(col("__id").as("__aid")), Seq("__aid"), "left_anti")
+          .unionByName(freshKeys)),
+      "hot" -> spark.read.parquet(path + "/hot"),
+      "meta" -> spark.read.parquet(path + "/meta")) ++ lensTable)
+    counts()
   }
 
   /** Resolve a probe batch against the indexed master: every
@@ -291,23 +277,23 @@ object FuzzyJoinIndex {
             path: String): DataFrame = {
     val spark = probes.sparkSession
     import spark.implicits._
-    // meta read, probe prep (a checkpoint job) and the length-list load
-    // are three independent tiny jobs — overlap them (guide §2.6)
-    val fMeta = graft.core.Overlap.par(readMeta(spark, path))
-    val fPrep = graft.core.Overlap.par(FuzzyJoin.prep(probes, probeId, probeStr))
-    val meta = graft.core.Overlap.await(fMeta)
+    // probe prep (a checkpoint job) overlaps the meta read and the
+    // length-list load behind it (guide §2.6). The indexed chunkable
+    // lengths: the persisted sidecar when present (bounded by the
+    // longest string — probes never scan the master just to learn
+    // them), else the legacy distinct scan over the strings
+    val (p, (meta, (refStrings, refKeys), aLens)) = graft.core.Overlap.both(
+      FuzzyJoin.prep(probes, probeId, probeStr), {
+        val meta = readMeta(spark, path)
+        val ref = tables(spark, path)
+        val lensP = new org.apache.hadoop.fs.Path(path + "/lens")
+        (meta, ref,
+          if (lensP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lensP))
+            spark.read.parquet(path + "/lens").as[Int].collect().sorted.toSeq
+          else ref._1.filter(col("__l") >= meta.maxDist + 1)
+            .select(col("__l")).distinct().as[Int].collect().sorted.toSeq)
+      })
     val d = meta.maxDist
-    val (refStrings, refKeys) = tables(spark, path)
-    // the indexed chunkable lengths: the persisted sidecar when present
-    // (bounded by the longest string — probes never scan the master just
-    // to learn them), else the legacy distinct scan over the strings
-    val lensP = new org.apache.hadoop.fs.Path(path + "/lens")
-    val aLens: Seq[Int] =
-      if (lensP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lensP))
-        spark.read.parquet(path + "/lens").as[Int].collect().sorted.toSeq
-      else refStrings.filter(col("__l") >= d + 1)
-        .select(col("__l")).distinct().as[Int].collect().sorted.toSeq
-    val p = graft.core.Overlap.await(fPrep)
     // probe emissions mirror the pinned key scheme: singleton windows
     // for classic lengths, drift-combo complement windows for escalated
     // ones (the length partitions the key spaces, so one union + one

@@ -89,8 +89,7 @@ object ImiPqIndex {
       "lists" -> listRows(rc, idCol, vecCol, imi, model)) ++
       basis.map(b => "opqbasis" ->
         b.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toDF("pos", "r")
-          .coalesce(1)).toSeq)
-    spark.read.parquet(listsPath(path)).count()
+          .coalesce(1)).toSeq)("lists")
   }
 
   /** The pinned sub-codebooks, collected back √nCells-sized. */
@@ -132,16 +131,14 @@ object ImiPqIndex {
   private def churn(corpus: DataFrame, idCol: String, vecCol: String, path: String,
                     mode: ChurnSplit.Mode): (Long, Long) = {
     val spark = corpus.sparkSession
-    // independent sidecar loads overlap (guide §2.6, graft.core.Overlap)
-    val fImi = graft.core.Overlap.par(loadImi(spark, path))
-    val fModel = graft.core.Overlap.par(loadModel(spark, path))
-    val fBasis = graft.core.Overlap.par(PqIndex.loadBasis(spark, path))
-    // rotate BEFORE the churn split: fingerprints were signed over the
+    // independent sidecar loads overlap (guide §2.6, graft.core.Overlap),
+    // the rotation riding behind the basis load.
+    // Rotate BEFORE the churn split: fingerprints were signed over the
     // rotated vectors at build, so unchanged rows must re-hash equal.
     // Materialized — see PqIndex.rotatedMat's plan-size note
-    val rc = PqIndex.rotatedMat(corpus, vecCol, graft.core.Overlap.await(fBasis))
-    val imi = graft.core.Overlap.await(fImi)
-    val model = graft.core.Overlap.await(fModel)
+    val ((imi, model), rc) = graft.core.Overlap.both(
+      graft.core.Overlap.both(loadImi(spark, path), loadModel(spark, path)),
+      PqIndex.rotatedMat(corpus, vecCol, PqIndex.loadBasis(spark, path)))
     val s = ChurnSplit.split(spark.read.parquet(listsPath(path)), "cid", "vfp",
       rc, idCol, vecFp(rc(vecCol)))
     ChurnSplit.land(spark, listsPath(path), s,
@@ -158,14 +155,13 @@ object ImiPqIndex {
     // queries rotate, so side LUTs, ADC tables and the exact re-rank
     // all score the same (orthonormally preserved) inner products
     // overlapped loads — see churn
-    val fImi = graft.core.Overlap.par(loadImi(spark, path))
-    val fModel = graft.core.Overlap.par(loadModel(spark, path))
-    val basis = PqIndex.loadBasis(spark, path)
+    val ((imi, model), basis) = graft.core.Overlap.both(
+      graft.core.Overlap.both(loadImi(spark, path), loadModel(spark, path)),
+      PqIndex.loadBasis(spark, path))
     // queries materialize (small, many-referenced by the probe
     // expression); the corpus rotation stays lazy — referenced once by
     // the re-rank fetch (see PqIndex.topK's note)
-    Pq.ivfTopKPqImiFromLists(graft.core.Overlap.await(fImi),
-      graft.core.Overlap.await(fModel),
+    Pq.ivfTopKPqImiFromLists(imi, model,
       spark.read.parquet(listsPath(path)).select(col("cid"), col("cell"), col("codes")),
       rotated(corpus, vecCol, basis), PqIndex.rotatedMat(queries, vecCol, basis),
       idCol, vecCol, k, nProbe, margin)

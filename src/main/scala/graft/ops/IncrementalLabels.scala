@@ -72,24 +72,16 @@ private[ops] object IncrementalLabels {
       .join(comp.withColumnRenamed("node", "doc"), Seq("doc"), "left_outer")
       .join(curP, Seq("doc")) // vanished members drop here
       .select(col("doc"), col(fpCol), coalesce(col("component"), col("doc")).as("label"))
-      .persist(mem)
-    val intactRows = old
+    // one row per intact row: comp has one row per node
+    val intactLabels = old
       .join(docGran, Seq("doc"), "left_anti")
       .join(curP, Seq("doc"), "left_semi") // vanished intact rows drop
-      .persist(mem)
-    val intactLabels = intactRows
       .join(comp.withColumnRenamed("node", "label"), Seq("label"), "left_outer")
       .select(col("doc"), col(fpCol), coalesce(col("component"), col("label")).as("label"))
-    // the two churn counters and the landing are three independent
-    // actions over the persisted frames — overlap them (guide §2.6 via
-    // Overlap.all): the land materializes every partition through
-    // the same persisted comp/granLabels/intactRows blocks the counts
-    // read, so all file access to the old labels happens before the swap
-    val Seq(_, carried, relabeled) = graft.core.Overlap.all(Seq(
-      () => graft.lake.Staged.land(spark, labelsPath, granLabels.unionByName(intactLabels)),
-      () => intactRows.count(), () => granLabels.count()))
-    Seq(old, curP, docGran, comp, granLabels, intactRows)
-      .foreach(_.unpersist(blocking = false))
+    // (carried, relabeled) are observed on the landing write itself
+    val (carried, relabeled) = graft.lake.ChurnSplit.landRows(spark, labelsPath,
+      kept = intactLabels, fresh = granLabels)
+    Seq(old, curP, docGran, comp).foreach(_.unpersist(blocking = false))
     (carried, relabeled)
   }
 }

@@ -63,9 +63,9 @@ object PostingsIndex {
   def build(docs: DataFrame, idCol: String, textCol: String, path: String): Long = {
     val spark = docs.sparkSession
     val (postings, doclen, base) = indexRows(docs, idCol, textCol)
-    Staged.landMany(spark, path, Seq("postings" -> postings, "doclen" -> doclen))
+    val landed = Staged.landMany(spark, path, Seq("postings" -> postings, "doclen" -> doclen))
     base.unpersist()
-    spark.read.parquet(s"$path/doclen").count()
+    landed("doclen")
   }
 
   /** Churn-proportional refresh: carry unchanged documents' postings and

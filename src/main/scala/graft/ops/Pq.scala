@@ -90,49 +90,38 @@ object Pq {
     * cell expression ([[Similarity.ivfCell]] / [[Similarity.hierCell]]);
     * `mu` the per-cell subtraction reference ([[residualRefFlat]] /
     * [[residualRefHier]] — true cell means with centroid fallback).
-    * Flat/hier wrappers below.
+    * Flat/hier wrappers below. `mu` is by-name: the reference (a
+    * cell-means aggregate over the corpus) and the training sample (a
+    * seeded top-n collect over the corpus) are independent jobs, so
+    * they overlap (guide §2.6 via [[graft.core.Overlap.both]]; both are
+    * deterministic alone, so the model bits are unchanged).
     */
   def trainResidualWith(corpus: DataFrame, idCol: String, vecCol: String,
-                        cellOf: Column => Column, mu: Map[Long, Array[Float]],
+                        cellOf: Column => Column, mu: => Map[Long, Array[Float]],
                         mSub: Int = 8, ks: Int = 256, seed: Int = 42,
-                        iters: Int = 8, trainN0: Int = 0): PqModel =
-    trainResidualWithF(corpus, idCol, vecCol, cellOf,
-      graft.core.Overlap.par(mu), mSub, ks, seed, iters, trainN0)
-
-  /** [[trainResidualWith]] with the subtraction reference arriving as a
-    * FUTURE: the reference (a cell-means aggregate over the corpus) and
-    * the training sample (a seeded top-n collect over the corpus) are
-    * two independent jobs, and the flat/hier wrappers ran them strictly
-    * in sequence — overlapped they cost max, not sum (guide §2.6 via
-    * [[graft.core.Overlap]]; both are deterministic alone, so the model
-    * bits are unchanged).
-    */
-  private def trainResidualWithF(corpus: DataFrame, idCol: String, vecCol: String,
-                                 cellOf: Column => Column,
-                                 muF: scala.concurrent.Future[Map[Long, Array[Float]]],
-                                 mSub: Int, ks: Int, seed: Int,
-                                 iters: Int, trainN0: Int): PqModel = {
+                        iters: Int = 8, trainN0: Int = 0): PqModel = {
     require(mSub >= 1, s"mSub must be >= 1: $mSub")
     require(ks >= 1 && ks <= 256, s"ks must be in [1, 256]: $ks")
     val trainN = if (trainN0 > 0) trainN0 else math.max(4096, ks * 32)
-    val rows = Similarity.collectBounded(corpus
-      .select(col(vecCol).as("__v"),
-        cellOf(col(vecCol)).cast("long").as("__c"),
-        hash(col(idCol).cast("long"), lit(seed)).as("__h"),
-        col(idCol).cast("long").as("__id"))
-      .orderBy(col("__h"), col("__id"))
-      .limit(trainN)
-      .select(col("__v"), col("__c")), trainN, "residual pq codebook sample")
+    val (rows, muV) = graft.core.Overlap.both(
+      Similarity.collectBounded(corpus
+        .select(col(vecCol).as("__v"),
+          cellOf(col(vecCol)).cast("long").as("__c"),
+          hash(col(idCol).cast("long"), lit(seed)).as("__h"),
+          col(idCol).cast("long").as("__id"))
+        .orderBy(col("__h"), col("__id"))
+        .limit(trainN)
+        .select(col("__v"), col("__c")), trainN, "residual pq codebook sample"),
+      mu)
     require(rows.nonEmpty, "pq training needs a non-empty corpus")
-    val mu = graft.core.Overlap.await(muF)
     val sample = rows.map { r =>
       val v = r.getSeq[Float](0).toArray
-      val m = mu.getOrElse(r.getLong(1),
+      val m = muV.getOrElse(r.getLong(1),
         throw new IllegalArgumentException(s"residual pq train: unknown cell ${r.getLong(1)}"))
       Array.tabulate(v.length)(j => (v(j).toDouble - m(j).toDouble).toFloat)
     }
     PqModel(sample.head.length / mSub,
-      fitCodebooks(sample, mSub, ks, iters), residual = true, mu = mu)
+      fitCodebooks(sample, mSub, ks, iters), residual = true, mu = muV)
   }
 
   /** Flat-IVF residual trainer (reference = pinned-gate cell means). */
@@ -140,18 +129,18 @@ object Pq {
                         cents: Seq[(Long, Seq[Float])], mSub: Int = 8,
                         ks: Int = 256, seed: Int = 42, iters: Int = 8,
                         trainN0: Int = 0): PqModel =
-    trainResidualWithF(corpus, idCol, vecCol,
+    trainResidualWith(corpus, idCol, vecCol,
       v => Similarity.ivfCell(v, cents),
-      graft.core.Overlap.par(residualRefFlat(corpus, idCol, vecCol, cents)),
+      residualRefFlat(corpus, idCol, vecCol, cents),
       mSub, ks, seed, iters, trainN0)
 
   /** Hier-cell residual trainer (cells are fine-codebook indexes). */
   def trainResidualHier(corpus: DataFrame, idCol: String, vecCol: String,
                         hier: IvfHier, mSub: Int = 8, ks: Int = 256,
                         seed: Int = 42, iters: Int = 8, trainN0: Int = 0): PqModel =
-    trainResidualWithF(corpus, idCol, vecCol,
+    trainResidualWith(corpus, idCol, vecCol,
       v => Similarity.hierCell(v, hier),
-      graft.core.Overlap.par(residualRefHier(corpus, idCol, vecCol, hier)),
+      residualRefHier(corpus, idCol, vecCol, hier),
       mSub, ks, seed, iters, trainN0)
 
   /** Product-cell (IMI) residual trainer: μ is the IMPLICIT product

@@ -153,8 +153,7 @@ object PqIndex {
       "lists" -> listRows(rc, idCol, vecCol, cents, model)) ++
       basis.map(b => "opqbasis" ->
         b.zipWithIndex.map { case (r, i) => (i, r.toSeq) }.toDF("pos", "r")
-          .coalesce(1)).toSeq)
-    spark.read.parquet(listsPath(path)).count()
+          .coalesce(1)).toSeq)("lists")
   }
 
   /** The pinned IVF codebook, collected back codebook-sized. The
@@ -219,17 +218,15 @@ object PqIndex {
                     mode: ChurnSplit.Mode): (Long, Long) = {
     val spark = corpus.sparkSession
     // the three sidecar loads are independent tiny read jobs — overlap
-    // them (guide §2.6 via graft.core.Overlap)
-    val fCents = graft.core.Overlap.par(loadCentroids(spark, path))
-    val fModel = graft.core.Overlap.par(loadModel(spark, path))
-    val fBasis = graft.core.Overlap.par(loadBasis(spark, path))
-    // rotate BEFORE the churn split: fingerprints were signed over the
+    // them (guide §2.6 via graft.core.Overlap), the rotation riding
+    // behind the basis load.
+    // Rotate BEFORE the churn split: fingerprints were signed over the
     // rotated vectors at build, so unchanged rows must re-hash equal.
     // Materialized (rotatedMat): the split + fresh-row encode reference
     // the rotated column several times — see rotatedMat's plan-size note
-    val rc = rotatedMat(corpus, vecCol, graft.core.Overlap.await(fBasis))
-    val cents = graft.core.Overlap.await(fCents)
-    val model = graft.core.Overlap.await(fModel)
+    val ((cents, model), rc) = graft.core.Overlap.both(
+      graft.core.Overlap.both(loadCentroids(spark, path), loadModel(spark, path)),
+      rotatedMat(corpus, vecCol, loadBasis(spark, path)))
     val s = ChurnSplit.split(spark.read.parquet(listsPath(path)), "cid", "vfp",
       rc, idCol, vecFp(rc(vecCol)))
     ChurnSplit.land(spark, listsPath(path), s,
@@ -247,16 +244,15 @@ object PqIndex {
     // queries rotate, so ADC tables, codes and the exact re-rank all
     // score the same (orthonormally preserved) inner products
     // overlapped loads — see churn
-    val fCents = graft.core.Overlap.par(loadCentroids(spark, path))
-    val fModel = graft.core.Overlap.par(loadModel(spark, path))
-    val basis = loadBasis(spark, path)
+    val ((cents, model), basis) = graft.core.Overlap.both(
+      graft.core.Overlap.both(loadCentroids(spark, path), loadModel(spark, path)),
+      loadBasis(spark, path))
     // queries rotate MATERIALIZED (small by the broadcast-pool
     // contract; the probe expression references the query vector many
     // times — rotatedMat's plan-size note). The corpus side stays a
     // LAZY rotation: it is referenced once (the re-rank full fetch),
     // and a zero-work serve must not pay a corpus materialization.
-    Pq.ivfTopKPqFromLists(graft.core.Overlap.await(fCents),
-      graft.core.Overlap.await(fModel),
+    Pq.ivfTopKPqFromLists(cents, model,
       spark.read.parquet(listsPath(path)).select(col("cid"), col("cell"), col("codes")),
       rotated(corpus, vecCol, basis), rotatedMat(queries, vecCol, basis),
       idCol, vecCol, k, nProbe, margin)

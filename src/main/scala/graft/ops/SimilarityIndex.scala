@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.lake.ChurnSplit
+import graft.lake.{ChurnSplit, Staged}
 
 /** Persisted IVF-SQ8 index — ANN as a lake artifact instead of a
   * per-query rebuild.
@@ -63,12 +63,11 @@ object SimilarityIndex {
     val cents =
       if (trained) Similarity.ivfCentroidsKMeans(corpus, idCol, vecCol, nList)
       else Similarity.ivfCentroids(corpus, idCol, vecCol, nList)
-    land(spark, centsPath(path),
+    Staged.land(spark, centsPath(path),
       cents.map { case (id, v) => (id, v) }.toDF("cell_id", "cv").coalesce(1))
-    land(spark, listsPath(path),
+    Staged.land(spark, listsPath(path),
       Similarity.int8Lists(corpus, idCol, vecCol, cents,
         extraCols = Seq(vecFp(col(vecCol)).as("vfp"))))
-    spark.read.parquet(listsPath(path)).count()
   }
 
   /** The pinned codebook, collected back codebook-sized (nList rows). */
@@ -123,8 +122,4 @@ object SimilarityIndex {
     Similarity.ivfTopKInt8FromLists(cents, spark.read.parquet(listsPath(path)),
       corpus, queries, idCol, vecCol, k, nProbe)
   }
-
-  /** Staged-swap landing — never a torn artifact. */
-  private def land(spark: SparkSession, path: String, df: DataFrame): Unit =
-    graft.lake.Staged.land(spark, path, df)
 }

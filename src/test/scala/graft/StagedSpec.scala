@@ -30,6 +30,10 @@ class StagedSpec extends AnyFunSuite {
       assert((System.nanoTime() - t0) / 1e9 < 30, s"$name: the count must not wait out its bound")
       assert(spark.read.parquet(s"$root/$name").count() == n, name)
     }
+    val many = Staged.landMany(spark, s"$root/many", Seq(
+      "empty" -> spark.range(5).filter(col("id") < 0).toDF(), "rows" -> spark.range(37).toDF()))
+    assert(many == Map("empty" -> 0L, "rows" -> 37L))
+    assert(spark.read.parquet(s"$root/many/rows").count() == 37L)
   }
 
   test("landMany raises a failed table only after its sibling's write ended; a retry lands exactly its tables") {
