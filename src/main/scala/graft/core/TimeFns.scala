@@ -18,9 +18,6 @@ object TimeFns {
     */
   def canon(ts: Column): Column = date_format(ts, "yyyy-MM-dd HH:mm:ss")
 
-  /** String-typed inputs: plain 19-char truncation. */
-  def canonStr(ts: Column): Column = substring(ts, 1, 19)
-
   /** Normalize scalar-or-array `updated` to a canonical sorted array
     * (scalar is promoted to a 1-element array; reference handles both
     * shapes in ntp_utils.py:229-255).

@@ -3,10 +3,13 @@ package graft.lake
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StructType}
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.util.sketch.BloomFilter
+
+import FileSidecar.LiveFile
 
 /** Per-file bloom-filter index for key point-lookups on a parquet lake.
   *
@@ -25,22 +28,19 @@ import org.apache.spark.util.sketch.BloomFilter
   * ~14.4 bits per row, so the index costs ~1.8 bytes per row of the
   * lake whatever the file sizes. A point lookup reads the index plus
   * (true files + fpp * 800k ≈ a few hundred) data files instead of
-  * 800k — and the index scan is itself a distributed filter, so
-  * nothing driver-side grows with the lake.
+  * 800k.
   *
-  * Freshness is handled structurally, not by rebuild discipline: the
-  * index records each file's length, and lookups treat data files that
-  * are MISSING from the index or have a different length (new or
-  * rewritten since the build) as unconditional candidates, while index
-  * rows for vanished files are ignored. An index is therefore never
-  * wrong after compaction/upsert — only less selective until rebuilt.
+  * Rows are (file, bloom, nkeys, len) and follow [[FileSidecar]]'s
+  * (file, len) rule: refreshes bloom only uncovered files and carry the
+  * rest, and a file new or rewritten since the last refresh is always a
+  * lookup candidate — an index is never wrong, only less selective.
   *
-  * The build is one `groupByKey(file).mapGroups` — typed per-group
+  * Blooming is one `groupByKey(file).mapGroups` — typed per-group
   * aggregation (a maintenance job, not a query-surface UDF); each group
   * is exactly one file's keys, so memory is bounded by one right-sized
   * filter. Sidecars landed while every filter was sized for 2^20 keys
-  * stay correct: refreshes carry their rows by (file, len) until those
-  * files vanish, and [[build]] re-sizes every row.
+  * stay correct: refreshes carry their rows until those files vanish,
+  * and [[build]] re-sizes every row.
   */
 object BloomIndex {
 
@@ -57,32 +57,36 @@ object BloomIndex {
   /** False-positive rate of every filter. */
   private val Fpp = 0.001
 
-  /** Bloom rows (file, bloom, nkeys) for the files `df` scans (a plain
-    * scan of whole files) — one typed per-group fold, each group exactly
-    * one file's keys. The task blooming a file sizes its filter from the
-    * row count in that file's parquet footer: a file has at least as
-    * many rows as keys, so each filter keeps [[Fpp]], and a group's
-    * memory is that one filter.
+  /** Sidecar rows (file, bloom, nkeys, len) for `files`, read by `src` (a
+    * plain scan of exactly those files) — one typed per-group fold, each
+    * group exactly one file's keys. The task blooming a file sizes its
+    * filter from the row count in that file's parquet footer: a file has
+    * at least as many rows as keys, so each filter keeps [[Fpp]], and a
+    * group's memory is that one filter.
     */
-  private def bloomRows(df: DataFrame, keyCol: String): DataFrame = {
-    val spark = df.sparkSession
+  private def bloomRows(src: DataFrame, files: Seq[LiveFile], keyCol: String): DataFrame = {
+    val spark = src.sparkSession
     import spark.implicits._
+    if (files.isEmpty)
+      return spark.emptyDataset[(String, Array[Byte], Long, Long)].toDF("file", "bloom", "nkeys", "len")
     val conf = spark.sparkContext.broadcast(
       new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
-    df.select(input_file_name().as("file"), col(keyCol).cast("string").as("k"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .mapGroups { (file, rows) =>
-        val bf = BloomFilter.create(math.max(1L, footerRows(file, conf.value.value)), Fpp)
-        var n = 0L
-        rows.foreach { r => if (r._2 != null) bf.putString(r._2); n += 1 }
-        (file, ser(bf), n)
-      }
-      .toDF("file", "bloom", "nkeys")
+    FileSidecar.keyed(
+      src.select(input_file_name().as("file"), col(keyCol).cast("string").as("k"))
+        .as[(String, String)]
+        .groupByKey(_._1)
+        .mapGroups { (file, rows) =>
+          val bf = BloomFilter.create(math.max(1L, footerRows(file, conf.value.value)), Fpp)
+          var n = 0L
+          rows.foreach { r => if (r._2 != null) bf.putString(r._2); n += 1 }
+          (file, ser(bf), n)
+        }
+        .toDF("file", "bloom", "nkeys"),
+      files)
   }
 
   /** Row count in the parquet footer of `file` (an `input_file_name()`
-    * URI, decoded as [[readablePaths]] does). Reads the footer only.
+    * URI). Reads the footer only.
     */
   private def footerRows(file: String, conf: Configuration): Long = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
@@ -90,28 +94,19 @@ object BloomIndex {
     try reader.getRecordCount finally reader.close()
   }
 
-  /** URI strings (Path.toUri.toString, the index's join key form) fed
-    * back into spark.read would be re-parsed as PATH strings, double
-    * percent-encoding any escaped character — a lake under '/my lake'
-    * lists as 'my%20lake' and a naive read resolves a literal 'my%20lake'
-    * dir. Route through java.net.URI so the read sees the decoded path.
-    */
-  private[lake] def readablePaths(uris: Seq[String]): Seq[String] =
-    uris.map(u => new org.apache.hadoop.fs.Path(new java.net.URI(u)).toString)
+  /** What a lookup's candidate pass reads of a row besides its key. */
+  private val Payload = new StructType().add("bloom", BinaryType)
+
+  /** True on a row whose filter might contain one of `keys`. */
+  private def mightContain(keys: Seq[String]): org.apache.spark.sql.Column =
+    udf((bloom: Array[Byte]) => keys.exists(deser(bloom).mightContainString)).apply(col("bloom"))
 
   /** Build (or rebuild) the index sidecar: one row per data file with
     * the file's length and a bloom filter of its `keyCol` values, sized
-    * from the file's row count.
+    * from the file's row count. A [[refresh]] that carries nothing.
     */
-  def build(table: LakeTable, path: String, keyCol: String): Long = {
-    val spark = table.read.sparkSession
-    import spark.implicits._
-    val perFile = bloomRows(table.read, keyCol)
-    // join the current listing for each file's length (freshness token);
-    // the listing is driver-side but only touches paths, never data
-    val lens = fileLengths(spark, path).toSeq.toDF("file", "len")
-    Staged.land(spark, sidecar(path), perFile.join(lens, "file"))
-  }
+  def build(table: LakeTable, path: String, keyCol: String): Long =
+    landDirectory(table, path, keyCol, carry = false)._2
 
   /** Incremental rebuild: bloom ONLY the files the index doesn't cover
     * (new, or length-changed — i.e. the churn since the last build),
@@ -121,49 +116,24 @@ object BloomIndex {
     * write churn, not lake size — an ingest touching 1% of the buckets
     * re-blooms 1% of the files. Returns (keptRows, rebuiltRows).
     */
-  def refresh(table: LakeTable, path: String, keyCol: String): (Long, Long) = {
-    val spark = table.read.sparkSession
-    import spark.implicits._
-    val idxPath = new org.apache.hadoop.fs.Path(sidecar(path))
-    val fs = idxPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(idxPath))
-      return (0L, build(table, path, keyCol))
-    val live = fileLengths(spark, path)
-    val old = spark.read.parquet(idxPath.toString)
-    val lens = live.toSeq.toDF("file", "len2")
-    // unchanged rows: same path AND same length as the live listing
-    val kept = old.join(lens, old("file") === lens("file") &&
-        old("len") === lens("len2"))
-      .select(old("file"), old("bloom"), old("nkeys"), old("len"))
-    // churn = live files with NO unchanged index row, computed
-    // CLUSTER-side (anti-join against the index) — only the churn-sized
-    // path list ever reaches the driver, never an O(files) copy of the
-    // index. (The live listing itself is the scan planner's own driver
-    // file index — irreducible for a plain lake, see fileLengths.)
-    val freshFiles = lens
-      .join(old.select(col("file"), col("len").as("len2")), Seq("file", "len2"), "left_anti")
-      .select(col("file")).as[String].collect().toSeq.sorted
-    val rebuilt =
-      if (freshFiles.isEmpty) kept.limit(0)
-      else bloomRows(
-        spark.read.option("basePath", path).schema(table.read.schema)
-          .parquet(readablePaths(freshFiles): _*),
-        keyCol)
-        .join(live.toSeq.toDF("file", "len"), "file")
-        .select(col("file"), col("bloom"), col("nkeys"), col("len"))
-    // one staged landing: a crash leaves the old index, the new one, or
-    // none — and "none" just means lookups fall back to a full scan,
-    // never a wrong answer. (kept, rebuilt) are observed on that write,
-    // so the churn bloom build runs once, unpersisted. Count the REBUILT
-    // rows, not freshFiles: if the length join ever dropped a file on a
-    // URI-form mismatch, the metric must say so
-    ChurnSplit.landRows(spark, sidecar(path), kept, rebuilt)
+  def refresh(table: LakeTable, path: String, keyCol: String): (Long, Long) =
+    landDirectory(table, path, keyCol, carry = true)
+
+  private def landDirectory(table: LakeTable, path: String, keyCol: String,
+                            carry: Boolean): (Long, Long) = {
+    val df = table.read
+    val spark = df.sparkSession
+    val live = liveFiles(df, path)
+    val fresh = if (carry) FileSidecar.uncovered(spark, sidecar(path), live) else live
+    // when every file is fresh, the table's own scan reads them
+    val src = if (fresh.size == live.size) df else FileSidecar.scan(spark, df.schema, path, fresh)
+    FileSidecar.landCarried(sidecar(path), if (carry) live else Nil, bloomRows(src, fresh, keyCol))
   }
 
-  /** Current data files (qualified URI -> length), resolved through
-    * Spark's OWN file index — the exact enumeration the scan planner
-    * performs (underscore/dot files skipped, partition dirs recursed),
-    * including its parallel/distributed listing above
+  /** The files a scan of `df` (a read of the table at `path`) opens,
+    * resolved through Spark's OWN file index — the exact enumeration the
+    * scan planner performs (underscore/dot files skipped, partition dirs
+    * recursed), including its parallel/distributed listing above
     * `spark.sql.sources.parallelPartitionDiscovery.threshold`. No
     * hand-rolled driver `listStatus` recursion: bloom maintenance lists
     * nothing a plain read of the table wouldn't. (The zero-listing tier
@@ -172,12 +142,13 @@ object BloomIndex {
     * is no transactional manifest to trust, and a stale one would make
     * lookups silently skip files.)
     */
-  private def fileLengths(spark: SparkSession, path: String): Map[String, Long] = {
+  private def liveFiles(df: DataFrame, path: String): Seq[LiveFile] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    spark.read.parquet(path).queryExecution.analyzed.collectFirst {
+    df.queryExecution.analyzed.collectFirst {
       case lr: LogicalRelation if lr.relation.isInstanceOf[HadoopFsRelation] =>
-        lr.relation.asInstanceOf[HadoopFsRelation].location.listFiles(Nil, Nil)
-          .flatMap(_.files).map(f => f.getPath.toUri.toString -> f.getLen).toMap
+        FileSidecar.ofListing(df.sparkSession, path,
+          lr.relation.asInstanceOf[HadoopFsRelation].location.listFiles(Nil, Nil)
+            .flatMap(_.files).map(f => (f.getPath, f.getLen)))
     }.getOrElse(throw new IllegalStateException(
       s"parquet scan at $path did not expose a file index"))
   }
@@ -190,50 +161,9 @@ object BloomIndex {
     */
   def lookup(table: LakeTable, path: String, keyCol: String,
              keys: Seq[String]): (DataFrame, Int) = {
-    val spark = table.read.sparkSession
-    val live = fileLengths(spark, path)
-    val idxPath = sidecar(path)
-    val schema = table.read.schema
-    val candidates = bloomCandidates(spark, idxPath, live, keys)
-    val df =
-      if (candidates.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      // basePath keeps partition columns derivable when the candidate
-      // list names leaf files inside partition dirs
-      else spark.read.option("basePath", path).schema(schema).parquet(readablePaths(candidates): _*)
-        .filter(col(keyCol).cast("string").isin(keys: _*))
-    (df, candidates.size)
-  }
-
-  /** The candidate-file pass shared by the directory and snapshot tiers:
-    * one distributed scan evaluates might-contain next to the bloom
-    * bytes; only (path, len, hit) triples reach the driver — bytes per
-    * file, not the filters. A live file missing from the index
-    * (or length-drifted) is an unconditional candidate — never a wrong
-    * answer, only less selective.
-    */
-  private def bloomCandidates(spark: SparkSession, idxPath: String,
-                              live: Map[String, Long], keys: Seq[String]): Seq[String] = {
-    import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(idxPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(idxPath))) live.keys.toSeq
-    else {
-      val keyList = keys
-      val idx = spark.read.parquet(idxPath)
-        .select(col("file"), col("len"), col("bloom"))
-        .as[(String, Long, Array[Byte])]
-        .map { case (f, len, bloom) =>
-          (f, len, keyList.exists(deser(bloom).mightContainString))
-        }.collect()
-      val byFile = idx.map { case (f, len, hit) => f -> (len, hit) }.toMap
-      live.iterator.filter { case (f, len) =>
-        byFile.get(f) match {
-          case Some((l, hit)) if l == len => hit // unchanged: trust the filter
-          case _ => true // new or rewritten since the build: scan it
-        }
-      }.map(_._1).toSeq
-    }
+    val df = table.read
+    FileSidecar.prunedScan(df.sparkSession, sidecar(path), path, df.schema, liveFiles(df, path),
+      Payload, mightContain(keys), col(keyCol).cast("string").isin(keys: _*))
   }
 
   // ------------------------------------------------------------------
@@ -249,18 +179,6 @@ object BloomIndex {
 
   private[graft] def snapSidecar(path: String) = path + "/_bloomidx"
 
-  /** Manifest file list as (qualified URI -> length) — the same URI form
-    * `input_file_name()` reports, so index rows join exactly. No fs
-    * status calls: lengths come from the manifest.
-    */
-  private[lake] def manifestFiles(lake: SnapshotLake, m: SnapshotLake.Manifest): Map[String, Long] = {
-    val root = new org.apache.hadoop.fs.Path(lake.path)
-    val fs = root.getFileSystem(lake.spark.sparkContext.hadoopConfiguration)
-    m.files.map(f =>
-      fs.makeQualified(new org.apache.hadoop.fs.Path(lake.path, f.rel)).toUri.toString -> f.len)
-      .toMap
-  }
-
   /** Refresh the snapshot lake's bloom index: bloom only the data files
     * added since the last refresh, keep existing rows verbatim (files are
     * immutable — their bloom bytes never need recomputing), and retain a
@@ -268,47 +186,13 @@ object BloomIndex {
     * file so time-travel lookups stay selective. Cost is proportional to
     * write churn, never lake size. Returns (keptRows, bloomedRows).
     */
-  def refreshSnapshot(lake: SnapshotLake, keyCol: String): (Long, Long) = {
-    val spark = lake.spark
-    import spark.implicits._
-    val versions = lake.completeVersions
-    if (versions.isEmpty) return (0L, 0L)
-    val manifests = versions.flatMap(lake.readManifest)
-    // union of live files across every retained version: time travel to
-    // any of them keeps a selective index; vacuumed files fall out
-    val live: Map[String, Long] =
-      manifests.foldLeft(Map.empty[String, Long])((acc, m) => acc ++ manifestFiles(lake, m))
-    val schema = manifests.last.schema
-    val idxPath = snapSidecar(lake.path)
-    val fs = new org.apache.hadoop.fs.Path(idxPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val idxExists = fs.exists(new org.apache.hadoop.fs.Path(idxPath))
-    val lens = live.toSeq.toDF("file", "len2")
-    val kept =
-      if (!idxExists)
-        spark.emptyDataset[(String, Array[Byte], Long, Long)]
-          .toDF("file", "bloom", "nkeys", "len")
-      else spark.read.parquet(idxPath).alias("old")
-        .join(lens, col("old.file") === lens("file") && col("old.len") === lens("len2"))
-        .select(col("old.file"), col("old.bloom"), col("old.nkeys"), col("old.len"))
-    // churn computed cluster-side, like the directory tier: anti-join the
-    // manifest-resolved live set against the index; only churn-sized
-    // paths land on the driver
-    val freshFiles =
-      if (!idxExists) live.keys.toSeq.sorted
-      else lens.join(
-          spark.read.parquet(idxPath).select(col("file"), col("len").as("len2")),
-          Seq("file", "len2"), "left_anti")
-        .select(col("file")).as[String].collect().toSeq.sorted
-    val rebuilt =
-      if (freshFiles.isEmpty) kept.limit(0)
-      else bloomRows(spark.read.schema(schema).parquet(readablePaths(freshFiles): _*), keyCol)
-        .join(lens.withColumnRenamed("len2", "len"), "file")
-        .select(col("file"), col("bloom"), col("nkeys"), col("len"))
-    // (kept, rebuilt) observed on the one staged landing, as in [[refresh]]
-    ChurnSplit.landRows(spark, idxPath, kept, rebuilt)
-  }
-
+  def refreshSnapshot(lake: SnapshotLake, keyCol: String): (Long, Long) =
+    lake.retainedFiles.fold((0L, 0L)) { case (schema, files) =>
+      val live = FileSidecar.ofManifest(lake, files)
+      val fresh = FileSidecar.uncovered(lake.spark, snapSidecar(lake.path), live)
+      FileSidecar.landCarried(snapSidecar(lake.path), live,
+        bloomRows(FileSidecar.scan(lake.spark, schema, lake.path, fresh), fresh, keyCol))
+    }
 
   /** Point lookup against a committed snapshot version (default: the
     * newest): resolve the manifest, keep the bloom-candidate files, open
@@ -317,18 +201,9 @@ object BloomIndex {
     */
   def lookupSnapshot(lake: SnapshotLake, keyCol: String, keys: Seq[String],
                      at: Option[Long] = None): (DataFrame, Int) = {
-    val spark = lake.spark
-    val v = at.orElse(lake.latestVersion).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at ${lake.path}"))
-    val m = lake.readManifest(v).getOrElse(throw new IllegalArgumentException(
-      s"no complete snapshot v$v at ${lake.path}"))
-    val live = manifestFiles(lake, m)
-    val candidates = bloomCandidates(spark, snapSidecar(lake.path), live, keys)
-    val df =
-      if (candidates.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-      else spark.read.schema(m.schema).parquet(readablePaths(candidates): _*)
-        .filter(col(keyCol).cast("string").isin(keys: _*))
-    (df, candidates.size)
+    val m = lake.resolve(at)
+    FileSidecar.prunedScan(lake.spark, snapSidecar(lake.path), lake.path, m.schema,
+      FileSidecar.ofManifest(lake, m.files), Payload, mightContain(keys),
+      col(keyCol).cast("string").isin(keys: _*))
   }
 }

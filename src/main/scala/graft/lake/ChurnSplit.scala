@@ -28,14 +28,12 @@ import org.apache.spark.sql.functions._
   * recompute, never correctness"). Non-users of [[split]],
   * deliberately: [[graft.ops.BpeIndex]] (its word cache only ever GROWS
   * — re-delivery and deletion are meaningless for a vocabulary), and
-  * the lake sidecars ([[BloomIndex]]/[[ZoneMapIndex]]), whose key is
-  * the (file, len) physical identity joined against a manifest, not a
-  * record fingerprint.
+  * the file-keyed lake sidecars, whose rule is [[FileSidecar]]'s.
   *
   * [[land]] recombines the split and lands it through [[Staged.land]]
   * ([[graft.ops.PostingsIndex]] and [[graft.ops.FuzzyJoinIndex]], whose
   * tables swap together through [[Staged.landMany]], recombine with
-  * [[observedUnion]]; [[BloomIndex]], [[ZoneMapIndex]] and
+  * [[observedUnion]]; [[FileSidecar]] and
   * [[graft.ops.IncrementalLabels]] land their kept and rebuilt rows
   * through [[landRows]]) — split decides WHAT to rewrite, the staged
   * swap guarantees the rewrite is never torn.
@@ -100,7 +98,7 @@ object ChurnSplit {
   /** Land kept ∪ fresh at `path` in one staged write, after the
     * uncounted `carried` rows if any, and return `n` over the kept and
     * the fresh branch of that write. [[land]]'s body, and the landing of
-    * index rows not split here ([[BloomIndex]]'s (file, len) rows, and
+    * index rows not split here ([[FileSidecar]]'s (file, len) rows, and
     * [[graft.ops.DedupIndex.build]]'s, all fresh).
     */
   def landRows(spark: SparkSession, path: String, kept: DataFrame, fresh: DataFrame,

@@ -627,11 +627,6 @@ class LakeTable(spark: SparkSession, path: String, keyCol: String,
     p.withColumn("patched_at", current_timestamp())
       .write.mode(SaveMode.Append).parquet(path + ".patches")
 
-  def patchesExist: Boolean =
-    new org.apache.hadoop.fs.Path(path + ".patches")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(new org.apache.hadoop.fs.Path(path + ".patches"))
-
   def readPatches: DataFrame = spark.read.parquet(path + ".patches")
 
   /** K8: summary singleton — a one-row table keyed by a constant id,

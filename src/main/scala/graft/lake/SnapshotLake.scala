@@ -96,9 +96,23 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
   def latestVersion: Option[Long] =
     claimedVersions.reverse.find(v => readManifest(v).isDefined)
 
-  /** All versions with a complete manifest, ascending. */
-  private[lake] def completeVersions: Seq[Long] =
-    claimedVersions.filter(v => readManifest(v).isDefined)
+  /** The newest complete version's schema and every data file some
+    * complete version references, each once; None with no complete
+    * version. Reads each manifest once.
+    */
+  private[lake] def retainedFiles: Option[(StructType, Seq[FileEntry])] = {
+    val ms = claimedVersions.flatMap(readManifest)
+    ms.lastOption.map(m => (m.schema, ms.flatMap(_.files).distinct))
+  }
+
+  /** The manifest of version `at`, or of the newest complete version;
+    * throws when there is none.
+    */
+  private[lake] def resolve(at: Option[Long]): Manifest = at match {
+    case Some(v) => requireManifest(v)
+    case None => claimedVersions.reverseIterator.flatMap(readManifest).nextOption()
+      .getOrElse(throw new IllegalArgumentException(s"no snapshots at $path"))
+  }
 
   private[graft] def readManifest(v: Long): Option[Manifest] = {
     val p = manifestPath(v)
@@ -112,7 +126,7 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
       // that listed the claim can race that delete between listing and
       // this open (exists-then-open is the same TOCTOU as the claim
       // itself was). A vanished claim is simply "no complete manifest"
-      // — crashing latestVersion/completeVersions over it turned writer
+      // — crashing latestVersion/retainedFiles over it turned writer
       // conflicts into reader failures (caught by the claim-storm spec)
       case _: java.io.FileNotFoundException => None
     }
@@ -328,8 +342,7 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
     * predicate matching nothing commits nothing (no empty version).
     */
   def deleteWhere(cond: org.apache.spark.sql.Column): Unit = {
-    val cur = requireManifest(latestVersion.getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path")))
+    val cur = resolve(None)
     if (cur.files.isEmpty) return
     val live = spark.read.schema(cur.schema)
       .parquet(cur.files.map(f => s"$path/${f.rel}"): _*)
@@ -356,8 +369,7 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
     * nothing worth packing.
     */
   def compact(smallBytes: Long = 32L << 20, targetBytes: Long = 128L << 20): (Int, Int) = {
-    val cur = requireManifest(latestVersion.getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path")))
+    val cur = resolve(None)
     val (small, big) = cur.files.partition(_.len < smallBytes)
     if (small.size <= 1) return (0, 0) // one small file can't pack any tighter
     val nOut = math.max(1, math.ceil(small.map(_.len).sum.toDouble / targetBytes).toInt)
@@ -378,8 +390,7 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
     * cleanly instead of clobbering.
     */
   def cluster(sortCols: Seq[org.apache.spark.sql.Column], nFiles: Int): Unit = {
-    val cur = requireManifest(latestVersion.getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at $path")))
+    val cur = resolve(None)
     val clustered = readAt(cur.version)
       .repartitionByRange(nFiles, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)

@@ -1,7 +1,8 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Per-file min/max (zone-map) sidecar for RANGE predicates over a
   * [[SnapshotLake]] — the range-scan sibling of [[BloomIndex]]'s
@@ -22,13 +23,11 @@ import org.apache.spark.sql.functions._
   * O(lake) — the data-skipping design Delta/Iceberg stats files use,
   * and the piece that makes bounded scans hold at 100 TB.
   *
-  * Maintenance contract (same as the bloom tier): snapshot data files
-  * are immutable, so a zone row never goes stale — refresh computes
-  * stats for the files added since the last refresh ONLY (anti-join,
-  * churn-sized), carries every other row verbatim, and drops rows no
-  * retained version references. A live file the sidecar doesn't cover
-  * yet is an UNCONDITIONAL candidate: a lagging index costs
-  * selectivity, never rows.
+  * Rows are (file, minv, maxv, nrows, nvals, len) and follow
+  * [[FileSidecar]]'s (file, len) rule, like the bloom tier's: a refresh
+  * computes stats for uncovered files only and carries the rest while
+  * a retained version references them, and an uncovered file is always
+  * a range-scan candidate.
   */
 object ZoneMapIndex {
 
@@ -45,7 +44,7 @@ object ZoneMapIndex {
     * TimeJoins reserved-`__graft_bin` lesson applied here).
     */
   private def requireIndexable(valCol: String): Unit = {
-    val reserved = Set("file", "len", "len2", "minv", "maxv", "nrows", "nvals")
+    val reserved = Set("file", "len", "minv", "maxv", "nrows", "nvals")
     require(!reserved.contains(valCol),
       s"column '$valCol' collides with the zone-map sidecar schema ($reserved)")
     require(valCol.nonEmpty && valCol.forall(c => c.isLetterOrDigit || c == '_'),
@@ -79,68 +78,35 @@ object ZoneMapIndex {
     valCols.foreach(requireIndexable)
     val spark = lake.spark
     import spark.implicits._
-    val versions = lake.completeVersions
-    if (versions.isEmpty) return valCols.map(_ -> (0L, 0L)).toMap
-    val manifests = versions.flatMap(lake.readManifest)
-    val live: Map[String, Long] =
-      manifests.foldLeft(Map.empty[String, Long])((acc, m) =>
-        acc ++ BloomIndex.manifestFiles(lake, m))
-    val schema = manifests.last.schema
-    val lens = live.toSeq.toDF("file", "len2")
-    val fs = new org.apache.hadoop.fs.Path(lake.path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // per-column churn (each sidecar carries its own freshness)
-    val perCol = valCols.map { c =>
-      val idxPath = snapSidecar(lake.path, c)
-      val idxExists = fs.exists(new org.apache.hadoop.fs.Path(idxPath))
-      val fresh: Seq[String] =
-        if (!idxExists) live.keys.toSeq.sorted
-        else lens.join(
-            spark.read.parquet(idxPath).select(col("file"), col("len").as("len2")),
-            Seq("file", "len2"), "left_anti")
-          .select(col("file")).as[String].collect().toSeq.sorted
-      (c, idxExists, fresh)
-    }
-    val unionFresh = perCol.flatMap(_._3).distinct.sorted
-    // ONE scan of the union churn computes EVERY column's stats
-    val statsAll =
-      if (unionFresh.isEmpty) null
-      else {
-        val src = spark.read.schema(schema)
-          .parquet(BloomIndex.readablePaths(unionFresh): _*)
-        src.groupBy(input_file_name().as("file"))
+    lake.retainedFiles.fold(valCols.map(_ -> (0L, 0L)).toMap) { case (schema, files) =>
+      val live = FileSidecar.ofManifest(lake, files)
+      // per-column churn (each sidecar carries its own freshness)
+      val fresh = valCols.map(c =>
+        c -> FileSidecar.uncovered(spark, snapSidecar(lake.path, c), live)).toMap
+      val unionFresh = fresh.values.flatten.toSeq.distinct.sortBy(_.file)
+      // ONE scan of the union churn computes EVERY column's stats
+      val stats = FileSidecar.keyed(
+        FileSidecar.scan(spark, schema, lake.path, unionFresh)
+          .groupBy(input_file_name().as("file"))
           .agg(count(lit(1)).as("nrows"),
             valCols.flatMap(c => Seq(
               min(col(c)).as(s"minv_$c"), max(col(c)).as(s"maxv_$c"),
-              count(col(c)).as(s"nvals_$c"))): _*)
-          .join(lens.withColumnRenamed("len2", "len"), "file")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-    val out = perCol.map { case (c, idxExists, fresh) =>
-      val idxPath = snapSidecar(lake.path, c)
-      val rebuilt =
-        if (statsAll == null || fresh.isEmpty) null
-        // a column whose churn is the whole scanned set reads the stats as is
-        else (if (fresh.size == unionFresh.size) statsAll
-          // semi-join, not isin: a first build's fresh list is EVERY live
-          // file and an In over 10^6 literals is a plan, not a filter
-          else statsAll.join(fresh.toDF("file"), Seq("file"), "left_semi"))
-          .select(col("file"), col(s"minv_$c").as("minv"), col(s"maxv_$c").as("maxv"),
-            col("nrows"), col(s"nvals_$c").as("nvals"), col("len"))
-      val kept =
-        if (!idxExists) null
-        else spark.read.parquet(idxPath).alias("old")
-          .join(lens, col("old.file") === lens("file") && col("old.len") === lens("len2"))
-          .select(col("old.file"), col("old.minv"), col("old.maxv"),
-            col("old.nrows"), col("old.nvals"), col("old.len"))
-      (kept, rebuilt) match {
-        case (null, null) => c -> (0L, 0L) // empty lake
-        case (k, null) => c -> (Staged.land(spark, idxPath, k), 0L)
-        case (k, r) => c -> ChurnSplit.landRows(spark, idxPath, Option(k).getOrElse(r.limit(0)), r)
-      }
-    }.toMap
-    if (statsAll != null) statsAll.unpersist()
-    out
+              count(col(c)).as(s"nvals_$c"))): _*),
+        unionFresh).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val out = valCols.map { c =>
+        // a column whose churn is the whole scanned set reads the stats as
+        // is; a semi-join, not isin: a first build's churn is EVERY live
+        // file and an In over 10^6 literals is a plan, not a filter
+        val rows =
+          if (fresh(c).size == unionFresh.size) stats
+          else stats.join(fresh(c).map(_.file).toDF("file"), Seq("file"), "left_semi")
+        c -> FileSidecar.landCarried(snapSidecar(lake.path, c), live,
+          rows.select(col("file"), col(s"minv_$c").as("minv"), col(s"maxv_$c").as("maxv"),
+            col("nrows"), col(s"nvals_$c").as("nvals"), col("len")))
+      }.toMap
+      stats.unpersist()
+      out
+    }
   }
 
   /** Metadata-only aggregate: (min_v, max_v, n_rows, n_vals) of `valCol`
@@ -160,19 +126,15 @@ object ZoneMapIndex {
                          at: Option[Long] = None): DataFrame = {
     requireIndexable(valCol)
     val spark = lake.spark
-    import spark.implicits._
-    val v = at.orElse(lake.latestVersion).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at ${lake.path}"))
-    val m = lake.readManifest(v).getOrElse(throw new IllegalArgumentException(
-      s"no complete snapshot v$v at ${lake.path}"))
-    val live = BloomIndex.manifestFiles(lake, m)
+    val m = lake.resolve(at)
+    val live = FileSidecar.ofManifest(lake, m.files)
     val idxPath = snapSidecar(lake.path, valCol)
     val fs = new org.apache.hadoop.fs.Path(idxPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(idxPath)))
       throw new IllegalStateException(
         s"no zone-map sidecar for '$valCol' at ${lake.path} — build it first")
-    val lens = live.toSeq.toDF("file", "len")
+    val lens = FileSidecar.keys(spark, live)
     val idx = spark.read.parquet(idxPath)
     // coverage as ONE count over the join — the check stays cluster-side
     // next to the sidecar rows instead of materializing a per-file driver
@@ -192,7 +154,7 @@ object ZoneMapIndex {
       matched.unpersist()
       throw new IllegalStateException(
         s"zone-map sidecar matches $nMatched rows / $nDistinct distinct files " +
-          s"of ${live.size} live files of v$v (fewer distinct = stale, " +
+          s"of ${live.size} live files of v${m.version} (fewer distinct = stale, " +
           "rows > distinct = duplicate stats rows) — refresh/rebuild " +
           "before serving a metadata-only aggregate")
     }
@@ -219,48 +181,14 @@ object ZoneMapIndex {
                           lo: org.apache.spark.sql.Column, hi: org.apache.spark.sql.Column,
                           at: Option[Long] = None): (DataFrame, Int) = {
     requireIndexable(valCol)
-    val spark = lake.spark
-    import spark.implicits._
-    val v = at.orElse(lake.latestVersion).getOrElse(
-      throw new IllegalArgumentException(s"no snapshots at ${lake.path}"))
-    val m = lake.readManifest(v).getOrElse(throw new IllegalArgumentException(
-      s"no complete snapshot v$v at ${lake.path}"))
-    val live = BloomIndex.manifestFiles(lake, m)
-    val idxPath = snapSidecar(lake.path, valCol)
-    val fs = new org.apache.hadoop.fs.Path(idxPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val candidates: Seq[String] =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(idxPath))) live.keys.toSeq.sorted
-      else {
-        // pruning decided CLUSTER-side next to the stats: join the
-        // manifest-resolved live set against the sidecar and collect only
-        // the CANDIDATE paths (selectivity-sized), never the full sidecar
-        // — the serve path has no per-live-file driver map, so a 10^6-file
-        // lake costs the driver only what the predicate keeps.
-        // An all-null file carries (null, null) bounds; the overlap
-        // predicate is then NULL and coalesce prunes it — a range never
-        // matches null values, and decoding a NULL hit would otherwise
-        // crash the whole scan (round-13 advice finding).
-        val lens = live.toSeq.toDF("file", "len")
-        lens.join(
-            spark.read.parquet(idxPath)
-              .select(col("file"), col("len"),
-                coalesce(col("maxv") >= lo && col("minv") <= hi, lit(false)).as("__hit")),
-            Seq("file", "len"), "left_outer")
-          // uncovered (no sidecar row at this len) => unconditional
-          // candidate: a lagging index costs selectivity, never rows.
-          // distinct: a duplicate sidecar row must not read its file
-          // twice (the pre-r14 per-file map was duplicate-immune; keep
-          // that invariant on the join path)
-          .filter(col("__hit").isNull || col("__hit"))
-          .select(col("file")).distinct().as[String].collect().toSeq.sorted
-      }
-    val df =
-      if (candidates.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-      else spark.read.schema(m.schema)
-        .parquet(BloomIndex.readablePaths(candidates): _*)
-        .filter(col(valCol) >= lo && col(valCol) <= hi)
-    (df, candidates.size)
+    val m = lake.resolve(at)
+    val valType = m.schema(valCol).dataType
+    FileSidecar.prunedScan(lake.spark, snapSidecar(lake.path, valCol), lake.path, m.schema,
+      FileSidecar.ofManifest(lake, m.files),
+      new StructType().add("minv", valType).add("maxv", valType),
+      // an all-null file's (null, null) bounds give a NULL hit: pruned, as
+      // a range never matches null values
+      col("maxv") >= lo && col("minv") <= hi,
+      col(valCol) >= lo && col(valCol) <= hi)
   }
 }
