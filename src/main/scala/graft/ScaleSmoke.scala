@@ -162,9 +162,9 @@ object ScaleSmoke {
     }
 
     // ---------------------------------------- zone-map range-scan tier
-    // snapshot lake clustered by price: the manifest-resolved min/max
-    // sidecar must prune a ~2% price band to a handful of files, and
-    // sidecar maintenance must follow the churn of an append drop
+    // snapshot lake clustered by price: the manifest's per-file min/max
+    // stats must prune a ~2% price band to a handful of files, and an
+    // append drop's commit must add stats for its new files only
     val snap = new graft.lake.SnapshotLake(spark, s"$work/snaplake", "o_orderkey")
     phase("zonemap-lake-cluster") {
       val o = spark.read.parquet(s"$work/orders.parquet")
@@ -173,11 +173,8 @@ object ScaleSmoke {
       snap.cluster(Seq(col("o_totalprice")), 64)
       snap.read.count()
     }
-    phase("zonemap-build") {
-      val (_, built) = graft.lake.ZoneMapIndex.refreshSnapshot(snap, "o_totalprice")
-      built
-    }
-    phase("zonemap-range-scan") {
+    /** The rows of a price band; requires that it opened few files. */
+    def band(): Long = {
       val (rows, opened) = graft.lake.ZoneMapIndex.rangeLookupSnapshot(
         snap, "o_totalprice", lit(100000.0), lit(110000.0))
       val total = snap.readManifest(snap.latestVersion.get).get.files.size
@@ -185,16 +182,21 @@ object ScaleSmoke {
         s"zone maps must prune the clustered lake: opened=$opened of $total")
       rows.count()
     }
-    phase("zonemap-append-refresh") {
+    phase("zonemap-range-scan")(band())
+    phase("zonemap-append-stats") {
       // an append-only drop (fresh key range): the CoW rewrites nothing,
-      // so the refresh stats-scans exactly the drop's new files
+      // so the only new entries are the drop's files, each with stats
+      val before = snap.readManifest(snap.latestVersion.get).get.files
       snap.upsert(spark.read.parquet(s"$baseDir/orders.parquet")
         .select((col("o_orderkey") + lit(factor.toLong * keySpan)).as("o_orderkey"),
           col("o_custkey"), col("o_totalprice")))
-      val (kept, scanned) = graft.lake.ZoneMapIndex.refreshSnapshot(snap, "o_totalprice")
-      require(scanned > 0 && scanned.toDouble / (kept + scanned) < 0.35,
-        s"zonemap refresh must be churn-proportional: kept=$kept scanned=$scanned")
-      scanned
+      val after = snap.readManifest(snap.latestVersion.get).get.files
+      val fresh = after.filterNot(before.contains)
+      require(fresh.nonEmpty && after.size == before.size + fresh.size &&
+        fresh.forall(_.stats.exists(_.cols.contains("o_totalprice"))),
+        s"an append must add ${fresh.size} entries with stats: ${before.size} -> ${after.size}")
+      band()
+      fresh.size.toLong
     }
 
     // ------------------------------------- persisted MinHash band index

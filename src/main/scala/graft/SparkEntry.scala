@@ -1257,24 +1257,20 @@ object SparkEntry {
     }),
 
     // Zone-map (min/max stats) tier: the RANGE-scan sibling of the bloom
-    // point lookup, resolved from snapshot manifests — v1 scatters the
-    // keys, v2 sort-rewrites by price (SnapshotLake.cluster) so each file
-    // covers a narrow price interval, the sidecar lifts per-file min/max
-    // into one manifest-resolved table; a CoW upsert then moves every
-    // 97th key's price and the churn-only refresh must track it. The
-    // served range scan opens only interval-overlapping files and must
-    // hash-match the plain BETWEEN recompute.
+    // point lookup, pruned by the per-file stats each commit writes into
+    // its manifest — v1 scatters the keys, v2 sort-rewrites by price so
+    // each file covers a narrow price interval, v3 (CoW upsert) moves
+    // every 97th key's price. The range scan opens only overlapping files
+    // and must hash-match the plain BETWEEN recompute.
     "q_zonemap_range" -> ((s, dir) => {
       val orders = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_zonemap_q").toString
+      val tmp = java.nio.file.Files.createTempDirectory("graft_zmrange_q").toString
       val lake = new graft.lake.SnapshotLake(s, tmp + "/lake", "o_orderkey")
       lake.overwrite(orders.repartition(8, col("o_orderkey")))             // v1 scattered
       lake.cluster(Seq(col("o_totalprice")), 8)                            // v2 clustered
-      graft.lake.ZoneMapIndex.refreshSnapshot(lake, "o_totalprice")
       lake.upsert(orders.filter(col("o_orderkey") % 97 === 0)              // v3 (CoW)
         .withColumn("o_totalprice", col("o_totalprice") + 600000.0))
-      graft.lake.ZoneMapIndex.refreshSnapshot(lake, "o_totalprice")        // churn-only
       val (rows, _) = graft.lake.ZoneMapIndex.rangeLookupSnapshot(
         lake, "o_totalprice", lit(400000.0), lit(700000.0))
       val out = rows
@@ -1286,23 +1282,19 @@ object SparkEntry {
       out
     }),
 
-    // Metadata-only aggregate from the zone-map sidecar: min/max/count
-    // of the price column answered with ZERO data files opened — the
-    // manifest-stats trick that makes `SELECT min(x), max(x), count(*)`
-    // a millisecond query at 100 TB. The CoW upsert between refreshes
-    // proves the coverage gate tracks rewrites (a stale sidecar THROWS
-    // rather than serve a wrong number; here it is refreshed, so the
-    // served row must hash-match the full-scan recompute).
+    // Metadata-only aggregate from the manifest's per-file stats:
+    // min/max/count of the price column with ZERO data files opened —
+    // `SELECT min(x), max(x), count(*)` in milliseconds at 100 TB. The
+    // CoW upsert's files carry their stats from the commit, so the served
+    // row must hash-match the full-scan recompute.
     "q_zonemap_agg" -> ((s, dir) => {
       val orders = t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"))
       val tmp = java.nio.file.Files.createTempDirectory("graft_zmagg_q").toString
       val lake = new graft.lake.SnapshotLake(s, tmp + "/lake", "o_orderkey")
       lake.overwrite(orders.repartition(8, col("o_orderkey")))             // v1
-      graft.lake.ZoneMapIndex.refreshSnapshot(lake, "o_totalprice")
       lake.upsert(orders.filter(col("o_orderkey") % 97 === 0)              // v2 (CoW)
         .withColumn("o_totalprice", col("o_totalprice") + 600000.0))
-      graft.lake.ZoneMapIndex.refreshSnapshot(lake, "o_totalprice")        // churn-only
       val out = graft.lake.ZoneMapIndex.aggregateFromStats(lake, "o_totalprice")
         .localCheckpoint(true) // the scratch lake is deleted next
       new org.apache.hadoop.fs.Path(tmp)

@@ -254,7 +254,8 @@ object Main {
       println(s"[cli] cluster: rewrote into $n files z-ordered by ${cols.mkString(",")}")
     case "index" =>
       // persisted index tiers: bloom point-lookup (default), minhash
-      // near-dup band index, IVF-SQ8 ANN lists — build / refresh / probe
+      // near-dup band index, IVF-SQ8 ANN lists — build / refresh / probe;
+      // zonemap serves range scans from the snapshot manifest's stats
       val lakePath = arg(args, "--lake").get
       val key = arg(args, "--key").getOrElse("_id")
       arg(args, "--kind").getOrElse("bloom") match {
@@ -363,25 +364,20 @@ object Main {
               println(s"[cli] index pca: landed $n moment rows as seg=$dropId (sign=$sign)")
           }
         case "zonemap" =>
-          // manifest-resolved per-file min/max sidecar for RANGE scans
-          // over a snapshot lake (the range sibling of --kind bloom):
-          // --refresh (re)builds at churn cost; --range lo,hi [--col c]
-          // serves a pruned range scan and reports the files opened
+          // RANGE scan over a snapshot lake, pruned by the per-file
+          // min/max stats every commit writes into its manifest (the
+          // range sibling of --kind bloom; nothing to build or refresh):
+          // --range lo,hi [--col c] reports the files opened
           val lake = new graft.lake.SnapshotLake(spark, lakePath, key)
-          val vcol = arg(args, "--col").getOrElse(key)
-          arg(args, "--range") match {
-            case Some(r) =>
-              val Array(lo, hi) = r.split(",", 2)
-              val (rows, opened) = graft.lake.ZoneMapIndex.rangeLookupSnapshot(
-                lake, vcol, org.apache.spark.sql.functions.expr(lo),
-                org.apache.spark.sql.functions.expr(hi))
-              rows.show(100, truncate = false)
-              println(s"[cli] zonemap range scan: opened $opened files")
-            case None =>
-              val (kept, scanned) = graft.lake.ZoneMapIndex.refreshSnapshot(lake, vcol)
-              println(s"[cli] index refresh: carried $kept files, stats-scanned $scanned (churn)")
-          }
-        case other => println(s"index --kind bloom|minhash|ivf|pq|imipq|pca|zonemap (got '$other')")
+          val Array(lo, hi) = arg(args, "--range")
+            .getOrElse(sys.error("index --kind zonemap needs --range lo,hi")).split(",", 2)
+          val (rows, opened) = graft.lake.ZoneMapIndex.rangeLookupSnapshot(
+            lake, arg(args, "--col").getOrElse(key), org.apache.spark.sql.functions.expr(lo),
+            org.apache.spark.sql.functions.expr(hi))
+          rows.show(100, truncate = false)
+          println(s"[cli] zonemap range scan: opened $opened files")
+        case other => println(
+          s"index --kind bloom|minhash|ivf|pq|imipq|pca|zonemap --range lo,hi [--col c] (got '$other')")
       }
     case "semdedup" =>
       // cluster-partitioned semantic dedup over an embedding corpus.

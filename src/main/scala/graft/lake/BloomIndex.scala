@@ -5,7 +5,6 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, StructType}
 import org.apache.spark.util.SerializableConfiguration
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -94,9 +93,6 @@ object BloomIndex {
     try reader.getRecordCount finally reader.close()
   }
 
-  /** What a lookup's candidate pass reads of a row besides its key. */
-  private val Payload = new StructType().add("bloom", BinaryType)
-
   /** True on a row whose filter might contain one of `keys`. */
   private def mightContain(keys: Seq[String]): org.apache.spark.sql.Column =
     udf((bloom: Array[Byte]) => keys.exists(deser(bloom).mightContainString)).apply(col("bloom"))
@@ -163,7 +159,7 @@ object BloomIndex {
              keys: Seq[String]): (DataFrame, Int) = {
     val df = table.read
     FileSidecar.prunedScan(df.sparkSession, sidecar(path), path, df.schema, liveFiles(df, path),
-      Payload, mightContain(keys), col(keyCol).cast("string").isin(keys: _*))
+      mightContain(keys), col(keyCol).cast("string").isin(keys: _*))
   }
 
   // ------------------------------------------------------------------
@@ -203,7 +199,7 @@ object BloomIndex {
                      at: Option[Long] = None): (DataFrame, Int) = {
     val m = lake.resolve(at)
     FileSidecar.prunedScan(lake.spark, snapSidecar(lake.path), lake.path, m.schema,
-      FileSidecar.ofManifest(lake, m.files), Payload, mightContain(keys),
+      FileSidecar.ofManifest(lake, m.files), mightContain(keys),
       col(keyCol).cast("string").isin(keys: _*))
   }
 }

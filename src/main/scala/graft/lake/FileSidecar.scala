@@ -3,12 +3,12 @@ package graft.lake
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType}
 
-/** The rule every file-keyed sidecar follows — [[BloomIndex]]'s directory
-  * and snapshot tiers and [[ZoneMapIndex]]. A sidecar holds one row per
-  * data file, keyed by (file, len): `file` is the file's path relative to
-  * the table root, `len` its length when the row was computed.
+/** The rule [[BloomIndex]]'s directory and snapshot sidecars follow. A
+  * sidecar holds one row per data file, keyed by (file, len): `file` is
+  * the file's path relative to the table root, `len` its length when the
+  * row was computed.
   *
   *  - A row is carried verbatim while its file is live at that length;
   *    rows of vanished or rewritten files drop out at the next landing.
@@ -49,6 +49,11 @@ private[lake] object FileSidecar {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** A sidecar's rows under their fixed schema: no job infers it. */
+  private def read(spark: SparkSession, idxPath: String): DataFrame =
+    spark.read.schema(new StructType().add("file", StringType).add("bloom", BinaryType)
+      .add("nkeys", LongType).add("len", LongType)).parquet(idxPath)
+
   /** (file, len) of `live`: a local relation, joined without a scan. */
   def keys(spark: SparkSession, live: Seq[LiveFile]): DataFrame = {
     import spark.implicits._
@@ -65,7 +70,7 @@ private[lake] object FileSidecar {
       import spark.implicits._
       val byKey = live.map(f => f.file -> f).toMap
       keys(spark, live)
-        .join(spark.read.parquet(idxPath).select("file", "len"), Seq("file", "len"), "left_anti")
+        .join(read(spark, idxPath).select("file", "len"), Seq("file", "len"), "left_anti")
         .select("file").as[String].collect().toSeq.sorted.map(byKey)
     }
 
@@ -92,7 +97,7 @@ private[lake] object FileSidecar {
       else {
         // a join condition, not using-columns: those would move `len` to
         // the front of the carried rows and so of the landed schema
-        val (old, lens) = (spark.read.parquet(idxPath), keys(spark, live))
+        val (old, lens) = (read(spark, idxPath), keys(spark, live))
         old.join(lens, old("file") === lens("file") && old("len") === lens("len"), "left_semi")
       }
     // a crash leaves the old sidecar, the new one, or none — and none
@@ -121,22 +126,18 @@ private[lake] object FileSidecar {
     * files; returns (rows, filesOpened).
     *
     * The candidate pass is one Spark job: it evaluates `hit` on every
-    * sidecar row, reading `file`, `len` and the `payload` columns under
-    * an explicit schema (so no schema inference runs), and collects
-    * (file, len, hit) — bytes per file, never the payload. The driver
-    * keeps a live file when a row at its length hits, or when it has no
-    * row at its length. A null hit does not; a duplicated row cannot
-    * open a file twice.
+    * sidecar row and collects (file, len, hit) — bytes per file, never
+    * the bloom. The driver keeps a live file when a row at its length
+    * hits, or when it has no row at its length. A null hit does not; a
+    * duplicated row cannot open a file twice.
     */
   def prunedScan(spark: SparkSession, idxPath: String, root: String, schema: StructType,
-                 live: Seq[LiveFile], payload: StructType, hit: Column,
-                 filter: Column): (DataFrame, Int) = {
+                 live: Seq[LiveFile], hit: Column, filter: Column): (DataFrame, Int) = {
     import spark.implicits._
     val candidates =
       if (!exists(spark, idxPath)) live
       else {
-        val sidecarSchema = new StructType().add("file", StringType).add("len", LongType)
-        val hits = spark.read.schema(StructType(sidecarSchema ++ payload)).parquet(idxPath)
+        val hits = read(spark, idxPath)
           .select(col("file"), col("len"), coalesce(hit, lit(false)))
           .as[(String, Long, Boolean)].collect()
           .groupMapReduce(h => (h._1, h._2))(_._3)(_ || _)

@@ -143,11 +143,14 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
   /** Time travel: the table exactly as of version `v`. */
   def readAt(v: Long): DataFrame = {
     val m = requireManifest(v)
-    if (m.files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-    else
-      spark.read.schema(m.schema).parquet(m.files.map(f => s"$path/${f.rel}"): _*)
+    scan(m.schema, m.files)
   }
+
+  /** The rows of `files` under `schema` (none: an empty frame). */
+  private[lake] def scan(schema: StructType, files: Seq[FileEntry]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(files.map(f => s"$path/${f.rel}"): _*)
 
   /** Manifest-only version log: (version, op, ts, base_version, n_files,
     * bytes). Zero data IO.
@@ -161,9 +164,11 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
 
   /** Land `df` under unique immutable names in `data/`, return entries.
     * The nonce keys the names, not the version: a conflicted commit's
-    * files can never collide with the winner's.
+    * files can never collide with the winner's. Each entry carries the
+    * [[FileStats]] of the commit's `schema`, read from its footer on the
+    * driver: no Spark job, no data read.
     */
-  private def landFiles(df: DataFrame): Seq[FileEntry] = {
+  private def landFiles(df: DataFrame, schema: StructType): Seq[FileEntry] = {
     val nonce = java.util.UUID.randomUUID().toString.take(12)
     val stage = new org.apache.hadoop.fs.Path(path, s".stage-$nonce")
     df.write.parquet(stage.toString)
@@ -171,11 +176,14 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
     val parts = fs.listStatus(stage).toSeq
       .filter(s => s.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
+    val conf = spark.sparkContext.hadoopConfiguration
     val entries = parts.zipWithIndex.map { case (s, i) =>
+      val stats = FileStats.ofFile(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf), schema)
       val name = f"f-$nonce-$i%05d.parquet"
       if (!fs.rename(s.getPath, new org.apache.hadoop.fs.Path(dataDir, name)))
         throw new java.io.IOException(s"rename into $dataDir failed for ${s.getPath}")
-      FileEntry(s"data/$name", s.getLen)
+      FileEntry(s"data/$name", s.getLen, Some(stats))
     }
     fs.delete(stage, true)
     entries
@@ -266,7 +274,7 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
   /** Truncate-and-load: the new snapshot references only the new files. */
   def overwrite(df: DataFrame): Unit = {
     val base = latestVersion.getOrElse(0L)
-    commitVersion(base, "overwrite", df.schema, landFiles(df))
+    commitVersion(base, "overwrite", df.schema, landFiles(df, df.schema))
   }
 
   /** Append-only commit: previous live set plus the new files. Schema
@@ -278,8 +286,8 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
     case None => overwrite(df)
     case Some(b) =>
       val cur = requireManifest(b)
-      commitVersion(cur.version, "append", unionSchema(cur.schema, df.schema),
-        cur.files ++ landFiles(df))
+      val schema = unionSchema(cur.schema, df.schema)
+      commitVersion(cur.version, "append", schema, cur.files ++ landFiles(df, schema))
   }
 
   /** File-level copy-on-write upsert (K1 under snapshots): rewrite ONLY
@@ -299,8 +307,7 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
       val keys = batch.select(col(keyCol)).distinct()
       val touchedNames: Set[String] =
         if (cur.files.isEmpty) Set.empty
-        else spark.read.schema(cur.schema)
-          .parquet(cur.files.map(f => s"$path/${f.rel}"): _*)
+        else scan(cur.schema, cur.files)
           .select(col(keyCol), col("_metadata.file_path").as("__f"))
           .join(keys, Seq(keyCol), "left_semi")
           .select(col("__f")).distinct().collect()
@@ -308,12 +315,10 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
       val (touched, untouched) = cur.files.partition(f => touchedNames(f.rel.split('/').last))
       val merged =
         if (touched.isEmpty) batch
-        else spark.read.schema(cur.schema)
-          .parquet(touched.map(f => s"$path/${f.rel}"): _*)
-          .join(keys, Seq(keyCol), "left_anti")
+        else scan(cur.schema, touched).join(keys, Seq(keyCol), "left_anti")
           .unionByName(batch, allowMissingColumns = true)
-      commitVersion(cur.version, "upsert", unionSchema(cur.schema, batch.schema),
-        untouched ++ landFiles(merged))
+      val schema = unionSchema(cur.schema, batch.schema)
+      commitVersion(cur.version, "upsert", schema, untouched ++ landFiles(merged, schema))
   }
 
   /** Upsert is BY KEY: a batch with two rows for one key would remove
@@ -344,16 +349,13 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
   def deleteWhere(cond: org.apache.spark.sql.Column): Unit = {
     val cur = resolve(None)
     if (cur.files.isEmpty) return
-    val live = spark.read.schema(cur.schema)
-      .parquet(cur.files.map(f => s"$path/${f.rel}"): _*)
-    val touchedNames = live.filter(cond)
+    val touchedNames = scan(cur.schema, cur.files).filter(cond)
       .select(col("_metadata.file_path")).distinct().collect()
       .map(r => r.getString(0).split('/').last).toSet
     if (touchedNames.isEmpty) return
     val (touched, untouched) = cur.files.partition(f => touchedNames(f.rel.split('/').last))
-    val kept = spark.read.schema(cur.schema)
-      .parquet(touched.map(f => s"$path/${f.rel}"): _*).filter(!cond)
-    commitVersion(cur.version, "delete", cur.schema, untouched ++ landFiles(kept))
+    val kept = scan(cur.schema, touched).filter(!cond)
+    commitVersion(cur.version, "delete", cur.schema, untouched ++ landFiles(kept, cur.schema))
   }
 
   /** Bin-pack compaction as a versioned op — THE recurring operational
@@ -374,10 +376,8 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
     if (small.size <= 1) return (0, 0) // one small file can't pack any tighter
     val nOut = math.max(1, math.ceil(small.map(_.len).sum.toDouble / targetBytes).toInt)
     if (nOut >= small.size) return (0, 0) // packing wouldn't reduce the file count
-    val merged = spark.read.schema(cur.schema)
-      .parquet(small.map(f => s"$path/${f.rel}"): _*)
-      .coalesce(nOut)
-    commitVersion(cur.version, "compact", cur.schema, big ++ landFiles(merged))
+    val merged = scan(cur.schema, small).coalesce(nOut)
+    commitVersion(cur.version, "compact", cur.schema, big ++ landFiles(merged, cur.schema))
     (small.size, nOut)
   }
 
@@ -394,7 +394,7 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
     val clustered = readAt(cur.version)
       .repartitionByRange(nFiles, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
-    commitVersion(cur.version, "cluster", cur.schema, landFiles(clustered))
+    commitVersion(cur.version, "cluster", cur.schema, landFiles(clustered, cur.schema))
   }
 
   /** Row-level change feed between two committed snapshots (CDC read):
@@ -428,14 +428,10 @@ class SnapshotLake(private[lake] val spark: SparkSession, val path: String,
     val to = requireManifest(toV)
     val fromSet = from.files.map(_.rel).toSet
     val toSet = to.files.map(_.rel).toSet
-    def rd(schema: StructType, files: Seq[FileEntry]): DataFrame =
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).parquet(files.map(f => s"$path/${f.rel}"): _*)
     // read old-side files under the NEW schema: fields added since fromV
     // surface as null in the pre-image, exactly as readAt-then-align would
-    val newRows = rd(to.schema, to.files.filterNot(f => fromSet(f.rel)))
-    val oldRows = rd(to.schema, from.files.filterNot(f => toSet(f.rel)))
+    val newRows = scan(to.schema, to.files.filterNot(f => fromSet(f.rel)))
+    val oldRows = scan(to.schema, from.files.filterNot(f => toSet(f.rel)))
     val dataCols = to.schema.fieldNames.toSeq.filterNot(_ == keyCol)
     val n = newRows.alias("n")
     val o = oldRows.alias("o")
@@ -510,7 +506,8 @@ object SnapshotLake {
   // off-by-width found and fixed in CdcConsumer's offset claims).
   private val VersionRe = "v([0-9]{8,})\\.manifest".r
 
-  private[graft] case class FileEntry(rel: String, len: Long)
+  // `stats` is None in a manifest written before entries carried them
+  private[graft] case class FileEntry(rel: String, len: Long, stats: Option[FileStats] = None)
   private[graft] case class Manifest(version: Long, op: String, ts: Long, base: Long,
                                      schema: StructType, files: Seq[FileEntry])
 
@@ -519,15 +516,20 @@ object SnapshotLake {
     StructType(base ++ add.filterNot(f => known(f.name)).map(_.copy(nullable = true)))
   }
 
-  /** k=v header, one `f <len> <rel>` line per file, `end` terminator.
+  /** k=v header, one `f <len> <rel>` line per file, each followed by
+    * its [[FileStats.render]] line when it has stats, `end` terminator.
     * The terminator is the torn-write detector: a manifest without it
-    * does not exist as far as readers are concerned.
+    * does not exist as far as readers are concerned. A parser that does
+    * not know the stats lines skips them.
     */
   private[lake] def renderManifest(m: Manifest): String = {
     val sb = new StringBuilder
     sb ++= s"version=${m.version}\nop=${m.op}\nts=${m.ts}\nbase=${m.base}\n"
     sb ++= s"schema=${m.schema.json}\n"
-    m.files.foreach(f => sb ++= s"f ${f.len} ${f.rel}\n")
+    m.files.foreach { f =>
+      sb ++= s"f ${f.len} ${f.rel}\n"
+      f.stats.foreach(st => sb ++= s"${FileStats.render(st)}\n")
+    }
     sb ++= "end\n"
     sb.toString
   }
@@ -540,10 +542,16 @@ object SnapshotLake {
         .filter(_.contains('=')).map { l =>
           val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
         }.toMap
-      val files = lines.filter(_.startsWith("f ")).map { l =>
-        val Array(_, len, rel) = l.split(" ", 3)
-        FileEntry(rel, len.toLong)
-      }.toSeq
+      // a stats line belongs to the file line before it; one that does
+      // not parse leaves its file without stats, never the version torn
+      val files = lines.foldLeft(Vector.empty[FileEntry]) { (acc, l) =>
+        if (l.startsWith("f ")) {
+          val Array(_, len, rel) = l.split(" ", 3)
+          acc :+ FileEntry(rel, len.toLong)
+        } else if (l.startsWith("s ") && acc.nonEmpty)
+          acc.init :+ acc.last.copy(stats = FileStats.parse(l))
+        else acc
+      }
       Some(Manifest(kv("version").toLong, kv("op"), kv("ts").toLong, kv("base").toLong,
         org.apache.spark.sql.types.DataType.fromJson(kv("schema")).asInstanceOf[StructType],
         files))

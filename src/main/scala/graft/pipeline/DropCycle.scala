@@ -79,10 +79,6 @@ object DropCycle {
     // retract (a summary point is not a signed count); rebuild the path
     // for current-state quantiles after purges.
     quantile: Option[(Seq[String], String, Int, String)] = None,
-    // step 2b: zone-map (min/max) range-scan sidecar over this value
-    // column — [[graft.lake.ZoneMapIndex.refreshSnapshot]]; immutable
-    // files carry verbatim, only the drop's new files get stats-scanned
-    zonemap: Option[String] = None,
     // step 3d: persisted near-dup cluster labels
     // ([[graft.ops.ClusterIndex]]). Needs textCol. The lake's string
     // keys map through the ntp-id codec (labels live in long id space);
@@ -225,11 +221,8 @@ object DropCycle {
           graft.ops.Curation.landDsirDrop(_, key, text, pred, p, _),
           graft.ops.Curation.landDsirChangesDrop(_, key, text, pred, p, _))) }
     }
-    Seq(
-      Option.when(conf.bloom)(step("bloom", BloomIndex.snapSidecar(lake.path))(
-        _ => BloomIndex.refreshSnapshot(lake, key))),
-      conf.zonemap.map(v => step("zonemap", graft.lake.ZoneMapIndex.snapSidecar(lake.path, v))(
-        _ => graft.lake.ZoneMapIndex.refreshSnapshot(lake, v)))).flatten ++
+    Option.when(conf.bloom)(step("bloom", BloomIndex.snapSidecar(lake.path))(
+        _ => BloomIndex.refreshSnapshot(lake, key))).toSeq ++
       textTiers ++ Seq(
         conf.summary.map { case (spec, p) => seg("summary", p)(_.retractable(
           MaterializedAgg.landDrop(_, spec, p, _),

@@ -139,25 +139,6 @@ object EventStreams {
       if (!clean.isEmpty) lake.upsert(clean)
     }
 
-  /** The zone-map twin of [[snapshotSink]]: each micro-batch upserts the
-    * snapshot lake, then churn-refreshes the min/max range-scan sidecar
-    * ([[graft.lake.ZoneMapIndex.refreshSnapshot]]) for `valCol` — the
-    * refresh stats-scans only the batch's new files (immutable carried
-    * files keep their rows verbatim), so range scans stay selective
-    * while drops stream in. Between the upsert and the refresh a range
-    * scan is still CORRECT — not-yet-indexed files are unconditional
-    * candidates — so a crash between the two steps costs selectivity
-    * until the next batch, never rows.
-    */
-  def zonemapSink(lake: graft.lake.SnapshotLake, valCol: String)(
-      drops: DataFrame): DataStreamWriter[org.apache.spark.sql.Row] =
-    upsertSink(drops) { (batch, _) =>
-      if (!batch.isEmpty) {
-        lake.upsert(batch)
-        graft.lake.ZoneMapIndex.refreshSnapshot(lake, valCol)
-      }
-    }
-
   /** STREAMING INDEX MAINTENANCE: each micro-batch of documents upserts
     * the persisted MinHash band index ([[graft.ops.DedupIndex.upsert]])
     * — new/changed docs are signed, re-delivered unchanged docs carry

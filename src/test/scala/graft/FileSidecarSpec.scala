@@ -8,11 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Work
 import graft.lake.{BloomIndex, LakeTable, SnapshotLake, ZoneMapIndex}
 
-/** The (file, len) rule shared by the file-keyed sidecars (the two bloom
-  * tiers and the zone map): rows are keyed by the table-relative path, so
-  * a lake moved with its sidecars stays covered; a refresh lands the same
-  * rows as a rebuild; and each candidate pass is one Spark job over the
-  * sidecar alone.
+/** The (file, len) rule of the bloom sidecars (directory and snapshot
+  * tiers): rows are keyed by the table-relative path, so a lake moved with
+  * its sidecars stays covered (as do the range scans pruned by its
+  * manifest's stats); a refresh lands the same rows as a rebuild; and each
+  * candidate pass is one Spark job over the sidecar alone.
   */
 class FileSidecarSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -45,7 +45,6 @@ class FileSidecarSpec extends AnyFunSuite {
     val lake = new SnapshotLake(spark, s"$root/lake", "k")
     lake.overwrite(docs(4000).repartitionByRange(8, col("v")))
     BloomIndex.refreshSnapshot(lake, "k")
-    ZoneMapIndex.refreshSnapshot(lake, "v")
 
     // the same lake, sidecars included, under a longer directory name
     val moved = s"${tmp("sidecarmove")}/my moved lake copy"
@@ -67,18 +66,14 @@ class FileSidecarSpec extends AnyFunSuite {
     // a refresh of the copy finds nothing to rebuild and lands the same keys
     assert(t2.refreshBloomIndex()._2 == 0L)
     assert(BloomIndex.refreshSnapshot(lake2, "k")._2 == 0L)
-    assert(ZoneMapIndex.refreshSnapshot(lake2, "v")._2 == 0L)
-    val bloom = Seq("file", "bloom", "nkeys", "len")
-    Seq("t.bloomidx" -> bloom, "lake/_bloomidx" -> bloom,
-      "lake/_zonemap_v" -> Seq("file", "minv", "maxv", "nrows", "nvals", "len")).foreach {
-      case (s, columns) =>
-        assert(fileColumn(s"$moved/$s") == fileColumn(s"$root/$s"), s)
-        assert(spark.read.parquet(s"$moved/$s").columns.toSeq == columns, s)
+    Seq("t.bloomidx", "lake/_bloomidx").foreach { s =>
+      assert(fileColumn(s"$moved/$s") == fileColumn(s"$root/$s"), s)
+      assert(spark.read.parquet(s"$moved/$s").columns.toSeq ==
+        Seq("file", "bloom", "nkeys", "len"), s)
     }
     // a snapshot sidecar's key is the manifest's own relative path
     val rels = lake.readManifest(lake.latestVersion.get).get.files.map(_.rel).sorted
     assert(fileColumn(s"$root/lake/_bloomidx") == rels)
-    assert(fileColumn(s"$root/lake/_zonemap_v") == rels)
   }
 
   test("directory tier: refresh after a partition-scoped upsert equals a rebuild") {
@@ -120,7 +115,6 @@ class FileSidecarSpec extends AnyFunSuite {
     val lake = new SnapshotLake(spark, s"$dir/lake", "k")
     lake.overwrite(docs(4000).repartitionByRange(4, col("v")))
     BloomIndex.refreshSnapshot(lake, "k")
-    ZoneMapIndex.refreshSnapshot(lake, "v")
     // a call reads no data file when its input bytes are at most those
     // of a full read of its sidecar
     def work(name: String, sidecar: String)(call: => (DataFrame, Int)) = {
@@ -132,9 +126,7 @@ class FileSidecarSpec extends AnyFunSuite {
     val passes = Seq(
       work("lookup", s"$dir/t.bloomidx")(t.lookupKeys(Seq("doc-7"))),
       work("lookupSnapshot", BloomIndex.snapSidecar(lake.path))(
-        BloomIndex.lookupSnapshot(lake, "k", Seq("doc-7"))),
-      work("rangeLookupSnapshot", ZoneMapIndex.snapSidecar(lake.path, "v"))(
-        ZoneMapIndex.rangeLookupSnapshot(lake, "v", lit(3.0), lit(4.0))))
+        BloomIndex.lookupSnapshot(lake, "k", Seq("doc-7"))))
     assert(passes.forall(p => p._2 == 1 && p._3), passes)
   }
 }

@@ -15,7 +15,7 @@ class ScaleSmokeSpec extends AnyFunSuite {
     val phases = ScaleSmoke.run(spark, "/root/testdata/sf0.001", 2, out)
     val names = phases.map(_._1)
     assert(names == Seq("inflate-inputs", "ingest-bulk-90pct", "ingest-drop-10pct",
-      "zonemap-lake-cluster", "zonemap-build", "zonemap-range-scan", "zonemap-append-refresh",
+      "zonemap-lake-cluster", "zonemap-range-scan", "zonemap-append-stats",
       "dedup-index-build-90pct", "dedup-index-refresh-10pct", "dedup-candidate-pairs",
       "fuzzy-selfjoin-guarded", "fuzzy-indexed-probe",
       "sim-index-build-90pct", "sim-index-refresh-10pct", "sim-indexed-topk-500q",
@@ -33,6 +33,9 @@ class ScaleSmokeSpec extends AnyFunSuite {
       s"phase list drifted: $names")
     // the PCA drop phase lands an aggregate-sized segment (dim·(dim+3)/2)
     assert(phases.find(_._1 == "pca-moments-drop-10pct").get._3 == 64L * 67 / 2)
+    // the append's new manifest entries, and only those, carry price
+    // stats, and the range scan after it still prunes (-1 = a failed require)
+    assert(phases.find(_._1 == "zonemap-append-stats").get._3 > 0L)
     // 2x sf0.001 orders = 30k inflated rows, all ingested across the two drops
     assert(phases.find(_._1 == "inflate-inputs").get._3 == 3000L)
     assert(phases.find(_._1 == "ingest-drop-10pct").get._3 >= 2990L)
