@@ -26,8 +26,6 @@ object Entities {
       .when(norm.rlike(cifRe), lit("CIF"))
       .otherwise(lit("INVALID"))
 
-  def isValidId(norm: Column): Column = classifyId(norm) =!= "INVALID"
-
   /** Contracter-id shape repair (reference: fix_contracter_ids.py:74-83):
     * a list of single characters is re-joined into one id string; any
     * other array is kept element-wise stringified; scalars promote to

@@ -523,11 +523,6 @@ object Curation {
       .groupBy(col("domain")).agg(sum(col("n_tokens")).as("n_tokens"))
       .filter(col("n_tokens") =!= 0L)
 
-  /** The domains currently over `budget` — the curation cut list. */
-  def serveDomainsOverBudget(spark: org.apache.spark.sql.SparkSession,
-                             path: String, budget: Long): DataFrame =
-    serveDomainTokens(spark, path).filter(col("n_tokens") > budget)
-
   /** Fold every landed domain-token segment into one (the
     * [[compactDsir]] pattern): totals are summable, so the served table
     * is unchanged, the segment count resets to 1, and net-0 domains

@@ -548,10 +548,6 @@ object Dedup {
   def simhashBits(text: Column): Column =
     graft.functions.TextHashes.simhash_bits(tokens(text))
 
-  /** Hamming distance between two equal-length bit-strings. */
-  def hammingBits(a: Column, b: Column): Column =
-    size(filter(zip_with(split(a, ""), split(b, ""), (x, y) => x =!= y), d => d))
-
   /** SimHash near-duplicate candidates: split the 64-bit signature into
     * `chunks` contiguous blocks; by pigeonhole, any pair within Hamming
     * distance < chunks shares at least one identical block — so the

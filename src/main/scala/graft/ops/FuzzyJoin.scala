@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,8 +52,9 @@ import org.apache.spark.sql.functions._
   * — shuffle cost follows per-key pair counts (Σ |A_k|·|B_k|), i.e.
   * chunk SELECTIVITY, with the guard capping the A-side population of
   * any served key. The probe fan-out is (2d+1)²·(d+1+extra) rows per
-  * string — constant in corpus size; the guard adds one aggregate and
-  * one per-string window over the (strings × arity) chunk frame.
+  * string — constant in corpus size. A two-action [[prePass]] fixes the
+  * plan; the guard adds a broadcast join and one per-string window over
+  * the chunk frame, and only when some key is hot.
   */
 object FuzzyJoin {
 
@@ -68,12 +69,6 @@ object FuzzyJoin {
     val starts = lens.scanLeft(1)(_ + _).init
     starts.zip(lens).zipWithIndex.map { case ((s, l), i) => (i, s, l) }
   }
-
-  /** The minimum-arity chunking (maxDist+1 pieces) — kept for spec
-    * parity with the published PassJoin scheme.
-    */
-  private[ops] def chunkSpecs(len: Int, d: Int): Seq[(Int, Int, Int)] =
-    chunkSpecsN(len, d + 1)
 
   private[ops] def prep(df: DataFrame, idCol: String, strCol: String): DataFrame =
     df.select(col(idCol).as("__id"), col(strCol).as("__s"))
@@ -90,15 +85,71 @@ object FuzzyJoin {
   private def arity(la: Int, d: Int, extra: Int): Int =
     math.max(d + 1, math.min(d + 1 + extra, la))
 
-  /** The distinct chunkable lengths of a prepared side — the driver-side
-    * seed for both chunk and window spec frames (one row per distinct
-    * string LENGTH: bounded by the longest string, not the corpus).
+  /** Pre-pass action 1: a prepared side's length histogram (length →
+    * strings, bounded by the longest string). It gives the chunkable
+    * lengths and |side|.
     */
-  private[ops] def chunkLens(a: DataFrame, d: Int): Seq[Int] = {
+  private[ops] def lengthHistogram(s: DataFrame): Map[Int, Long] = {
+    val spark = s.sparkSession
+    import spark.implicits._
+    s.groupBy(col("__l")).count().as[(Int, Long)].collect().toMap
+  }
+
+  /** The chunkable lengths of a prepared side — the driver-side seed
+    * for both chunk and window spec frames.
+    */
+  private[ops] def chunkLens(a: DataFrame, d: Int): Seq[Int] =
+    lengthHistogram(a).keys.filter(_ >= d + 1).toSeq.sorted
+
+  /** A hot chunk key (length, chunk slot, content) and its population;
+    * the fields are the persisted index's `hot` columns.
+    */
+  private[ops] final case class HotKey(la: Int, i: Int, key: String, pop: Long)
+
+  /** The chunked side's plan inputs: chunkable lengths, size, hot keys
+    * and the unguarded Σ pop² (it bounds the guarded one from above).
+    */
+  private[ops] final case class PrePass(lens: Seq[Int], n: Long, hot: Seq[HotKey],
+                                        vol: Long)
+
+  /** The unguarded chunk emissions: (__aid, __la, __i, __key) rows. */
+  private def chunkKeys(a: DataFrame, aLens: Seq[Int], d: Int, extra: Int): DataFrame = {
     val spark = a.sparkSession
     import spark.implicits._
+    val specA = aLens.flatMap(la =>
+      chunkSpecsN(la, arity(la, d, extra)).map { case (i, st, cl) => (la, i, st, cl) })
+      .toDF("__la", "__i", "__st", "__cl")
     a.filter(col("__l") >= d + 1)
-      .select(col("__l")).distinct().as[Int].collect().sorted.toSeq
+      .join(broadcast(specA), col("__l") === col("__la"))
+      .select(col("__id").as("__aid"), col("__la"), col("__i"),
+        expr("substring(__s, __st, __cl)").as("__key"))
+  }
+
+  /** One aggregate over chunk emissions: Σ pop² over their key
+    * populations and the keys with pop > cap (none when cap ≤ 0) — at
+    * most |keys|/cap rows reach the driver.
+    */
+  private def keyStats(keys: DataFrame, cap: Long): (Long, Seq[HotKey]) = {
+    val pops = keys.groupBy(col("__la"), col("__i"), col("__key"))
+      .agg(count(lit(1)).as("__pop"))
+    val r = pops.agg(sum(col("__pop") * col("__pop")),
+      collect_list(when(lit(cap > 0L) && col("__pop") > cap, struct(col("__la"), col("__i"), col("__key"), col("__pop")))))
+      .head()
+    val hot = r.getSeq[Row](1)
+      .map(h => HotKey(h.getInt(0), h.getInt(1), h.getString(2), h.getLong(3)))
+      .sortBy(h => (h.la, h.i, h.key))
+    (if (r.isNullAt(0)) 0L else r.getLong(0), hot)
+  }
+
+  /** The pre-pass every fuzzy entry point plans from: given the length
+    * histogram (action 1), one aggregate over the UNGUARDED chunk keys
+    * (action 2).
+    */
+  private[ops] def prePass(a: DataFrame, hist: Map[Int, Long], d: Int, extra: Int,
+                           hotChunkCap: Long): PrePass = {
+    val lens = hist.keys.filter(_ >= d + 1).toSeq.sorted
+    val (vol, hot) = keyStats(chunkKeys(a, lens, d, extra), hotChunkCap)
+    PrePass(lens, hist.values.sum, hot, vol)
   }
 
   /** Guarded chunk emissions of the chunked side: (__aid, __la, __i,
@@ -110,41 +161,27 @@ object FuzzyJoin {
     * budget derives from the ROW's length: a string too short for the
     * full d+1+extra arity has less slack and may drop fewer.
     *
-    * `pinnedHot = None` computes the hot list from THIS corpus's key
-    * populations (pop > cap); a persisted index passes its build-time
-    * list instead so refresh emissions stay comparable across drops
-    * (the pinned-codebook posture — a key that turns hot only after
-    * build keeps serving pairs until a rebuild re-tunes the list, a
-    * performance drift, never a correctness one).
+    * The hot list is driver-side: the pre-pass's, or the list a
+    * persisted index pinned at build so refresh emissions stay
+    * comparable across drops (a key that turns hot only after build
+    * keeps serving pairs until a rebuild — a performance drift, never a
+    * correctness one). `pinnedHot = None` measures this corpus's own
+    * list. An empty list returns the plain emissions: no join, no window.
     */
   private[ops] def chunkKeysGuarded(a: DataFrame, aLens: Seq[Int], d: Int,
                                     extra: Int, hotChunkCap: Long,
-                                    pinnedHot: Option[DataFrame]): (DataFrame, DataFrame) = {
+                                    pinnedHot: Option[Seq[HotKey]]): (DataFrame, DataFrame) = {
     val spark = a.sparkSession
     import spark.implicits._
-    val specA = aLens.flatMap(la =>
-      chunkSpecsN(la, arity(la, d, extra)).map { case (i, st, cl) => (la, i, st, cl) })
-      .toDF("__la", "__i", "__st", "__cl")
-    val aKeysAll = a.filter(col("__l") >= d + 1)
-      .join(broadcast(specA), col("__l") === col("__la"))
-      .select(col("__id").as("__aid"), col("__la"), col("__i"),
-        expr("substring(__s, __st, __cl)").as("__key"))
-    val emptyHot = Seq.empty[(Int, Int, String, Long)]
-      .toDF("__la", "__i", "__key", "__pop")
-    if (hotChunkCap <= 0L) return (aKeysAll, emptyHot) // guard disabled
-    // the hot list carries each key's POPULATION so a string whose hot
-    // chunks exceed its droppable budget sheds the hottest ones first
-    // (the per-key pair bound the guard exists for); a pinned list from
-    // an older index without populations falls back to index order
-    val hotRaw = pinnedHot.getOrElse(
-      aKeysAll.groupBy(col("__la"), col("__i"), col("__key"))
-        .agg(count(lit(1)).as("__pop"))
-        .filter(col("__pop") > hotChunkCap))
-    val hot =
-      if (hotRaw.columns.contains("__pop")) hotRaw.select(
-        col("__la"), col("__i"), col("__key"), col("__pop").cast("long"))
-      else hotRaw.select(col("__la"), col("__i"), col("__key"),
-        lit(0L).as("__pop"))
+    val aKeysAll = chunkKeys(a, aLens, d, extra)
+    val hotList =
+      if (hotChunkCap <= 0L) Nil // guard disabled
+      else pinnedHot.getOrElse(keyStats(aKeysAll, hotChunkCap)._2)
+    // each key carries its POPULATION so a string over its droppable
+    // budget sheds the hottest first (the per-key pair bound); an older
+    // index's list without populations carries 0: index order
+    val hot = hotList.toDF("__la", "__i", "__key", "__pop")
+    if (hotList.isEmpty) return (aKeysAll, hot)
     // hot keys outrank non-hot under the desc flag order, then the most
     // populated hot key ranks first, so rank ≤ budget drops exactly the
     // string's HOTTEST keys, up to the budget
@@ -153,7 +190,8 @@ object FuzzyJoin {
     val droppable = greatest(lit(0),
       least(lit(extra), col("__la") - lit(d + 1)))
     val aKeys = aKeysAll
-      .join(hot.withColumn("__ishot", lit(true)), Seq("__la", "__i", "__key"), "left_outer")
+      .join(broadcast(hot.withColumn("__ishot", lit(true))), Seq("__la", "__i", "__key"),
+        "left_outer")
       .withColumn("__ishot", coalesce(col("__ishot"), lit(false)))
       .withColumn("__pop", coalesce(col("__pop"), lit(0L)))
       .withColumn("__hotrk", row_number().over(wHot))
@@ -218,13 +256,12 @@ object FuzzyJoin {
   // every key also embeds the string's distinctive spans.
   //
   // The escalation is GATED ON MEASURED VOLUME, never assumed (the
-  // round-14 lesson that refinements can LOSE selectivity): the
-  // candidate pass first builds the guarded singleton keys, measures
-  // Σ pop² over the served keys (one vocab-sized aggregate on top of
-  // the hot-list pass), and only switches to complement keys when that
-  // exceeds candBudgetPerString · |A|. Healthy corpora never pay the
-  // (C(n1,d) · combos) probe fan-out; a templated corpus trades it for
-  // populations split by content the singletons never saw.
+  // round-14 lesson that refinements can LOSE selectivity): the pass
+  // switches to complement keys only when Σ pop² over the SERVED
+  // singleton keys exceeds candBudgetPerString · |A| ([[escalates]]).
+  // Healthy corpora never pay the (C(n1,d) · combos) probe fan-out; a
+  // templated corpus trades it for populations split by content the
+  // singletons never saw.
   // ------------------------------------------------------------------
 
   /** The excluded d-subsets of sub-chunk slots, in a fixed order (the
@@ -281,6 +318,21 @@ object FuzzyJoin {
     * filters are lossless).
     */
   private[ops] val EscFanoutCap = 200000L
+
+  /** The complement keys' sub-chunk count. */
+  private[ops] def escN1(d: Int, extra: Int): Int = d + 2 + math.max(1, extra)
+
+  /** The volume gate of [[candidates]] and [[FuzzyJoinIndex]]'s build:
+    * do the served keys `guarded` carry Σ pop² over budget·|A|? After the
+    * free fan-out cap, the pre-pass's unguarded bound decides with no job
+    * unless keys are hot and the bound is over budget (templated corpora).
+    */
+  private[ops] def escalates(pre: PrePass, guarded: DataFrame, d: Int, extra: Int,
+                             candBudgetPerString: Long): Boolean = {
+    val limit = candBudgetPerString * math.max(1L, pre.n)
+    candBudgetPerString > 0L && escFanoutOk(escN1(d, extra), d) && pre.vol > limit &&
+      (pre.hot.isEmpty || keyStats(guarded, 0L)._1 > limit)
+  }
 
   private[graft] def escFanoutOk(n1: Int, d: Int): Boolean = {
     // C(n1, d) with overflow-free early exit against the cap
@@ -381,36 +433,35 @@ object FuzzyJoin {
     * levenshtein. Short `a` strings (too short to chunk) pair against
     * the bounded short bucket of `b`.
     *
-    * `candBudgetPerString > 0` arms the volume gate: if the guarded
-    * singleton keys' measured Σ pop² exceeds budget·|A|, lengths ≥
+    * The plan, the guard's hot list included, comes from `a`'s
+    * [[prePass]].
+    *
+    * `candBudgetPerString > 0` arms the volume gate ([[escalates]]): if
+    * the guarded singleton keys' Σ pop² exceeds budget·|A|, lengths ≥
     * d+2+extra switch to complement keys (see the escalation note);
     * shorter lengths keep singletons (too short to sub-chunk), and the
     * short bucket is untouched. 0 keeps the classic pass unconditionally.
     */
   private[graft] def candidates(a: DataFrame, b: DataFrame, d: Int,
                                 extra: Int, hotChunkCap: Long,
-                                candBudgetPerString: Long = 0L): DataFrame = {
-    val aLens = chunkLens(a, d)
-    val (aKeys, _) = chunkKeysGuarded(a, aLens, d, extra, hotChunkCap, None)
+                                candBudgetPerString: Long = 0L): DataFrame =
+    plannedCandidates(a, lengthHistogram(a), b, d, extra, hotChunkCap, candBudgetPerString)
+
+  /** [[candidates]] given `a`'s length histogram. */
+  private def plannedCandidates(a: DataFrame, aHist: Map[Int, Long], b: DataFrame,
+                                d: Int, extra: Int, hotChunkCap: Long,
+                                candBudgetPerString: Long): DataFrame = {
+    val pre = prePass(a, aHist, d, extra, hotChunkCap)
+    val (aKeys, _) = chunkKeysGuarded(a, pre.lens, d, extra, hotChunkCap, Some(pre.hot))
     def classic(lens: Seq[Int], keys: DataFrame): DataFrame =
       keys.join(windowKeys(b, lens, d, extra), Seq("__la", "__i", "__key"))
         .select(col("__aid"), col("__bid"))
-    // fan-out cap first (free): escalation at extreme (d, extra) would
-    // materialize C(n1,d)·combos driver rows — stay classic there
-    val escalate = candBudgetPerString > 0L &&
-      escFanoutOk(d + 2 + math.max(1, extra), d) && {
-      val r = aKeys.groupBy(col("__la"), col("__i"), col("__key"))
-        .agg(count(lit(1)).as("__pop"))
-        .agg(sum(col("__pop") * col("__pop"))).head()
-      val vol = if (r.isNullAt(0)) 0L else r.getLong(0)
-      vol > candBudgetPerString * math.max(1L, a.count())
-    }
     val candLong =
-      if (!escalate) classic(aLens, aKeys)
+      if (!escalates(pre, aKeys, d, extra, candBudgetPerString)) classic(pre.lens, aKeys)
       else {
-        val n1 = d + 2 + math.max(1, extra)
-        val escLens = aLens.filter(_ >= n1)
-        val keepLens = aLens.filter(_ < n1)
+        val n1 = escN1(d, extra)
+        val escLens = pre.lens.filter(_ >= n1)
+        val keepLens = pre.lens.filter(_ < n1)
         val kept =
           if (keepLens.isEmpty) None
           else Some(classic(keepLens,
@@ -467,30 +518,22 @@ object FuzzyJoin {
     require(maxDist >= 1 && maxDist <= 8, s"maxDist must be in [1, 8]: $maxDist")
     require(extraChunks >= 0 && extraChunks <= 8,
       s"extraChunks must be in [0, 8]: $extraChunks")
-    // the two side preps (checkpoint jobs) and the two direction counts
-    // are pairwise independent — overlap them (guide §2.6)
-    val (p, r) = graft.core.Overlap.both(
-      prep(probes, probeId, probeStr), prep(reference, refId, refStr))
-    // Direction choice (optimization round 19, guide §2.3 "shuffle
-    // fewer bytes"): candidates(a, b) charges the CHUNK multiplier
-    // (~d+1+extra rows/string) to `a` and the much larger WINDOW/drift
-    // multiplier ((2d+1)·Σarity classic, C(n1,d)·combos escalated) to
-    // `b`. The pigeonhole is direction-symmetric (one side chunked
-    // suffices, and the exact levenshtein verify decides membership
-    // either way — only the CANDIDATE set, never the result, depends
-    // on direction), so the BIG side should always take the small
-    // multiplier. The classic dirty-batch-vs-master lookup had this
-    // backwards: it chunked the (small) probe batch and fanned the
-    // master out ~15-25×. Counts are two jobs over the already-
-    // checkpointed prepped frames — cheap at every scale.
-    val (pn, rn) = graft.core.Overlap.both(p.count(), r.count())
-    val probesAreBig = pn >= rn
+    // each side's prep (a checkpoint job) and its length histogram are
+    // independent of the other side's — overlap the two chains (guide §2.6)
+    val ((p, pHist), (r, rHist)) = graft.core.Overlap.both(
+      { val s = prep(probes, probeId, probeStr); (s, lengthHistogram(s)) },
+      { val s = prep(reference, refId, refStr); (s, lengthHistogram(s)) })
+    // Direction (guide §2.3 "shuffle fewer bytes"): candidates(a, b)
+    // charges the CHUNK multiplier (~d+1+extra rows/string) to `a` and
+    // the much larger WINDOW/drift multiplier to `b`. The pigeonhole is
+    // direction-symmetric and the exact verify decides membership, so
+    // the BIG side (by its histogram's total) takes the small multiplier.
     val cand =
-      if (probesAreBig)
-        candidates(p, r, maxDist, extraChunks, hotChunkCap, candBudgetPerString)
+      if (pHist.values.sum >= rHist.values.sum)
+        plannedCandidates(p, pHist, r, maxDist, extraChunks, hotChunkCap, candBudgetPerString)
           .select(col("__aid").as("probe_id"), col("__bid").as("ref_id"))
       else
-        candidates(r, p, maxDist, extraChunks, hotChunkCap, candBudgetPerString)
+        plannedCandidates(r, rHist, p, maxDist, extraChunks, hotChunkCap, candBudgetPerString)
           .select(col("__bid").as("probe_id"), col("__aid").as("ref_id"))
     cand
       .distinct()

@@ -92,10 +92,10 @@ object FuzzyJoinIndex {
     * so probe joins can never cross schemes).
     */
   private def schemeKeys(prepped: DataFrame, aLens: Seq[Int], meta: Meta,
-                         pinnedHot: Option[DataFrame]): DataFrame = {
+                         pinnedHot: Seq[FuzzyJoin.HotKey]): DataFrame = {
     val (classic, _) = FuzzyJoin.chunkKeysGuarded(prepped,
       if (meta.keyScheme == "complement") aLens.filter(_ < meta.n1) else aLens,
-      meta.maxDist, meta.extraChunks, meta.hotChunkCap, pinnedHot)
+      meta.maxDist, meta.extraChunks, meta.hotChunkCap, Some(pinnedHot))
     if (meta.keyScheme != "complement") classic
     else classic.unionByName(
       FuzzyJoin.escAKeys(prepped, meta.maxDist, meta.n1, aLens.filter(_ >= meta.n1))
@@ -108,7 +108,9 @@ object FuzzyJoinIndex {
     * arms the volume gate: when the guarded singleton keys' measured
     * Σ pop² exceeds budget·|master| (and the escalation fan-out cap
     * allows), the index is BUILT under complement keys — the pinned
-    * sibling of [[FuzzyJoin.candidates]]'s recompute-time gate.
+    * sibling of [[FuzzyJoin.candidates]]'s recompute-time gate. The plan
+    * comes from the same pre-pass ([[FuzzyJoin.prePass]]), and the
+    * `hot` and `lens` tables land from its driver-side rows.
     */
   def build(reference: DataFrame, refId: String, refStr: String, path: String,
             maxDist: Int, extraChunks: Int = 1, hotChunkCap: Long = 4096L,
@@ -119,37 +121,25 @@ object FuzzyJoinIndex {
     val spark = reference.sparkSession
     import spark.implicits._
     val r = FuzzyJoin.prep(reference, refId, refStr)
-    val aLens = FuzzyJoin.chunkLens(r, maxDist)
-    val (classicKeys, hot) = FuzzyJoin.chunkKeysGuarded(
-      r, aLens, maxDist, extraChunks, hotChunkCap, None)
-    val n1 = maxDist + 2 + math.max(1, extraChunks)
-    val escalate = candBudgetPerString > 0L &&
-      FuzzyJoin.escFanoutOk(n1, maxDist) && {
-        val v = classicKeys.groupBy(col("__la"), col("__i"), col("__key"))
-          .agg(count(lit(1)).as("__pop"))
-          .agg(sum(col("__pop") * col("__pop"))).head()
-        val vol = if (v.isNullAt(0)) 0L else v.getLong(0)
-        vol > candBudgetPerString * math.max(1L, r.count())
-      }
-    val meta = Meta(maxDist, extraChunks, hotChunkCap,
-      if (escalate) "complement" else "classic", if (escalate) n1 else 0)
-    val keys =
-      if (!escalate) classicKeys
-      else classicKeys.filter(col("__la") < n1).unionByName(
-        FuzzyJoin.escAKeys(r, maxDist, n1, aLens.filter(_ >= n1))
-          .select(col("__aid"), col("__la"), col("__kid").as("__i"), col("__key")))
+    val pre = FuzzyJoin.prePass(r, FuzzyJoin.lengthHistogram(r), maxDist, extraChunks,
+      hotChunkCap)
+    val (classicKeys, _) = FuzzyJoin.chunkKeysGuarded(
+      r, pre.lens, maxDist, extraChunks, hotChunkCap, Some(pre.hot))
+    val escalate =
+      FuzzyJoin.escalates(pre, classicKeys, maxDist, extraChunks, candBudgetPerString)
+    val meta = Meta(maxDist, extraChunks, hotChunkCap, if (escalate) "complement" else "classic",
+      if (escalate) FuzzyJoin.escN1(maxDist, extraChunks) else 0)
     graft.lake.Staged.landMany(spark, path, Seq(
       "strings" -> stringsOut(r),
-      "keys" -> keysOut(keys),
-      "hot" -> hot.select(col("__la").as("la"), col("__i").as("i"),
-        col("__key").as("key"), col("__pop").as("pop")),
+      "keys" -> keysOut(schemeKeys(r, pre.lens, meta, pre.hot)),
+      "hot" -> pre.hot.toDF().coalesce(1),
       // the distinct chunkable lengths, persisted so PROBES never scan
       // the master just to learn them (at 100 TB the strings table is
       // corpus-sized; the length list is bounded by the longest string)
-      "lens" -> aLens.toDF("l").coalesce(1),
+      "lens" -> pre.lens.toDF("l").coalesce(1),
       "meta" -> Seq((maxDist, extraChunks, hotChunkCap, meta.keyScheme, meta.n1))
         .toDF("max_dist", "extra_chunks", "hot_chunk_cap", "key_scheme", "n1")))
-    r.count() // prep checkpointed it: no re-read of the landed table
+    pre.n
   }
 
   private def stringsOut(prepped: DataFrame): DataFrame =
@@ -170,26 +160,22 @@ object FuzzyJoinIndex {
                          path: String): (ChurnSplit.Split, DataFrame, DataFrame,
                                          DataFrame, DataFrame, Meta) = {
     val spark = incoming.sparkSession
-    // the meta read and the incoming-side prep (a checkpoint job) are
-    // independent tiny jobs — overlap them (guide §2.6)
-    val (meta, cur) = graft.core.Overlap.both(
-      readMeta(spark, path), FuzzyJoin.prep(incoming, refId, refStr))
+    import spark.implicits._
+    // the meta and pinned hot-list reads (at most |master|·arity/cap
+    // rows) and the incoming-side prep are independent — overlap them
+    val ((meta, pinnedHot), cur) = graft.core.Overlap.both({
+      val hotRaw = spark.read.parquet(path + "/hot")
+      // pre-pop indexes lack `pop`: a zero population drops in index order
+      val hot = if (hotRaw.columns.contains("pop")) hotRaw else hotRaw.withColumn("pop", lit(0L))
+      (readMeta(spark, path), hot.as[FuzzyJoin.HotKey].collect().toSeq)
+    }, FuzzyJoin.prep(incoming, refId, refStr))
     val (oldStrings, oldKeys) = tables(spark, path)
-    val hotRaw = spark.read.parquet(path + "/hot")
-    // pre-pop indexes lack the `pop` column: fall back to index-order
-    // drops (chunkKeysGuarded substitutes a zero population)
-    val pinnedHot =
-      if (hotRaw.columns.contains("pop"))
-        hotRaw.select(col("la").as("__la"), col("i").as("__i"),
-          col("key").as("__key"), col("pop").as("__pop"))
-      else hotRaw.select(col("la").as("__la"), col("i").as("__i"),
-        col("key").as("__key"))
     val s = ChurnSplit.split(oldStrings, "__id", "__s", cur, "__id", cur("__s"))
     val fresh = s.fresh.localCheckpoint(true)
     // fresh emissions follow the PINNED key scheme — a complement-built
     // index never mixes singleton rows into its escalated lengths
     val freshKeys = schemeKeys(fresh, FuzzyJoin.chunkLens(fresh, meta.maxDist),
-      meta, Some(pinnedHot))
+      meta, pinnedHot)
     (s, oldKeys, cur, fresh, freshKeys, meta)
   }
 
@@ -290,8 +276,7 @@ object FuzzyJoinIndex {
         (meta, ref,
           if (lensP.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lensP))
             spark.read.parquet(path + "/lens").as[Int].collect().sorted.toSeq
-          else ref._1.filter(col("__l") >= meta.maxDist + 1)
-            .select(col("__l")).distinct().as[Int].collect().sorted.toSeq)
+          else FuzzyJoin.chunkLens(ref._1, meta.maxDist))
       })
     val d = meta.maxDist
     // probe emissions mirror the pinned key scheme: singleton windows

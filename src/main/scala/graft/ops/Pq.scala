@@ -27,7 +27,6 @@ final case class PqModel(dsub: Int,
                          mu: Map[Long, Array[Float]] = Map.empty)
     extends Serializable {
   def mSub: Int = codebooks.length
-  def bytesPerVector: Int = codebooks.length
 }
 
 /** Product-quantization ANN (Jégou, Douze & Schmid, "Product

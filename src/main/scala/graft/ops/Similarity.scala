@@ -198,21 +198,6 @@ object Similarity {
       .select(col("qid"), col("qv"), col("cid"), col("cv")), k)
   }
 
-  /** Embedding-cosine near-duplicate pairs: all (a<b) pairs in the same
-    * hyperplane bucket with cosine above `threshold`. The bucket join is
-    * the scale lever — only same-cell pairs are ever scored.
-    */
-  def cosineNearDup(corpus: DataFrame, idCol: String, vecCol: String,
-                    threshold: Double, nBits: Int, dim: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
-      hyperplaneBucket(col(vecCol), nBits, dim).as("bucket"))
-      .withColumn("__n", normExact(col("v")))
-    c.as("x").join(c.as("y"), col("x.bucket") === col("y.bucket") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("a"), col("y.id").as("b"),
-        cosineWithNorms(col("x.v"), col("y.v"), col("x.__n"), col("y.__n")).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
   /** IVF centroid seeds: the embeddings of the `nList` lowest ids —
     * a deterministic, engine-reproducible coarse-quantizer codebook (a
     * production deployment swaps in sampled k-means; every downstream
@@ -1134,12 +1119,4 @@ object Similarity {
       explode(imiProbeCells(col(vecCol), imi, nProbe)).as("cell"))
     exactTopKTail(q.join(c, Seq("cell")).filter(col("qid") =!= col("cid")), k)
   }
-
-  /** SemDeDup under product cells — [[semanticDedupCells]] with the
-    * IMI assignment: corpus-scaled nCells at O(k·dim) task state.
-    */
-  def semanticDedupImi(corpus: DataFrame, idCol: String, vecCol: String,
-                       imi: IvfImi, threshold: BigDecimal): DataFrame =
-    semanticDedupCells(corpus, idCol, vecCol,
-      imiCell(col(vecCol), imi), threshold, materializeAssign = true)
 }

@@ -169,4 +169,65 @@ class FuzzyGuardSpec extends AnyFunSuite {
     assert(keys.filter(col("id") === 0L && col("key") === "AAAA").count() == 1L,
       "the re-chunked string still serves its lighter hot key")
   }
+
+  test("driver-side hot list: same hot set and served keys as the corpus-computed guard") {
+    val p = FuzzyJoin.prep(df, "id", "s")
+    val pre = FuzzyJoin.prePass(p, FuzzyJoin.lengthHistogram(p), d = 1, extra = 1,
+      hotChunkCap = 32L)
+    assert(pre.lens == Seq(12) && pre.n == 200L, s"fixture: $pre")
+    // the guard disabled (cap 0) gives the plain emissions; the corpus's
+    // hot keys are their populations over the cap
+    val (plain, _) = FuzzyJoin.chunkKeysGuarded(p, pre.lens, 1, 1, 0L, None)
+    val pops = plain.groupBy(col("__la"), col("__i"), col("__key")).count()
+      .as[(Int, Int, String, Long)].collect()
+    val corpusHot = pops.filter(_._4 > 32L).map { case (la, i, k, n) =>
+      FuzzyJoin.HotKey(la, i, k, n) }.toSet
+    assert(pre.hot.toSet == corpusHot && corpusHot.size == 2, s"${pre.hot} vs $corpusHot")
+    assert(pre.vol == pops.map(r => r._4 * r._4).sum, "Σ pop² of the unguarded keys")
+    def rows(k: org.apache.spark.sql.DataFrame) =
+      k.as[(Long, Int, Int, String)].collect().toSet
+    val (fromList, hotDf) = FuzzyJoin.chunkKeysGuarded(p, pre.lens, 1, 1, 32L, Some(pre.hot))
+    val (fromCorpus, _) = FuzzyJoin.chunkKeysGuarded(p, pre.lens, 1, 1, 32L, None)
+    assert(hotDf.select("__i", "__key").as[(Int, String)].collect().toSet ==
+      Set((0, "AAAA"), (1, "BBBB")))
+    // every string sheds BBBB, its hottest hot key, and nothing else
+    val want = rows(plain.filter(!(col("__i") === 1 && col("__key") === "BBBB")))
+    assert(rows(fromList) == want, "driver-side list serves the guarded keys")
+    assert(rows(fromCorpus) == want, "pinnedHot = None measures the same list")
+    // an empty list is the plain emissions, with no guard in the plan
+    val (unhot, _) = FuzzyJoin.chunkKeysGuarded(p, pre.lens, 1, 1, 32L, Some(Nil))
+    assert(!unhot.queryExecution.analyzed.toString.contains("row_number"))
+    assert(rows(unhot) == rows(plain))
+  }
+
+  test("unguarded Σ pop² within budget decides no escalation without a third action") {
+    val sc = spark.sparkContext
+    val p = FuzzyJoin.prep(df, "id", "s")
+    val pre = FuzzyJoin.prePass(p, FuzzyJoin.lengthHistogram(p), 1, 1, 32L)
+    val (guarded, _) = FuzzyJoin.chunkKeysGuarded(p, pre.lens, 1, 1, 32L, Some(pre.hot))
+    assert(pre.hot.nonEmpty, "fixture: the bound alone could not decide an over-budget case")
+    // the smallest budget whose limit (budget·|A|) the unguarded bound meets
+    val atBound = (pre.vol + pre.n - 1) / pre.n
+    val (within, wWithin) = graft.core.Work.measure(sc, "gate-within")(
+      FuzzyJoin.escalates(pre, guarded, 1, 1, atBound))
+    assert(!within && wWithin.jobs == 0, s"decided from the bound: ${wWithin.jobs} jobs")
+    // one under it, the hot list forces the guarded measurement; the
+    // served keys (BBBB shed) are then within budget after all
+    val (over, wOver) = graft.core.Work.measure(sc, "gate-over")(
+      FuzzyJoin.escalates(pre, guarded, 1, 1, atBound - 1))
+    assert(!over && wOver.jobs > 0, s"measured the guarded keys: ${wOver.jobs} jobs")
+    assert(FuzzyJoin.escalates(pre, guarded, 1, 1, 1L), "budget 1 escalates")
+  }
+
+  test("planning cost: the self-join's jobs before its final action") {
+    val sc = spark.sparkContext
+    // default cap 4096: no key is hot, so the bound decides the gate
+    val (_, w) = graft.core.Work.measure(sc, "fuzzy-plan")(
+      FuzzyJoin.editDistanceSelfJoin(df, "id", "s", 1))
+    // prep's localCheckpoint: 1 job. The length histogram: 2 (its
+    // shuffle, its collect). The unguarded key stats: 4 (the chunk spec
+    // frame's broadcast, the key-population shuffle, the global
+    // aggregate's shuffle, its head). A new planning action fails here.
+    assert(w.jobs == 7, s"planning jobs: ${w.jobs}")
+  }
 }
